@@ -2,22 +2,25 @@
 row per write.
 
 Reference: /root/reference/jorvik/data_lineage/observer.py:22-105. On every
-``(df, output_path)`` write event: capture the physical plan, collect leaf
-scan nodes, classify their sources, and append
-``{output_path, data_sources: array<string>, transform_code_file,
+``(df, output_path)`` write event: collect the DataFrame's data sources and
+append ``{output_path, data_sources: array<string>, transform_code_file,
 observation_ts}`` to the lineage log table.
 
-Deliberate deviation (quirk Q11, SURVEY.md Appendix A): the explain
-watchdog uses a daemon worker thread + timed join instead of SIGALRM, so
-lineage capture works off the main thread and on any OS, and a hung
-explain cannot block interpreter shutdown. Log
-writes go through a non-lineage-tracking storage (recursion guard, quirk
-Q10 kept), in Delta when available, else parquet.
+Deliberate deviation (quirk Q11, SURVEY.md Appendix A): the reference
+prints ``df.explain('formatted')``, parses the text back into a tree under
+a SIGALRM timeout and classifies the leaf scans. Here the sources come
+from a structured walk of the leaves of the Dataset's analyzed plan and of
+every subquery plan inside it. The analyzed plan exists as soon as the
+Dataset does, so reading it runs no analysis, optimization or planning and
+needs no watchdog; the reference's ``timeout`` argument is gone. Sources
+the optimizer would prune (``limit(0)``) and scalar-subquery sources are
+still recorded. Log writes go through a non-lineage-tracking storage
+(recursion guard, quirk Q10 kept), in Delta when available, else parquet.
 """
 
 from __future__ import annotations
 
-import threading
+import re
 import warnings
 from datetime import datetime
 from typing import List
@@ -31,7 +34,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from jorvik_spark.data_lineage import execution_plan, node_handler
 from jorvik_spark.utils import paths
 
 LINEAGE_SCHEMA = StructType(
@@ -43,64 +45,65 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
+# In-memory leaves, named by the physical scan they plan into.
+_MEMORY_SCANS = {
+    "LogicalRDD": "Scan ExistingRDD",
+    "LocalRelation": "LocalTableScan",
+}
+# A JDBC ``query`` option is wrapped as "(<query>) SPARK_GEN_SUBQ_<n>".
+_JDBC_GEN_SUBQ = re.compile(r"^\((.*)\) SPARK_GEN_SUBQ_\d+$", re.DOTALL)
+
+
+def _scala_list(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _file_source(root_paths: list) -> str:
+    """One root path as is; for several (an explicit file list, or
+    partition directories) the directory holding the first, with any
+    partition segment stripped:
+    ``/lake/raw/bookings/date_part=2024-07-02/x.avro`` → ``/lake/raw/bookings``.
+    """
+    if len(root_paths) == 1:
+        return root_paths[0]
+    prefix = root_paths[0].split("=")[0]
+    return prefix[: prefix.rfind("/")]
+
+
+def _leaf_source(leaf) -> str:
+    """Classify one leaf of a logical plan (reference
+    node_handler.py:49-69, on plan objects instead of explain text)."""
+    kind = leaf.getClass().getSimpleName()
+    if kind == "LogicalRelation":
+        relation = leaf.relation()
+        relation_kind = relation.getClass().getSimpleName()
+        if relation_kind == "HadoopFsRelation":
+            roots = _scala_list(relation.location().rootPaths())
+            return _file_source([p.toString() for p in roots])
+        if relation_kind == "JDBCRelation":
+            table = relation.jdbcOptions().tableOrQuery()
+            return "jdbc_scan: " + _JDBC_GEN_SUBQ.sub(r"\1", table)
+    if kind in _MEMORY_SCANS:
+        return f"memory_scan: {_MEMORY_SCANS[kind]}"
+    return f"unknown_scan: {leaf.nodeName()}"
+
 
 class DataLineageLogger:
     """Observer appending lineage rows to ``lineage_log_path``."""
 
-    def __init__(self, lineage_log_path: str, timeout: int = 300):
+    def __init__(self, lineage_log_path: str):
         self.lineage_log_path = lineage_log_path
-        self.timeout = timeout
-
-    def _explain_dataframe(self, df: DataFrame) -> str:
-        """Capture the plan with a thread-based watchdog (Q11 fix).
-
-        A plain daemon thread, not a ThreadPoolExecutor: executor workers
-        are non-daemon, so an abandoned hung explain would block
-        interpreter shutdown; a daemon thread lets the process exit. On
-        timeout the hung thread is deliberately abandoned — the write
-        path must not stall behind a stuck explain.
-        """
-        box: list = []
-
-        def run() -> None:
-            try:
-                box.append(("ok", execution_plan.capture_explain(df)))
-            except BaseException as exc:  # re-raised on the caller thread
-                box.append(("err", exc))
-
-        worker = threading.Thread(
-            target=run, daemon=True, name="lineage-explain"
-        )
-        worker.start()
-        worker.join(self.timeout)
-        if not box:
-            return (
-                "ERROR. Unable to read dataframe execution plan. "
-                f"Timed out after {self.timeout} seconds."
-            )
-        kind, value = box[0]
-        if kind == "err":
-            raise value
-        return value
-
-    def _get_data_scan_nodes(self, explain_result: str) -> List[execution_plan.PlanNode]:
-        """Leaf nodes of the plan tree; an ``AdaptiveSparkPlan`` leaf marks
-        a nested cached plan and is dropped (reference observer.py:51-59)."""
-        tree = execution_plan.build_execution_tree(explain_result)
-        return [n for n in tree.leaves if n.name != "AdaptiveSparkPlan"]
 
     def _get_data_sources(self, df: DataFrame) -> List[str]:
-        explain_result = self._explain_dataframe(df)
-        if explain_result.startswith("ERROR"):
-            return [explain_result]
-        sources = []
-        for node in self._get_data_scan_nodes(explain_result):
-            src = node_handler.extract_data_source(node)
-            if src.scan_type == "file_scan":
-                sources.append(src.location)
-            else:
-                sources.append(f"{src.scan_type}: {src.location}")
-        return sources
+        """Sources of the analyzed plan's leaves, then of each subquery
+        plan's leaves (nested subqueries included)."""
+        analyzed = df._jdf.queryExecution().analyzed()
+        plans = [analyzed] + _scala_list(analyzed.subqueriesAll())
+        return [
+            _leaf_source(leaf)
+            for plan in plans
+            for leaf in _scala_list(plan.collectLeaves())
+        ]
 
     def _create_lineage_log(
         self, data_sources: List[str], output_path: str, code_file_path: str
@@ -125,7 +128,7 @@ class DataLineageLogger:
         Deliberate deviation from the reference (observer.py:101-105
         propagates): update() runs AFTER the user's data has landed, so a
         lineage-only failure (log path outside the isolation mount, log
-        table locked, plan-capture error) must not turn a successful
+        table locked, plan-walk error) must not turn a successful
         write into a caller-visible exception — with the reference's
         propagate-everything behavior, one misconfigured lineage path
         fails every write in the pipeline. Failures surface as a warning

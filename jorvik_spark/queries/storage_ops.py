@@ -57,9 +57,10 @@ _STREAM_STATE_MIN_PARTS = 8  # keep the Python-state workers parallel
 def _stream_state_partitions(spark: SparkSession, src_bytes: int) -> int:
     """State-store/shuffle partition count for one drain: source-bytes
     derived, floored at min(8, cores) (1 partition serializes the
-    applyInPandas state worker — measured 2× the drain wall), capped at
-    the session's shuffle partitions (the cluster-sized conf), env-
-    overridable for tuning (``SPARK_GRAFT_STREAM_SHUFFLE``)."""
+    applyInPandas state worker — measured 2× the drain wall), then capped
+    at the session's shuffle partitions (the cluster-sized conf), so a
+    session set below the floor keeps its own setting. Env-overridable
+    for tuning (``SPARK_GRAFT_STREAM_SHUFFLE``)."""
     env = os.environ.get(_STREAM_SHUFFLE_ENV)
     if env is not None:
         return max(1, int(env))
@@ -68,7 +69,7 @@ def _stream_state_partitions(spark: SparkSession, src_bytes: int) -> int:
         _STREAM_STATE_MIN_PARTS, spark.sparkContext.defaultParallelism
     )
     need = -(-src_bytes // _STREAM_STATE_TARGET_BYTES)
-    return max(floor, min(session_parts, need))
+    return min(session_parts, max(floor, need))
 
 
 @contextlib.contextmanager

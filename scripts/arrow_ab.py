@@ -60,7 +60,7 @@ def _norm(v):
 
 def _row_hash_rows(rows) -> str:
     h = hashlib.sha256()
-    for r in sorted(tuple(_norm(x) for x in row) for row in rows):
+    for r in sorted((tuple(_norm(x) for x in row) for row in rows), key=repr):
         h.update(repr(r).encode())
     return h.hexdigest()[:16]
 

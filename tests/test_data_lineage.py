@@ -1,205 +1,122 @@
-"""Lineage tests ported from the reference golden suite:
-/root/reference/test/fixtures/data_lineage.py:23-90 (hardcoded Databricks
-plan), test_execution_plan.py:8-101, test_node_handler.py:7-35, and the
-end-to-end write-log test (test_write_log.py:15-44, on parquet here).
+"""Lineage tests: the source list the observer records for one write,
+checked against live DataFrames of every scan family, plus the end-to-end
+write-log tests ported from the reference (test_write_log.py:15-44, on
+parquet here).
 """
 
+import glob
+from types import SimpleNamespace
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from jorvik_spark import storage
-from jorvik_spark.data_lineage import execution_plan, node_handler
 from jorvik_spark.data_lineage.observer import LINEAGE_SCHEMA, DataLineageLogger
 from jorvik_spark.tables import default_sf_dir
 
-# Golden fixture: Databricks-formatted explain of a Delta scan left-joined
-# with an in-memory DataFrame (reference fixtures/data_lineage.py:23-90).
-EXPLAIN_RESULT = """== Physical Plan ==
-AdaptiveSparkPlan (12)
-+- == Initial Plan ==
-   Project (11)
-   +- SortMergeJoin LeftOuter (10)
-      :- Sort (5)
-      :  +- Exchange (4)
-      :     +- Project (3)
-      :        +- Filter (2)
-      :           +- Scan parquet  (1)
-      +- Sort (9)
-         +- Exchange (8)
-            +- Filter (7)
-               +- Scan ExistingRDD (6)
+DERBY_URL = "jdbc:derby:memory:jorvik_lineage;create=true"
 
 
-(1) Scan parquet
-Output [3]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24]
-Batched: true
-Location: PreparedDeltaFileIndex [dbfs:/mnt/bronze/adventure_works/sales/data]
-ReadSchema: struct<SalesOrderNumber:string,SalesTerritoryKey:int,Sales:string>
-
-(2) Filter
-Input [3]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24]
-Condition : isnotnull(SalesTerritoryKey#21)
-
-(3) Project
-Output [3]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24]
-Input [3]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24]
-
-(4) Exchange
-Input [3]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24]
-Arguments: hashpartitioning(cast(SalesTerritoryKey#21 as bigint), 200), ENSURE_REQUIREMENTS, [plan_id=236]
-
-(5) Sort
-Input [3]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24]
-Arguments: [cast(SalesTerritoryKey#21 as bigint) ASC NULLS FIRST], false, 0
-
-(6) Scan ExistingRDD
-Output [2]: [SalesTerritoryKey#36L, region_name#37]
-Arguments: [SalesTerritoryKey#36L, region_name#37], MapPartitionsRDD[4], ExistingRDD, UnknownPartitioning(0)
-
-(7) Filter
-Input [2]: [SalesTerritoryKey#36L, region_name#37]
-Condition : isnotnull(SalesTerritoryKey#36L)
-
-(8) Exchange
-Input [2]: [SalesTerritoryKey#36L, region_name#37]
-Arguments: hashpartitioning(SalesTerritoryKey#36L, 200), ENSURE_REQUIREMENTS, [plan_id=237]
-
-(9) Sort
-Input [2]: [SalesTerritoryKey#36L, region_name#37]
-Arguments: [SalesTerritoryKey#36L ASC NULLS FIRST], false, 0
-
-(10) SortMergeJoin
-Left keys [1]: [cast(SalesTerritoryKey#21 as bigint)]
-Right keys [1]: [SalesTerritoryKey#36L]
-Join type: LeftOuter
-Join condition: None
-
-(11) Project
-Output [3]: [SalesTerritoryKey#21, SalesOrderNumber#16, region_name#37]
-Input [4]: [SalesOrderNumber#16, SalesTerritoryKey#21, Sales#24, region_name#37]
-
-(12) AdaptiveSparkPlan
-Output [3]: [SalesTerritoryKey#21, SalesOrderNumber#16, region_name#37]
-Arguments: isFinalPlan=false
-"""
-
-
-def test_capture_explain_live(spark):
-    """Live round-trip (reference test_execution_plan.py:8-19)."""
-    df = spark.createDataFrame([("Alice", 30), ("Bob", 25)], ["name", "age"])
-    out = execution_plan.capture_explain(df)
-    assert isinstance(out, str)
-    assert "== Physical Plan ==" in out
-
-
-def test_split_formatted_explain():
-    tree, details = execution_plan.split_formatted_explain(EXPLAIN_RESULT)
-    assert "== Physical Plan ==" in tree
-    assert "(1) Scan parquet" in details
-
-
-def test_parse_node_details():
-    details = execution_plan.parse_node_details(
-        execution_plan.split_formatted_explain(EXPLAIN_RESULT)[1]
+@pytest.fixture(scope="module")
+def lake(spark, tmp_path_factory):
+    """One small source per scan family: single parquet files, a
+    partitioned directory, a three-file directory, a catalog table, a temp
+    view, a cached DataFrame and an embedded-Derby JDBC table."""
+    root = str(tmp_path_factory.mktemp("lineage_lake"))
+    pd.DataFrame({"r_regionkey": [0, 1], "r_name": ["a", "b"]}).to_parquet(
+        f"{root}/region.parquet"
     )
-    assert set(details.keys()) == set(range(1, 13))
-    assert (
-        details[1]["Location"]
-        == "PreparedDeltaFileIndex [dbfs:/mnt/bronze/adventure_works/sales/data]"
+    pd.DataFrame({"n_nationkey": [0, 1, 2], "n_regionkey": [0, 1, 1]}).to_parquet(
+        f"{root}/nation.parquet"
+    )
+    pd.DataFrame({"s_nationkey": [1, 2]}).to_parquet(f"{root}/supplier.parquet")
+    spark.range(6).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(
+        f"{root}/part"
+    )
+    spark.range(6).repartition(3).write.parquet(f"{root}/multi")
+    spark.range(3).write.option("path", f"{root}/cat").saveAsTable("lineage_cat")
+    spark.read.parquet(f"{root}/region.parquet").createOrReplaceTempView("lineage_rv")
+    cached = spark.read.parquet(f"{root}/nation.parquet").cache()
+    spark.createDataFrame([(1, "a")], "ID INT, NAME STRING").write.jdbc(
+        DERBY_URL, "SALES_TABLE", mode="overwrite"
+    )
+    yield SimpleNamespace(root=root, cached=cached)
+    cached.unpersist()
+    spark.sql("DROP TABLE IF EXISTS lineage_cat")
+    spark.catalog.dropTempView("lineage_rv")
+
+
+def _jdbc(spark, option, value):
+    return (
+        spark.read.format("jdbc").option("url", DERBY_URL).option(option, value).load()
     )
 
 
-def test_parse_node_line():
-    assert execution_plan.parse_node_line(
-        "* ShuffleQueryStage (11), Statistics(sizeInBytes=1669.9 MiB)"
-    ) == (11, "ShuffleQueryStage")
+# (case, build(spark, lake) -> DataFrame, expected sources; "{root}" is the
+# lake directory). The first block pins the strings the explain-text parser
+# recorded; the last block is what it got wrong: JDBC text cut at the first
+# paren, scalar-subquery sources dropped, and optimizer-pruned sources
+# recorded as an empty local relation.
+SOURCE_CASES = [
+    ("parquet_file", lambda s, lk: s.read.parquet(f"{lk.root}/region.parquet"),
+     ["file:{root}/region.parquet"]),
+    ("partitioned_dir", lambda s, lk: s.read.parquet(f"{lk.root}/part"),
+     ["file:{root}/part"]),
+    ("partition_dirs",
+     lambda s, lk: s.read.parquet(f"{lk.root}/part/p=0", f"{lk.root}/part/p=1"),
+     ["file:{root}/part"]),
+    ("multi_file_list",
+     lambda s, lk: s.read.parquet(*sorted(glob.glob(f"{lk.root}/multi/*.parquet"))),
+     ["file:{root}/multi"]),
+    ("cached", lambda s, lk: lk.cached, ["file:{root}/nation.parquet"]),
+    ("temp_view", lambda s, lk: s.table("lineage_rv"), ["file:{root}/region.parquet"]),
+    ("catalog_table", lambda s, lk: s.table("lineage_cat"), ["file:{root}/cat"]),
+    ("rows", lambda s, lk: s.createDataFrame([(1, "a")], "id INT, v STRING"),
+     ["memory_scan: Scan ExistingRDD"]),
+    ("pandas", lambda s, lk: s.createDataFrame(pd.DataFrame({"a": [1, 2]})),
+     ["memory_scan: LocalTableScan"]),
+    ("values", lambda s, lk: s.sql("SELECT * FROM VALUES (1), (2) AS t(a)"),
+     ["memory_scan: LocalTableScan"]),
+    ("range", lambda s, lk: s.range(5), ["unknown_scan: Range"]),
+    ("in_subquery",
+     lambda s, lk: s.sql(
+         f"SELECT * FROM parquet.`{lk.root}/nation.parquet` "
+         "WHERE n_regionkey IN (SELECT r_regionkey FROM lineage_rv)"
+     ),
+     ["file:{root}/nation.parquet", "file:{root}/region.parquet"]),
+    ("nested_exists",
+     lambda s, lk: s.sql(
+         f"SELECT * FROM parquet.`{lk.root}/nation.parquet` n WHERE EXISTS ("
+         "SELECT 1 FROM lineage_rv r WHERE r.r_regionkey = n.n_regionkey AND EXISTS ("
+         f"SELECT 1 FROM parquet.`{lk.root}/supplier.parquet` s "
+         "WHERE s.s_nationkey = r.r_regionkey))"
+     ),
+     ["file:{root}/nation.parquet", "file:{root}/region.parquet",
+      "file:{root}/supplier.parquet"]),
+    ("streaming", lambda s, lk: s.readStream.schema("id LONG").parquet(f"{lk.root}/multi"),
+     ["unknown_scan: StreamingRelation"]),
+    ("jdbc_query", lambda s, lk: _jdbc(s, "query", "select * from SALES_TABLE"),
+     ["jdbc_scan: select * from SALES_TABLE"]),
+    ("jdbc_table", lambda s, lk: _jdbc(s, "dbtable", "SALES_TABLE"),
+     ["jdbc_scan: SALES_TABLE"]),
+    ("scalar_subquery",
+     lambda s, lk: s.sql(
+         "SELECT *, (SELECT max(r_regionkey) FROM lineage_rv) AS m "
+         f"FROM parquet.`{lk.root}/nation.parquet`"
+     ),
+     ["file:{root}/nation.parquet", "file:{root}/region.parquet"]),
+    ("pruned_limit0", lambda s, lk: s.read.parquet(f"{lk.root}/region.parquet").limit(0),
+     ["file:{root}/region.parquet"]),
+]
 
 
-def test_build_execution_tree_golden():
-    """Exact (id, name, height) triples + tree shape (reference
-    test_execution_plan.py:67-101)."""
-    root = execution_plan.build_execution_tree(EXPLAIN_RESULT)
-    assert (root.id, root.name, root.height) == (12, "AdaptiveSparkPlan", 0)
-    assert len(root.children) == 1
-    project = root.children[0]
-    assert (project.id, project.name) == (11, "Project")
-    join = project.children[0]
-    assert join.name == "SortMergeJoin LeftOuter"
-    assert len(join.children) == 2
-
-    expected = {
-        (1, "Scan parquet", 7),
-        (2, "Filter", 6),
-        (3, "Project", 5),
-        (4, "Exchange", 4),
-        (5, "Sort", 3),
-        (6, "Scan ExistingRDD", 6),
-        (7, "Filter", 5),
-        (8, "Exchange", 4),
-        (9, "Sort", 3),
-    }
-    got = set()
-
-    def walk(n):
-        got.add((n.id, n.name, n.height))
-        for c in n.children:
-            walk(c)
-
-    walk(root)
-    assert expected <= got
-
-    leaves = {(n.id, n.name) for n in root.leaves}
-    assert leaves == {(1, "Scan parquet"), (6, "Scan ExistingRDD")}
-
-
-def test_multiple_roots_raise():
-    bad = "A (1)\nB (2)\n\n\n(1) A\n\n(2) B\n"
-    with pytest.raises(ValueError, match="multiple roots"):
-        execution_plan.build_execution_tree(bad)
-
-
-# -- node handler (reference test_node_handler.py) -------------------------
-
-
-def test_extract_first_bracket_content():
-    f = node_handler.extract_first_bracket_content
-    assert f("PreparedDeltaFileIndex [dbfs:/mnt/a/b]") == "dbfs:/mnt/a/b"
-    assert f("X [first] more [second]") == "first"
-    assert f("No brackets here") is None
-
-
-def test_handle_truncated_path():
-    f = node_handler.handle_truncated_path
-    assert f("dbfs:/mnt/bronze/sales/data") == "dbfs:/mnt/bronze/sales/data"
-    assert (
-        f("/lake/cleansed/sales_data/date_part=2024-07-20, ... 13 entries")
-        == "/lake/cleansed/sales_data"
-    )
-    assert (
-        f("/lake/cleansed/customer_info/part-00000-tid-751.snappy.orc, ... 12 entries")
-        == "/lake/cleansed/customer_info"
-    )
-
-
-def test_extract_data_source():
-    n = execution_plan.PlanNode(
-        1, "Scan parquet", 1,
-        {"Location": "PreparedDeltaFileIndex [dbfs:/mnt/a/sales/data]"},
-    )
-    assert node_handler.extract_data_source(n) == ("file_scan", "dbfs:/mnt/a/sales/data")
-
-    n = execution_plan.PlanNode(2, "Scan ExistingRDD", 1)
-    assert node_handler.extract_data_source(n) == ("memory_scan", "Scan ExistingRDD")
-
-    n = execution_plan.PlanNode(
-        3,
-        "Scan JDBCRelation((select * from SALES_TABLE) SPARK_GEN_SUBQ_0) "
-        "[numPartitions=1]",
-        1,
-    )
-    assert node_handler.extract_data_source(n) == (
-        "jdbc_scan", "select * from SALES_TABLE"
-    )
+@pytest.mark.parametrize(
+    "build, expected", [c[1:] for c in SOURCE_CASES], ids=[c[0] for c in SOURCE_CASES]
+)
+def test_data_sources(spark, lake, build, expected):
+    sources = DataLineageLogger("unused")._get_data_sources(build(spark, lake))
+    assert sources == [e.format(root=lake.root) for e in expected]
 
 
 # -- end-to-end write log (reference test_write_log.py, on parquet) --------

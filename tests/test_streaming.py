@@ -816,7 +816,7 @@ def test_interval_join_batch_accepts_all_spark_interval_forms(spark):
 def test_stream_state_partitions_derivation(spark, monkeypatch):
     """r18 (r17 VERDICT #4): drain state-store partitions are source-
     bytes derived — floored at min(8, cores) so the Python state worker
-    stays parallel, capped at the session's (cluster-sized) shuffle
+    stays parallel, then capped at the session's (cluster-sized) shuffle
     partitions, env-overridable."""
     from jorvik_spark.queries.storage_ops import (
         _STREAM_STATE_TARGET_BYTES,
@@ -838,6 +838,9 @@ def test_stream_state_partitions_derivation(spark, monkeypatch):
     assert _stream_state_partitions(spark, mid) == max(
         floor, min(session_parts, max(floor, 2))
     )
+    # a session capped below the floor keeps its cap
+    with _scoped_sql_conf(spark, "spark.sql.shuffle.partitions", 2):
+        assert _stream_state_partitions(spark, 1) == 2
     # env override wins
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
     assert _stream_state_partitions(spark, 10**15) == 3
