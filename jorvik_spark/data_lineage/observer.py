@@ -1,7 +1,7 @@
 """DataLineageLogger: a storage output-observer that appends one lineage
 row per write.
 
-Reference: /root/reference/jorvik/data_lineage/observer.py:22-105. On every
+Reference: jorvik's data_lineage/observer.py:22-105. On every
 ``(df, output_path)`` write event: collect the DataFrame's data sources and
 append ``{output_path, data_sources: array<string>, transform_code_file,
 observation_ts}`` to the lineage log table.
@@ -14,15 +14,23 @@ every subquery plan inside it. The analyzed plan exists as soon as the
 Dataset does, so reading it runs no analysis, optimization or planning and
 needs no watchdog; the reference's ``timeout`` argument is gone. Sources
 the optimizer would prune (``limit(0)``) and scalar-subquery sources are
-still recorded. Log writes go through a non-lineage-tracking storage
-(recursion guard, quirk Q10 kept), in Delta when available, else parquet.
+still recorded. Each source is logged once, in first-seen order.
+
+The log row is built as a one-row ``pyarrow.Table``, which Spark plans as
+a JVM ``LocalRelation``: appending it starts no Python worker and runs no
+RDD job (a Python list would plan to a ``LogicalRDD`` whose scan
+round-trips through a Python worker on every write). The row is still
+written by Spark's writer through the configured (isolated) storage, via a
+non-lineage-tracking storage (recursion guard, quirk Q10 kept), in Delta
+when available, else parquet.
 """
 
 from __future__ import annotations
 
+import json
 import re
 import warnings
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,10 +78,24 @@ def _file_source(root_paths: list) -> str:
     return prefix[: prefix.rfind("/")]
 
 
+def _v2_source(leaf) -> str:
+    """A DataSource V2 relation (the Python data sources among them): its
+    ``path`` option, its ``paths`` option (a JSON list), else the table's
+    name."""
+    options = leaf.options()
+    if options.containsKey("path"):
+        return options.get("path")
+    if options.containsKey("paths"):
+        return _file_source(json.loads(options.get("paths")))
+    return leaf.table().name()
+
+
 def _leaf_source(leaf) -> str:
     """Classify one leaf of a logical plan (reference
     node_handler.py:49-69, on plan objects instead of explain text)."""
     kind = leaf.getClass().getSimpleName()
+    if kind == "DataSourceV2Relation":
+        return _v2_source(leaf)
     if kind == "LogicalRelation":
         relation = leaf.relation()
         relation_kind = relation.getClass().getSimpleName()
@@ -96,21 +118,36 @@ class DataLineageLogger:
 
     def _get_data_sources(self, df: DataFrame) -> List[str]:
         """Sources of the analyzed plan's leaves, then of each subquery
-        plan's leaves (nested subqueries included)."""
+        plan's leaves (nested subqueries included), each once, in
+        first-seen order (a self-join reads one source)."""
         analyzed = df._jdf.queryExecution().analyzed()
         plans = [analyzed] + _scala_list(analyzed.subqueriesAll())
-        return [
+        return list(dict.fromkeys(
             _leaf_source(leaf)
             for plan in plans
             for leaf in _scala_list(plan.collectLeaves())
-        ]
+        ))
 
     def _create_lineage_log(
         self, data_sources: List[str], output_path: str, code_file_path: str
     ) -> DataFrame:
-        spark = SparkSession.getActiveSession()
-        row = [[output_path, data_sources, code_file_path, datetime.now()]]
-        return spark.createDataFrame(row, LINEAGE_SCHEMA)
+        """The one log row as an Arrow-backed ``LocalRelation``.
+
+        ``observation_ts`` is an aware UTC instant: pyarrow stores an
+        aware datetime with a non-zero offset as its wall-clock time, so
+        a local-zone value would shift the instant off UTC hosts.
+        """
+        import pyarrow as pa  # lazy: keeps pyarrow out of `import jorvik_spark`
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        row = {
+            "output_path": output_path,
+            "data_sources": data_sources,
+            "transform_code_file": code_file_path,
+            "observation_ts": datetime.now(timezone.utc),
+        }
+        table = pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
+        return SparkSession.getActiveSession().createDataFrame(table, LINEAGE_SCHEMA)
 
     def _store_lineage_log(self, lineage_log: DataFrame) -> None:
         from jorvik_spark import storage  # lazy: avoid circular import

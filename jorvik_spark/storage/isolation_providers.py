@@ -62,12 +62,17 @@ def _validate_isolation_context(context: str) -> None:
 
 def get_spark_config(config_key: str, default_value: Optional[str] = None) -> str:
     """Session conf beats context conf (Q12); error when neither set and no
-    default given."""
+    default given.
+
+    The context conf is read in place with one lookup: ``getConf()`` would
+    copy every SparkConf entry over py4j, and configure() reads a normally
+    unset key on every write.
+    """
     spark = SparkSession.getActiveSession()
     session_value = spark.conf.get(config_key, None)
     if session_value:
         return session_value
-    context_value = spark.sparkContext.getConf().get(config_key, None)
+    context_value = spark.sparkContext._conf.get(config_key)
     if context_value:
         return context_value
     if default_value is not None:

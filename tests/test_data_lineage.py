@@ -1,10 +1,13 @@
 """Lineage tests: the source list the observer records for one write,
-checked against live DataFrames of every scan family, plus the end-to-end
-write-log tests ported from the reference (test_write_log.py:15-44, on
-parquet here).
+checked against live DataFrames of every scan family, the shape of the
+log row itself, plus the end-to-end write-log tests ported from the
+reference (test_write_log.py:15-44, on parquet here).
 """
 
 import glob
+import os
+import time
+from datetime import datetime
 from types import SimpleNamespace
 
 import pandas as pd
@@ -13,6 +16,7 @@ from pyspark.sql import functions as F
 
 from jorvik_spark import storage
 from jorvik_spark.data_lineage.observer import LINEAGE_SCHEMA, DataLineageLogger
+from jorvik_spark.storage.pydatasource import register as register_py_sources
 from jorvik_spark.tables import default_sf_dir
 
 DERBY_URL = "jdbc:derby:memory:jorvik_lineage;create=true"
@@ -22,7 +26,8 @@ DERBY_URL = "jdbc:derby:memory:jorvik_lineage;create=true"
 def lake(spark, tmp_path_factory):
     """One small source per scan family: single parquet files, a
     partitioned directory, a three-file directory, a catalog table, a temp
-    view, a cached DataFrame and an embedded-Derby JDBC table."""
+    view, a cached DataFrame, an embedded-Derby JDBC table and a JSONL
+    directory for the repo's Python data sources."""
     root = str(tmp_path_factory.mktemp("lineage_lake"))
     pd.DataFrame({"r_regionkey": [0, 1], "r_name": ["a", "b"]}).to_parquet(
         f"{root}/region.parquet"
@@ -41,6 +46,11 @@ def lake(spark, tmp_path_factory):
     spark.createDataFrame([(1, "a")], "ID INT, NAME STRING").write.jdbc(
         DERBY_URL, "SALES_TABLE", mode="overwrite"
     )
+    os.makedirs(f"{root}/jl")
+    for name in ("a", "b"):
+        with open(f"{root}/jl/{name}.jsonl", "w") as fh:
+            fh.write('{"k": 1}\n')
+    register_py_sources(spark)
     yield SimpleNamespace(root=root, cached=cached)
     cached.unpersist()
     spark.sql("DROP TABLE IF EXISTS lineage_cat")
@@ -53,11 +63,22 @@ def _jdbc(spark, option, value):
     )
 
 
+def _jsonl(spark, path):
+    return spark.read.format("jorvik_jsonl").schema("k long").load(path)
+
+
+def _self_join(spark, lk):
+    region = spark.read.parquet(f"{lk.root}/region.parquet")
+    return region.alias("a").join(region.alias("b"), "r_regionkey")
+
+
 # (case, build(spark, lake) -> DataFrame, expected sources; "{root}" is the
 # lake directory). The first block pins the strings the explain-text parser
-# recorded; the last block is what it got wrong: JDBC text cut at the first
-# paren, scalar-subquery sources dropped, and optimizer-pruned sources
-# recorded as an empty local relation.
+# recorded; the second block is what it got wrong: JDBC text cut at the
+# first paren, scalar-subquery sources dropped, and optimizer-pruned sources
+# recorded as an empty local relation; the last block is DataSource V2
+# leaves (logged as "unknown_scan: DataSourceV2Relation" before) and a
+# self-join's one source (logged twice before).
 SOURCE_CASES = [
     ("parquet_file", lambda s, lk: s.read.parquet(f"{lk.root}/region.parquet"),
      ["file:{root}/region.parquet"]),
@@ -108,6 +129,13 @@ SOURCE_CASES = [
      ["file:{root}/nation.parquet", "file:{root}/region.parquet"]),
     ("pruned_limit0", lambda s, lk: s.read.parquet(f"{lk.root}/region.parquet").limit(0),
      ["file:{root}/region.parquet"]),
+    ("v2_path", lambda s, lk: _jsonl(s, f"{lk.root}/jl"), ["{root}/jl"]),
+    ("v2_paths",
+     lambda s, lk: _jsonl(s, [f"{lk.root}/jl/a.jsonl", f"{lk.root}/jl/b.jsonl"]),
+     ["{root}/jl"]),
+    ("v2_table_name", lambda s, lk: s.read.format("jorvik_synthetic").option("n", 5).load(),
+     ["jorvik_synthetic"]),
+    ("self_join", _self_join, ["file:{root}/region.parquet"]),
 ]
 
 
@@ -117,6 +145,74 @@ SOURCE_CASES = [
 def test_data_sources(spark, lake, build, expected):
     sources = DataLineageLogger("unused")._get_data_sources(build(spark, lake))
     assert sources == [e.format(root=lake.root) for e in expected]
+
+
+# -- the log row ------------------------------------------------------------
+
+
+def _log_row(data_sources=("file:/lake/a",), output_path="/lake/out"):
+    return DataLineageLogger("unused")._create_lineage_log(
+        list(data_sources), output_path, "job.py"
+    )
+
+
+def test_log_row_is_a_local_relation(spark):
+    """An Arrow-built row plans to a JVM LocalRelation: appending it starts
+    no Python worker (a Python list would plan to a LogicalRDD)."""
+    analyzed = _log_row()._jdf.queryExecution().analyzed()
+    assert analyzed.getClass().getSimpleName() == "LocalRelation"
+
+
+@pytest.mark.parametrize(
+    "data_sources, output_path",
+    [([], "/lake/out"), (["file:/lake/ünïcødé/路径", "jdbc_scan: T"], "/lake/gold/日本")],
+    ids=["no_sources", "non_ascii"],
+)
+def test_log_row_round_trips(spark, data_sources, output_path):
+    row = _log_row(data_sources, output_path).collect()[0]
+    assert row.output_path == output_path
+    assert row.data_sources == data_sources
+    assert row.transform_code_file == "job.py"
+
+
+def test_log_row_without_arrow_pyspark(spark):
+    """The row is built from a pyarrow.Table, which does not depend on the
+    pandas-conversion Arrow switch."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        log = _log_row()
+        assert log.schema == LINEAGE_SCHEMA
+        assert log.collect()[0].data_sources == ["file:/lake/a"]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_log_row_observation_ts_off_utc(spark, tmp_path):
+    """Under a non-UTC process zone the stored observation_ts is the same
+    instant a naive datetime.now() row records (read as local time)."""
+    before = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        naive = spark.createDataFrame(
+            [["/lake/out", [], "job.py", datetime.now()]], LINEAGE_SCHEMA
+        )
+        logger = DataLineageLogger(str(tmp_path / "log"))
+        logger._store_lineage_log(_log_row())
+        stored = spark.read.parquet(logger.lineage_log_path)
+        micros = [
+            d.selectExpr("unix_micros(observation_ts) AS u").collect()[0].u
+            for d in (naive, stored)
+        ]
+    finally:
+        if before is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = before
+        time.tzset()
+    assert abs(micros[1] - micros[0]) < 2_000_000
 
 
 # -- end-to-end write log (reference test_write_log.py, on parquet) --------
@@ -199,3 +295,13 @@ def test_lineage_captures_all_sources_of_a_join_dag(spark, tmp_path, lineage_con
     assert "orders.parquet" in srcs
     assert "customer.parquet" in srcs
     assert len(row.data_sources) == 2
+
+
+def test_log_schema_after_appends(spark, tmp_path, lineage_conf):
+    st = storage.configure()
+    df = spark.createDataFrame([(1,)], "id long")
+    for i in range(3):
+        st.write(df, str(tmp_path / f"out{i}"), format="parquet", mode="overwrite")
+    log = st.read(lineage_conf, format="parquet")
+    assert log.schema == LINEAGE_SCHEMA
+    assert log.count() == 3

@@ -53,6 +53,19 @@ def test_get_spark_config_session_beats_context(spark, clean_conf):
     assert get_spark_config(KEY) == "session-wins"
 
 
+def test_get_spark_config_context_only(spark, clean_conf):
+    """Q12's second step: a key the context conf has and the session conf
+    lacks comes from the context, and a session value still wins."""
+    context_conf = spark.sparkContext._jsc.sc().conf()
+    context_conf.set(KEY, "from-context")
+    try:
+        assert get_spark_config(KEY) == "from-context"
+        spark.conf.set(KEY, "session-wins")
+        assert get_spark_config(KEY) == "session-wins"
+    finally:
+        context_conf.remove(KEY)
+
+
 def test_validate_isolation_context_valid():
     _validate_isolation_context("feature-branch_1.2")
 
