@@ -53,6 +53,9 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
+# Hadoop's FileOutputCommitter writes a _SUCCESS file unless this is false.
+_MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
 # In-memory leaves, named by the physical scan they plan into.
 _MEMORY_SCANS = {
     "LogicalRDD": "Scan ExistingRDD",
@@ -154,9 +157,13 @@ class DataLineageLogger:
         from jorvik_spark.storage.basic import _MERGE_CREATE_FORMAT
 
         st = storage.configure(track_lineage=False)  # recursion guard (Q10)
+        # No _SUCCESS marker: an append into the existing log would rewrite
+        # it every time, and truncating a just-written file can stall. The
+        # option reaches only this job's Hadoop conf.
         st.write(
             lineage_log, self.lineage_log_path,
             format=_MERGE_CREATE_FORMAT, mode="append",
+            options={_MARK_SUCCESS: "false"},
         )
 
     def update(self, df: DataFrame, output_path: str) -> None:

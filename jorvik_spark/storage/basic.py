@@ -14,16 +14,26 @@ MERGE without Delta
 This container has no delta-spark, so ``merge`` delegates to the Delta
 MERGE API only when the package is importable AND the target is a Delta
 table; otherwise it executes the same semantics natively over the stored
-format via relational reconstruction:
+format by rewriting the table as the union of three branches of one plan:
 
-    kept     = target rows with no (condition-satisfying) source match
-    updated  = matched target rows where update_condition holds → source row
-    inserted = unmatched source rows where insert_condition holds
+    rewritten = target LEFT JOIN source ON the applying clause, where
+                applies = merge_condition AND (delete OR update); rows
+                whose match is a delete are dropped, matched rows take
+                the source's values
+    inserted  = source LEFT ANTI JOIN target ON merge_condition, filtered
+                by insert_condition
+    witness   = target rows with more than one applying source row, each
+                projected as a raise_error
 
-one shuffle join on the merge keys + one anti join, then an atomic
-swap-in of the rewritten table (write to temp dir → rename via the Hadoop
-FileSystem API, so the same code works on HDFS/S3A/local). Multiple source
-rows updating one target row raise, exactly like Delta MERGE.
+With a broadcastable source no branch shuffles the table: the rewrite is
+a broadcast join streaming the target, and the witness shuffles only the
+applying matches to count them per target row. The union is coalesced,
+without a shuffle, to the larger of the target's and the source's
+partition counts, so the file count does not grow from merge to merge.
+The one write is swapped in atomically (write to temp dir → rename via
+the Hadoop FileSystem API, so the same code works on HDFS/S3A/local).
+Multiple source rows applying to one target row raise from inside that
+write, before any rename, exactly like Delta MERGE.
 
 At 100 TB the native path is a full-table rewrite per merge — correct but
 write-amplified; the production recommendation is a transactional format
@@ -35,9 +45,10 @@ from __future__ import annotations
 from typing import List, Union
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from jorvik_spark.audit import schemas
 from jorvik_spark.storage.protocols import OutputObserver
@@ -71,6 +82,114 @@ def _check_format(format: str) -> None:
             "Format 'delta' requires the delta-spark package, which is not "
             "installed. Use 'parquet' (merge-capable here) or install delta-spark."
         )
+
+
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(t: DataType) -> str:
+    """``t`` as SQL type text, with struct field names backquoted."""
+    if isinstance(t, StructType):
+        return "struct<" + ",".join(
+            f"{_q(f.name)}:{_sql_type(f.dataType)}" for f in t.fields
+        ) + ">"
+    if isinstance(t, ArrayType):
+        return f"array<{_sql_type(t.elementType)}>"
+    if isinstance(t, MapType):
+        return f"map<{_sql_type(t.keyType)},{_sql_type(t.valueType)}>"
+    return t.simpleString()
+
+
+def _partitions(df: DataFrame) -> int:
+    """Partitions ``df`` is read in, found without running a job. Adaptive
+    execution (on by default) wraps every plan that has an exchange, whose
+    partition count is known only after running it; such a plan counts as
+    the session's default parallelism."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return df.sparkSession.sparkContext.defaultParallelism
+    return plan.execute().getNumPartitions()
+
+
+def _merge_rewrite(
+    full: DataFrame,
+    df: DataFrame,
+    merge_condition: str,
+    update_condition: Union[str, None],
+    insert_condition: Union[str, None],
+    delete_condition: Union[str, None],
+) -> DataFrame:
+    """The native merge's new table: ``full`` (the target) with ``df``
+    (the source) applied, both with the same columns. Three branches of
+    one plan: the target rewritten through a left join on the applying
+    clause, the inserted source rows, and the multi-match witness."""
+    fields = full.schema.fields
+
+    # A matched clause applies when the merge condition holds and the
+    # delete or the update condition is true; a NULL condition does
+    # not fire (Delta's semantics). Joining on this, a target row
+    # meets at most one applying source row unless the merge is
+    # ambiguous, which the witness branch below reports.
+    delete = "false" if delete_condition is None else delete_condition
+    update = "true" if update_condition is None else update_condition
+    applies = F.expr(
+        f"({merge_condition}) AND "
+        f"(coalesce(({delete}), false) OR coalesce(({update}), false))"
+    )
+    src = df.selectExpr("*", f"true AS {_MATCH}").alias("incremental")
+    matched = f"incremental.{_MATCH} IS NOT NULL"
+    # Delete takes precedence over update: same clause order as the
+    # Delta path (whenMatchedDelete added before whenMatchedUpdateAll).
+    rewritten = (
+        full.alias("full")
+        .join(src, applies, "left")
+        .filter(f"NOT ({matched} AND coalesce(({delete}), false))")
+        .selectExpr(*(
+            f"CASE WHEN {matched} THEN incremental.{_q(f.name)} "
+            f"ELSE full.{_q(f.name)} END AS {_q(f.name)}"
+            for f in fields
+        ))
+    )
+
+    inserts = df.alias("incremental").join(
+        full.alias("full"), F.expr(merge_condition), "left_anti"
+    )
+    if insert_condition is not None:
+        inserts = inserts.filter(insert_condition)
+
+    # Delta MERGE raises when several source rows would apply a matched
+    # clause to the same target row; reproduce that contract with a
+    # witness branch of the same write: target rows with more than one
+    # applying source row, each projected as a raise_error. Only the
+    # applying matches are shuffled (to count them per target row),
+    # never the table. The raise fails the single write action before
+    # any rename in _atomic_overwrite (the target is untouched; the
+    # partial __tmp__ dir is overwritten by the next merge), and merge()
+    # translates the marker back into the contract's ValueError.
+    witness = (
+        full.selectExpr("*", f"monotonically_increasing_id() AS {_FID}")
+        .alias("full")
+        .join(src, applies)
+        .groupBy(f"full.{_FID}")
+        .count()
+        .filter("count > 1")
+        .selectExpr(*(
+            f"CAST(raise_error('{_MULTI_MATCH_MARKER}') AS "
+            f"{_sql_type(f.dataType)}) AS {_q(f.name)}"
+            for f in fields
+        ))
+    )
+    # With a broadcast source no branch shuffles the table, so the union
+    # keeps one partition per target split plus the source's; coalescing
+    # back (no shuffle) keeps the file count from growing merge after
+    # merge, and a large source keeps its parallelism.
+    return (
+        rewritten.union(inserts.selectExpr(*(_q(f.name) for f in fields)))
+        .union(witness)
+        .coalesce(max(_partitions(full), _partitions(df)))
+    )
 
 
 def _active_session() -> SparkSession:
@@ -196,6 +315,9 @@ class BasicStorage:
           row flagged ``op = 'D'`` removes the target row even if the
           update condition would also hold. ``None`` (default) preserves
           the reference's exact upsert-only behavior.
+        * A condition that is NULL does not fire. More than one source row
+          applying a matched clause (delete or update) to one target row
+          raises ValueError, like Delta MERGE.
         * Missing target → plain overwrite write (table creation). Kept
           reference-faithful (basic.py:169-174): the conditions do NOT
           apply on creation, so the first merge writes every incremental
@@ -261,95 +383,10 @@ class BasicStorage:
 
         df = self._merge_schema(df, path, fmt, merge_schemas, current_table=full)
         full = self._null_fill_new_fields(full, df)
-        out_cols = [f.name for f in full.schema.fields]
-
-        tgt = full.withColumn(_FID, F.monotonically_increasing_id()).alias("full")
-        src = df.withColumn(_MATCH, F.lit(True)).alias("incremental")
-
-        joined = tgt.join(src, F.expr(merge_condition), "left")
-        matched = F.col(f"incremental.{_MATCH}").isNotNull()
-        # coalesce: a NULL condition (e.g. "incremental.op = 'D'" with a
-        # null op) means the clause does NOT fire — Delta's semantics. A
-        # bare NULL here would flow into filter(~__del__) below, where
-        # ~NULL = NULL silently DROPS the target row (data loss).
-        del_ok = matched & (
-            F.coalesce(F.expr(delete_condition), F.lit(False))
-            if delete_condition is not None
-            else F.lit(False)
+        result = _merge_rewrite(
+            full, df, merge_condition,
+            update_condition, insert_condition, delete_condition,
         )
-        # delete precedence over update — same clause order as the Delta
-        # path (whenMatchedDelete added before whenMatchedUpdateAll)
-        upd_ok = (
-            matched
-            & ~del_ok
-            & (
-                F.expr(update_condition)
-                if update_condition is not None
-                else F.lit(True)
-            )
-        )
-        joined = joined.withColumn("__del__", del_ok).withColumn(
-            "__upd__", upd_ok
-        )
-
-        # Delta MERGE raises when several source rows would apply a matched
-        # clause to the same target row; reproduce that contract. r18
-        # (guide §1.2 / r17 VERDICT #5): the guard is FOLDED into the
-        # rewrite plan instead of running as its own count action — the
-        # old two-action form (guard count, then write) had to persist
-        # the joined frame so both actions saw one
-        # monotonically_increasing_id assignment, paying a full extra
-        # materialization per merge (measured 1.53-1.71 s → see
-        # OPTIMIZATION_r18.md). Now a guarded filter raises from inside
-        # the single write action BEFORE any row is dropped (delete
-        # multi-matches included — the guard sits above the ~__del__
-        # filter), the raise surfaces before any rename in
-        # _atomic_overwrite (the target is untouched on failure; the
-        # partial __tmp__ dir is overwritten by the next merge), and the
-        # marker is translated back to the contract's ValueError below.
-        w = Window.partitionBy(F.col(f"full.{_FID}"))
-        joined = joined.withColumn(
-            "__n_upd__",
-            F.sum((F.col("__upd__") | F.col("__del__")).cast("int")).over(w),
-        )
-
-        # One output row per target row: the applying source row if any
-        # (clause flags sort True first), dropped entirely when that
-        # clause is the delete, else the original row once. The guard is
-        # folded into the __rn__ VALUE, not a filter predicate: every
-        # joined row — delete-flagged ones included — evaluates it in
-        # the projection above the Window, before either filter can drop
-        # the row, so no predicate reordering can skip the raise (and
-        # the ~__del__ filter cannot be pushed below the Window anyway:
-        # it is not a partition-key predicate).
-        pick = Window.partitionBy(F.col(f"full.{_FID}")).orderBy(
-            F.col("__del__").desc(), F.col("__upd__").desc()
-        )
-        rn_guarded = F.when(
-            F.col("__n_upd__") <= 1, F.row_number().over(pick)
-        ).otherwise(
-            F.expr(f"raise_error('{_MULTI_MATCH_MARKER}')").cast("int")
-        )
-        kept_or_updated = (
-            joined.withColumn("__rn__", rn_guarded)
-            .filter(F.col("__rn__") == 1)
-            .filter(~F.col("__del__"))
-            .select(
-                [
-                    F.when(F.col("__upd__"), F.col(f"incremental.{c}"))
-                    .otherwise(F.col(f"full.{c}"))
-                    .alias(c)
-                    for c in out_cols
-                ]
-            )
-        )
-
-        inserts = df.alias("incremental").join(
-            full.alias("full"), F.expr(merge_condition), "left_anti"
-        )
-        if insert_condition is not None:
-            inserts = inserts.filter(F.expr(insert_condition))
-        result = kept_or_updated.unionByName(inserts.select(out_cols))
 
         try:
             self._atomic_overwrite(result, path, fmt, partition_fields)

@@ -305,3 +305,20 @@ def test_log_schema_after_appends(spark, tmp_path, lineage_conf):
     log = st.read(lineage_conf, format="parquet")
     assert log.schema == LINEAGE_SCHEMA
     assert log.count() == 3
+
+
+def test_log_appends_write_no_success_marker(spark, tmp_path):
+    """Lineage appends skip the _SUCCESS marker (rewriting it on every
+    append is the slow part of a small write); an ordinary data write
+    still leaves it."""
+    logger = DataLineageLogger(str(tmp_path / "log"))
+    logger._store_lineage_log(_log_row())
+    logger._store_lineage_log(_log_row())
+    assert spark.read.parquet(logger.lineage_log_path).count() == 2
+    assert not os.path.exists(os.path.join(logger.lineage_log_path, "_SUCCESS"))
+
+    data = str(tmp_path / "data")
+    plain = storage.configure(track_lineage=False)
+    for _ in range(2):
+        plain.write(spark.range(1), data, format="parquet", mode="append")
+    assert os.path.exists(os.path.join(data, "_SUCCESS"))

@@ -4,10 +4,13 @@ delta-less container: the format matrix drops 'delta' and MERGE runs the
 native parquet reconstruction path.
 """
 
+import os
+import random
+
 import pytest
 from pyspark.testing import assertDataFrameEqual
 
-from jorvik_spark.storage.basic import BasicStorage
+from jorvik_spark.storage.basic import BasicStorage, _merge_rewrite
 
 
 @pytest.fixture
@@ -364,8 +367,6 @@ def test_merge_recovers_interrupted_swap(spark, st, tmp_path):
     must roll the old copy forward and merge into it — not rebuild the
     table from the incremental rows alone and then delete the only full
     copy as a stale leftover."""
-    import os
-
     target = str(tmp_path / "t")
     st.write(kv(spark, [(1, "keep"), (2, "update-me")]), target,
              "parquet", "overwrite")
@@ -380,3 +381,268 @@ def test_merge_recovers_interrupted_swap(spark, st, tmp_path):
     expected = kv(spark, [(1, "keep"), (2, "updated"), (3, "inserted")])
     assertDataFrameEqual(st.read(target, "parquet"), expected)
     assert not os.path.exists(target + "__jorvik_merge_old__")
+
+
+# -- native merge: NULL conditions, column names, file count, plan shape ---
+
+
+def _ids_values(st, target):
+    return sorted((r.id, r.value) for r in st.read(target, "parquet").collect())
+
+
+def test_merge_null_update_condition_is_not_a_multi_match(spark, st, tmp_path):
+    """A matched source row whose update condition is NULL does not
+    apply: the target is unchanged, and no multi-match error is raised."""
+    target = str(tmp_path / "t")
+    st.write(kv(spark, [(1, "a"), (2, "b")]), target, "parquet", "overwrite")
+    st.merge(
+        kv(spark, [(1, None)]), target,
+        merge_condition="full.id == incremental.id",
+        update_condition="incremental.value = 'U'",
+    )
+    assert _ids_values(st, target) == [(1, "a"), (2, "b")]
+
+
+def test_merge_null_delete_condition_keeps_the_row(spark, st, tmp_path):
+    """NULL delete and update conditions: the matched row is neither
+    deleted nor updated."""
+    target = str(tmp_path / "t")
+    st.write(kv(spark, [(1, "a"), (2, "b")]), target, "parquet", "overwrite")
+    st.merge(
+        kv(spark, [(1, None)]), target,
+        merge_condition="full.id == incremental.id",
+        delete_condition="incremental.value = 'D'",
+        update_condition="incremental.value <> 'D'",
+    )
+    assert _ids_values(st, target) == [(1, "a"), (2, "b")]
+
+
+def test_merge_two_matches_only_one_applies(spark, st, tmp_path):
+    """Only source rows whose clause applies count as matches: target 1
+    meets one applying and one NULL-condition row, target 2 only a
+    NULL-condition row."""
+    target = str(tmp_path / "t")
+    st.write(kv(spark, [(1, "a"), (2, "b")]), target, "parquet", "overwrite")
+    st.merge(
+        kv(spark, [(1, "U"), (1, None), (2, None)]), target,
+        merge_condition="full.id == incremental.id",
+        update_condition="incremental.value = 'U'",
+    )
+    assert _ids_values(st, target) == [(1, "U"), (2, "b")]
+
+
+def test_merge_odd_column_names(spark, st, tmp_path):
+    """Column names with a space, a dot and a backtick are plain names,
+    not nested-field paths; so is a struct field's name."""
+    schema = "`a b` long, `x.y` string, `q``t` string, s struct<`p.q r`: int>"
+    target = str(tmp_path / "t")
+    st.write(
+        spark.createDataFrame([(1, "a", "p", (1,)), (2, "b", "q", (2,))], schema),
+        target, "parquet", "overwrite",
+    )
+    st.merge(
+        spark.createDataFrame([(2, "B", "Q", (20,)), (3, "c", "r", (3,))], schema),
+        target, merge_condition="full.`a b` = incremental.`a b`",
+    )
+    got = sorted(
+        (r[0], r[1], r[2], r[3][0]) for r in st.read(target, "parquet").collect()
+    )
+    assert got == [(1, "a", "p", 1), (2, "B", "Q", 20), (3, "c", "r", 3)]
+
+
+def test_merge_file_count_does_not_grow(spark, st, tmp_path):
+    """Insert-only merges of one-partition batches into a one-file table
+    leave one file: the rewrite is coalesced back to the larger of the
+    target's and the source's partition counts."""
+    target = str(tmp_path / "t")
+    kv(spark, [(0, "a")]).coalesce(1).write.parquet(target)
+    for i in range(1, 11):
+        st.merge(
+            kv(spark, [(i, "a")]).coalesce(1), target,
+            merge_condition="full.id == incremental.id",
+        )
+    assert sorted(r.id for r in st.read(target, "parquet").collect()) == list(range(11))
+    parts = [f for f in os.listdir(target) if f.startswith("part-")]
+    assert len(parts) == 1, parts
+
+
+def _plan_nodes(plan):
+    """(node, ancestors) for every node of a physical plan."""
+    def walk(node, above):
+        yield node, above
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i), above + [node])
+
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return list(walk(plan, []))
+
+
+def test_merge_rewrite_plan_is_exchange_free(spark, tmp_path):
+    """With a broadcastable source the rewrite has no Window, and no
+    Exchange sits between the target scan and the write in the rewrite
+    branch; the witness branch shuffles only the joined matches."""
+    target, source = str(tmp_path / "t"), str(tmp_path / "s")
+    spark.range(1000).selectExpr("id", "'a' AS value").write.parquet(target)
+    kv(spark, [(1, "x"), (5000, "y")]).write.parquet(source)
+    full, src = spark.read.parquet(target), spark.read.parquet(source)
+    result = _merge_rewrite(
+        full, src, "full.id = incremental.id", None, None, "incremental.value = 'D'"
+    )
+    nodes = _plan_nodes(result._jdf.queryExecution().executedPlan())
+    kinds = [n.getClass().getSimpleName() for n, _ in nodes]
+    assert not [k for k in kinds if "Window" in k], kinds
+
+    def exchanges(above):
+        return [a.getClass().getSimpleName() for a in above
+                if "Exchange" in a.getClass().getSimpleName()]
+
+    target_scans = [
+        exchanges(above) for node, above in nodes
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+        and node.relation().location().rootPaths().head().toString().endswith("/t")
+    ]
+    # rewrite (no exchange), inserts (target broadcast), witness (one shuffle)
+    assert sorted(target_scans) == [
+        [], ["BroadcastExchangeExec"], ["ShuffleExchangeExec"]
+    ], target_scans
+
+
+# -- differential: the native merge against a replay of its contract -------
+#
+# Conditions are NULL-aware Python twins of the SQL ones (None is NULL).
+
+
+def _eq(a, b):
+    return None if a is None or b is None else a == b
+
+
+def _cmp(a, b, op):
+    return None if a is None or b is None else op(a, b)
+
+
+def _and(*xs):
+    if any(x is False for x in xs):
+        return False
+    return None if any(x is None for x in xs) else True
+
+
+def _op_is(flag):
+    return lambda t, s: _eq(s["op"], flag)
+
+
+_BY_KEY = ("full.k = incremental.k", lambda t, s: _eq(t["k"], s["k"]))
+
+# name → (merge, update, insert, delete); each a (sql, twin) pair, a bool
+# (the SQL literal) or None (the default)
+MERGE_CONFIGS = {
+    "upsert": (_BY_KEY, None, None, None),
+    "delete": (_BY_KEY, None, None, ("incremental.op = 'D'", _op_is("D"))),
+    "update_both_sides": (
+        _BY_KEY,
+        ("incremental.v > full.v", lambda t, s: _cmp(s["v"], t["v"], lambda a, b: a > b)),
+        None, None,
+    ),
+    "update_delete_insert": (
+        _BY_KEY,
+        ("incremental.op = 'U'", _op_is("U")),
+        ("incremental.op = 'I'", lambda t, s: _eq(s["op"], "I")),
+        ("incremental.op = 'D'", _op_is("D")),
+    ),
+    "non_equi": (
+        (
+            "full.k <= incremental.k AND full.k + 1 >= incremental.k",
+            lambda t, s: _and(
+                _cmp(t["k"], s["k"], lambda a, b: a <= b),
+                None if t["k"] is None or s["k"] is None else t["k"] + 1 >= s["k"],
+            ),
+        ),
+        None, None, None,
+    ),
+    "no_update_with_delete": (
+        _BY_KEY, False, None, ("incremental.op = 'D'", _op_is("D")),
+    ),
+}
+
+
+def _twin(clause, default):
+    if clause is None or isinstance(clause, bool):
+        value = default if clause is None else clause
+        return lambda t, s: value
+    return clause[1]
+
+
+def _replay(target, source, config):
+    """The contract documented in BasicStorage.merge, row by row: a
+    matched clause applies when its condition is true (NULL does not
+    fire), delete before update, more than one applying source row per
+    target row raises, unmatched source rows insert under the insert
+    condition. None stands for the ValueError."""
+    merge, update, insert, delete = config
+    on = merge[1]
+    upd, ins, dele = _twin(update, True), _twin(insert, True), _twin(delete, False)
+    out = []
+    for t in target:
+        hits = [s for s in source
+                if on(t, s) is True and (dele(t, s) is True or upd(t, s) is True)]
+        if len(hits) > 1:
+            return None
+        if not hits:
+            out.append(t)
+        elif dele(t, hits[0]) is not True:
+            out.append(hits[0])
+    out += [s for s in source
+            if not any(on(t, s) is True for t in target) and ins(None, s) is True]
+    return sorted((tuple(r.values()) for r in out), key=repr)
+
+
+def _random_rows(rng, n, keys, unique):
+    picks = rng.sample(keys, n) if unique else [rng.choice(keys) for _ in range(n)]
+    return [
+        {
+            "k": None if not unique and rng.random() < 0.1 else k,
+            "v": None if rng.random() < 0.2 else rng.randrange(10),
+            "op": rng.choice(["U", "D", "I", None]),
+        }
+        for k in picks
+    ]
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "no_broadcast"])
+@pytest.mark.parametrize("config", sorted(MERGE_CONFIGS))
+@pytest.mark.parametrize("seed", range(4))
+def test_merge_matches_contract_replay(spark, st, tmp_path, config, broadcast, seed):
+    rng = random.Random(f"{config}-{seed}")
+    target_rows = _random_rows(rng, rng.randrange(1, 21), list(range(20)), unique=True)
+    source_rows = _random_rows(rng, rng.randrange(5, 16), list(range(25)), unique=False)
+    schema = "k int, v int, op string"
+    target, source = str(tmp_path / "t"), str(tmp_path / "s")
+    spark.createDataFrame([tuple(r.values()) for r in target_rows], schema) \
+        .write.parquet(target)
+    spark.createDataFrame([tuple(r.values()) for r in source_rows], schema) \
+        .write.parquet(source)
+
+    def sql(clause):
+        return clause if clause is None or isinstance(clause, bool) else clause[0]
+
+    merge, update, insert, delete = MERGE_CONFIGS[config]
+    clauses = dict(
+        merge_condition=merge[0], update_condition=sql(update),
+        insert_condition=sql(insert), delete_condition=sql(delete),
+    )
+    expected = _replay(target_rows, source_rows, MERGE_CONFIGS[config])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    if not broadcast:
+        spark.conf.set(key, "-1")
+    try:
+        if expected is None:
+            with pytest.raises(ValueError, match="Multiple source rows"):
+                st.merge(spark.read.parquet(source), target, **clauses)
+            return
+        st.merge(spark.read.parquet(source), target, **clauses)
+    finally:
+        spark.conf.set(key, before)
+    got = sorted((tuple(r) for r in spark.read.parquet(target).collect()), key=repr)
+    assert got == expected
