@@ -311,7 +311,7 @@ def make_silver_decontaminated(lake: str) -> ETL:
 
     @etl(src, out)
     def decontaminate(docs: DataFrame) -> DataFrame:
-        split = docs.withColumn("split_bucket", _bucket(F.col("doc_id"), "split:"))
+        split = docs.withColumn("split_bucket", _bucket("doc_id", "split:"))
         sh = split.withColumn("t", F.expr(_TOKENS)).filter(
             F.size("t") >= 3
         ).select("doc_id", "split_bucket", F.explode(F.expr(_SHINGLES_T)).alias("shingle"))
@@ -355,7 +355,7 @@ def make_silver_sampled(lake: str) -> ETL:
         return (
             docs.join(F.broadcast(rates), "source")
             .filter(
-                _bucket(F.col("doc_id"), "temp:")
+                _bucket("doc_id", "temp:")
                 < F.floor(F.col("keep_rate") * 1000).cast("long")
             )
             .select(

@@ -190,14 +190,12 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # excluded by the oracle's COUNT(DISTINCT ...) and by the HLL sketch
     # alike — count(1) would put "exact" one above both on dirty data.
     return d.agg(
-        F.count("o_custkey").alias("exact_customers"),
-        F.approx_count_distinct("o_custkey").alias("approx"),
-    ).select(
+        F.expr("count(o_custkey) AS exact_customers"),
+        F.expr("approx_count_distinct(o_custkey) AS approx"),
+    ).selectExpr(
         "exact_customers",
-        (
-            F.abs(F.col("approx") - F.col("exact_customers"))
-            <= 0.15 * F.col("exact_customers")
-        ).alias("approx_within_bound"),
+        "abs(approx - exact_customers) <= exact_customers * 0.15D"
+        " AS approx_within_bound",
     )
 
 
@@ -297,10 +295,10 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape — BENCH q1 (BASELINE.md)."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
+    charge = f"{disc_price} * (l_tax + 1)"
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        li.filter("l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity").alias("sum_qty"),
@@ -310,7 +308,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("l_quantity").alias("avg_qty"),
             davg("l_extendedprice").alias("avg_price"),
             davg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+            F.expr("count(1) AS count_order"),
         )
     )
 
@@ -725,9 +723,7 @@ def agg_q6_selective(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24.0)
         )
         .agg(
-            dsum(F.col("l_extendedprice") * F.col("l_discount")).alias(
-                "revenue"
-            ),
+            dsum("l_extendedprice * l_discount").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -1353,7 +1349,7 @@ def agg_ab_test_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("converted"),
         )
         .select(
-            (hash_bucket(F.col("user_id"), _AB_SALT) % 2)
+            (hash_bucket("user_id", _AB_SALT) % 2)
             .cast("int")
             .alias("variant"),
             "exposed",
@@ -1517,18 +1513,12 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "w",
         F.when(
-            hash_bucket(
-                F.concat_ws(":", F.col("event_id"), F.col("b")),
-                _BOOT_SALT,
-            )
+            hash_bucket("concat_ws(':', event_id, b)", _BOOT_SALT)
             < 250,
             F.lit(0),
         )
         .when(
-            hash_bucket(
-                F.concat_ws(":", F.col("event_id"), F.col("b")),
-                _BOOT_SALT,
-            )
+            hash_bucket("concat_ws(':', event_id, b)", _BOOT_SALT)
             < 750,
             F.lit(1),
         )
@@ -1669,7 +1659,7 @@ def agg_ab_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rev_u"),
         )
         .select(
-            (hash_bucket(F.col("user_id"), _AB_SALT) % 2)
+            (hash_bucket("user_id", _AB_SALT) % 2)
             .cast("int")
             .alias("variant"),
             "exposed",

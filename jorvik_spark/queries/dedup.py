@@ -1041,7 +1041,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed by (band, key).
     """
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", hash_bucket(F.col("doc_id"), _INCR_SALT).alias("bkt")
+        "doc_id", hash_bucket("doc_id", _INCR_SALT).alias("bkt")
     )
     bands = _mh_bands(spark, sf_dir)
     hist = bands.join(

@@ -210,20 +210,21 @@ def join_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (no global sort materialization).
     """
     c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
+        "c_mktsegment = 'BUILDING'"
     )
     o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
+        "o_orderdate < CAST('1998-01-01' AS TIMESTAMP)"
     )
     li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
+        "l_shipdate > CAST('1998-01-01' AS TIMESTAMP)"
     )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    # Sort keys stay Columns: F.expr("revenue DESC") parses as the alias
+    # `revenue AS DESC` and sorts ascending.
     return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
+        li.join(o, F.expr("l_orderkey = o_orderkey"))
+        .join(c, F.expr("o_custkey = c_custkey"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(dsum(revenue).alias("revenue"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)").alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
@@ -258,12 +259,11 @@ def join_q5_regional(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
+        "o_orderdate >= CAST('1996-01-01' AS TIMESTAMP)"
+        " AND o_orderdate < CAST('1998-01-01' AS TIMESTAMP)"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    dim = F.broadcast(n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
+    dim = F.broadcast(n.join(F.broadcast(r), F.expr("n_regionkey = r_regionkey")))
     # Join order deliberately keeps lineitem on the stream side of ALL
     # three joins: o/c/dim each broadcast (AQE for the first two, hinted
     # for the dims), so the three probes fuse into ONE whole-stage
@@ -274,11 +274,11 @@ def join_q5_regional(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while the fused-probe pipeline streams immediately (A/B'd at
     # sf0.1; revisit only when orders outgrows the broadcast threshold).
     return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(dim, c.c_nationkey == F.col("n_nationkey"))
+        li.join(o, F.expr("l_orderkey = o_orderkey"))
+        .join(c, F.expr("o_custkey = c_custkey"))
+        .join(dim, F.expr("c_nationkey = n_nationkey"))
         .groupBy("n_name")
-        .agg(dsum(revenue).alias("revenue"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)").alias("revenue"))
         .orderBy(F.desc("revenue"), "n_name")
     )
 
@@ -586,12 +586,11 @@ def join_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_name", "c_acctbal")
-        .agg(dsum(revenue).alias("revenue"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)").alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal")
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -684,7 +683,8 @@ def join_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp"))
     )
     p = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev_sql = "l_extendedprice * (1 - l_discount)"
+    rev = F.expr(rev_sql)
     promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
     # Quantized units accumulate in DECIMAL(38,0) (int64 overflows past
     # 9.2e12 value units per group — one 100 TB revenue month); the share
@@ -698,7 +698,7 @@ def join_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             q(promo_rev).alias("_promo_q"),
             q(rev).alias("_all_q"),
-            dsum(rev).alias("total_revenue"),
+            dsum(rev_sql).alias("total_revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .select(
@@ -931,9 +931,7 @@ def join_q19_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(p, F.col("l.l_partkey") == F.col("p.p_partkey"))
         .filter(pred)
         .agg(
-            dsum(
-                F.col("l.l_extendedprice") * (1 - F.col("l.l_discount"))
-            ).alias("revenue"),
+            dsum("l.l_extendedprice * (1 - l.l_discount)").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -1164,7 +1162,6 @@ def join_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem")
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -1185,7 +1182,7 @@ def join_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
         .agg(
-            dsum(volume).alias("revenue"),
+            dsum("l_extendedprice * (1 - l_discount)").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
@@ -1252,7 +1249,8 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    volume_sql = "l_extendedprice * (1 - l_discount)"
+    volume = F.expr(volume_sql)
     target_vol = F.when(
         F.col("supp_nation") == "NATION_9", volume
     ).otherwise(F.lit(0.0))
@@ -1268,7 +1266,7 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             q(target_vol).alias("_target_q"),
             q(volume).alias("_all_q"),
-            dsum(volume).alias("total_revenue"),
+            dsum(volume_sql).alias("total_revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .select(
@@ -1334,8 +1332,8 @@ def join_q9_profit_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem")
     amount = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - 0.5 * F.col("p_retailprice") * F.col("l_quantity")
+        "l_extendedprice * (1 - l_discount)"
+        " - p_retailprice * 0.5D * l_quantity"
     )
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)

@@ -9,26 +9,35 @@ Numeric-determinism convention
 Floating-point SUM/AVG are order-dependent, and the driver compares Spark
 vs DuckDB results with a value hash. All double aggregations in registered
 queries therefore go through :func:`dsum` / :func:`davg`, which quantize
-each input to a 1e-6 fixed-point LONG (``floor(x * 1e6 + 0.5)``), sum
+each input to a 1e-6 fixed-point BIGINT (``floor(x * 1e6 + 0.5)``), sum
 exactly in integer arithmetic, and unscale once at the end — bitwise
-identical on both engines regardless of partitioning or plan shape. The
-floor form keeps the whole expression primitive inside whole-stage codegen
-(~2× faster than F.round, which boxes through BigDecimal; ~4.5× faster
-than the round-1 DECIMAL(25,6) approach). The oracle SQL uses the mirrored
-:func:`sql_dsum` / :func:`sql_davg` templates.
+identical on both engines regardless of partitioning or plan shape.
 
-Bounds: exact while ``Σ|x| < 9.2e12`` per group (long overflow headroom) and
-``|x| < 2^53/1e6`` per value; both hold for TPC-H-ish money values at every
-test SF. This quantization exists *for cross-engine hash parity in the test
-harness*; at 100 TB production scale the idiomatic plan is a plain
-``F.sum`` over doubles (fastest path, no parity constraint) or DECIMAL for
-exact accounting — swap `dsum = lambda c: F.sum(c)` and nothing else moves.
+One template
+------------
+``dsum``, ``davg`` and ``hash_bucket`` (the md5 sampling bucket) are each
+ONE SQL-text template, rendered per dialect: :func:`dsum` etc. return a
+single ``F.expr`` over the Spark rendering, and :func:`sql_dsum` etc.
+return the DuckDB rendering the oracle SQL embeds, so the engine and its
+oracle cannot drift. Callers pass SQL text, never Columns: building an
+aggregate is then one parse on the JVM instead of ~17 py4j Column calls,
+which dominated the build of an aggregate-heavy query. The dialects
+differ only in literal spelling, the exact-sum accumulator (Spark's hi/lo
+long split vs DuckDB's HUGEINT SUM), the string type and the
+hex-to-BIGINT step; see ``_SPARK``/``_DUCKDB``.
+
+Bounds: the sum is exact at any group total (see ``_SPARK``) while
+``|x| < 2^53/1e6`` per value, which holds for TPC-H-ish money values at
+every test SF. This quantization exists *for cross-engine hash parity in
+the test harness*; at 100 TB production scale the idiomatic plan is a
+plain ``SUM`` over doubles (fastest path, no parity constraint) or DECIMAL
+for exact accounting — swap the Spark ``exact_sum`` and nothing else moves.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Optional
+from typing import NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,84 +47,103 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# 1e-6 fixed-point quantum for deterministic double aggregation.
-_SCALE = 1_000_000
+
+class _Dialect(NamedTuple):
+    """How one engine spells the pieces of the expression template."""
+
+    scale: str  # 1e6 as a DOUBLE literal
+    half: str  # 0.5 as a DOUBLE literal
+    unscale: str  # the final divisor 1e6
+    exact_sum: str  # Σ of the BIGINT units {0}, exact past the int64 ceiling
+    string: str  # the string type a key is cast to before hashing
+    hex8: str  # 8 hex digits {0} → BIGINT
 
 
-def _q(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    # floor(x*1e6 + 0.5): half-up (toward +inf) quantization. Unlike
-    # F.round (BigDecimal.setScale — boxes every value, ~2x slower in the
-    # agg hot loop), floor stays a primitive Math.floor inside whole-stage
-    # codegen. The same IEEE-double expression is mirrored verbatim in
-    # sql_dsum/sql_davg, so both engines quantize bitwise identically —
-    # including negative inputs (half-up, not half-away-from-zero).
-    return F.floor(c * _SCALE + F.lit(0.5))
+# Spark SQL reads an unsuffixed ``1000000.0`` or ``0.5`` as a DECIMAL,
+# which would silently turn every result DECIMAL; the ``D`` suffix keeps
+# them DOUBLE. Spark's exact sum splits the units hi/lo around bit 20
+# (an arithmetic shift is exact floor division by 2^20, negatives
+# included) and sums TWO longs, recombined once per group in
+# DECIMAL(38,0): a plain int64 unit sum overflows at 9.2e12 currency
+# units per group, where the oracle's HUGEINT SUM stays exact, while a
+# DECIMAL(38,0) accumulator made q1's aggregation ~2× slower than a long
+# sum (the hi/lo split ~1.5×, values bit-identical).
+_SPARK = _Dialect(
+    scale="1000000D",
+    half="0.5D",
+    unscale="1000000D",
+    exact_sum=(
+        "(CAST(SUM(shiftright({0}, 20)) AS DECIMAL(38,0)) * 1048576"
+        " + SUM({0} - shiftleft(shiftright({0}, 20), 20)))"
+    ),
+    string="STRING",
+    hex8="CAST(conv({0}, 16, 10) AS BIGINT)",
+)
+_DUCKDB = _Dialect(
+    scale="1000000",
+    half="0.5",
+    unscale="1000000.0",
+    exact_sum="SUM({0})",
+    string="VARCHAR",
+    hex8="('0x' || {0})::BIGINT",
+)
 
 
-# Overflow-proof accumulation: a group's value total of 9.2e12 currency
-# units overflows a plain int64 unit sum — reached by a single
-# 100 TB-scale revenue aggregate — where the oracle's HUGEINT SUM stays
-# exact (ANSI Spark fails the job, ANSI-off wraps silently; either
-# diverges). A DECIMAL(38,0) accumulator fixes it but costs ~2× in the
-# agg hot loop (measured on the q1 shape at sf0.1: 0.25 s → 0.54 s), so
-# the quantized long is split hi/lo around bit 20 per row (arithmetic
-# shift = exact floor division by 2^20, negatives included) and summed as
-# TWO long aggregates; the exact integer total is recombined per GROUP in
-# DECIMAL(38,0) — hi sums to ~Σvalue (ceiling 9.2e18 units of 2^20), lo
-# to < 2^20 × rows (ceiling ~8.8e12 rows per group) — both far past the
-# design point. Measured: 0.37 s on the same shape (vs 0.25 long /
-# 0.54 decimal), values bit-identical. The final /1e6 converts the exact
-# integer to double exactly as DuckDB's HUGEINT/1e6 does, preserving the
-# hash contract at any magnitude the conversion can express.
-def _sum_exact(x: Column) -> Column:
-    """Σx as DECIMAL(38,0), exact past the int64 ceiling, via hi/lo
-    long sums (x must be an integral column of quantized units)."""
-    hi = F.shiftright(x.cast("long"), 20)
-    lo = x.cast("long") - F.shiftleft(hi, 20)
-    return F.sum(hi).cast("decimal(38,0)") * (1 << 20) + F.sum(lo)
+def _units(expr: str, d: _Dialect) -> str:
+    # floor(x*1e6 + 0.5): half-up (toward +inf) quantization to BIGINT
+    # units. Unlike round (BigDecimal.setScale, boxes every value, ~2×
+    # slower in the agg hot loop), floor stays a primitive Math.floor in
+    # whole-stage codegen, and both engines compute the same IEEE double
+    # expression, so they quantize bitwise identically, negatives too.
+    return f"CAST(floor(({expr}) * {d.scale} + {d.half}) AS BIGINT)"
 
 
-def dsum(col: str | Column) -> Column:
-    """Order-independent SUM of a double column (exact fixed-point internally)."""
-    return _sum_exact(_q(col)) / F.lit(float(_SCALE))
+def _dsum(expr: str, d: _Dialect) -> str:
+    return f"{d.exact_sum.format(_units(expr, d))} / {d.unscale}"
 
 
-def davg(col: str | Column) -> Column:
-    """Order-independent AVG: exact fixed-point sum divided by count."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _sum_exact(_q(c)) / F.lit(float(_SCALE)) / F.count(c)
+def _davg(expr: str, d: _Dialect) -> str:
+    return f"{_dsum(expr, d)} / COUNT({expr})"
 
 
-def hash_bucket(col: Column, salt: str) -> Column:
+def _hash_bucket(expr: str, salt: str, d: _Dialect) -> str:
+    digits = f"substr(md5('{salt}' || CAST({expr} AS {d.string})), 1, 8)"
+    return f"{d.hex8.format(digits)} % 1000"
+
+
+def dsum(expr: str) -> Column:
+    """Order-independent SUM of a double SQL expression (exact fixed-point
+    internally); a DOUBLE."""
+    return F.expr(_dsum(expr, _SPARK))
+
+
+def davg(expr: str) -> Column:
+    """Order-independent AVG: the exact fixed-point sum over COUNT."""
+    return F.expr(_davg(expr, _SPARK))
+
+
+def hash_bucket(expr: str, salt: str) -> Column:
     """Deterministic hash-mod bucket in [0, 1000): md5 of the salted
-    stringified key, first 8 hex digits, mod 1000. THE reproducible
-    sampling/split primitive — shared by every sampler and the
-    incremental-dedup history split so the scheme can never diverge
-    between modules. Mirrored exactly by :func:`sql_hash_bucket`."""
-    key = F.concat(F.lit(salt), col.cast("string"))
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long") % 1000
+    stringified key, first 8 hex digits, mod 1000; a BIGINT. THE
+    reproducible sampling/split primitive — shared by every sampler and
+    the incremental-dedup history split so the scheme can never diverge
+    between modules."""
+    return F.expr(_hash_bucket(expr, salt, _SPARK))
+
+
+def sql_dsum(expr: str) -> str:
+    """DuckDB twin of :func:`dsum`."""
+    return _dsum(expr, _DUCKDB)
+
+
+def sql_davg(expr: str) -> str:
+    """DuckDB twin of :func:`davg`."""
+    return _davg(expr, _DUCKDB)
 
 
 def sql_hash_bucket(expr: str, salt: str) -> str:
     """DuckDB twin of :func:`hash_bucket`."""
-    return (
-        f"('0x' || substr(md5('{salt}' || CAST({expr} AS VARCHAR)), 1, 8))"
-        "::BIGINT % 1000"
-    )
-
-
-def sql_dsum(expr: str) -> str:
-    return (
-        f"SUM(CAST(floor(({expr}) * 1000000 + 0.5) AS BIGINT)) / 1000000.0"
-    )
-
-
-def sql_davg(expr: str) -> str:
-    return (
-        f"SUM(CAST(floor(({expr}) * 1000000 + 0.5) AS BIGINT)) / 1000000.0"
-        f" / COUNT({expr})"
-    )
+    return _hash_bucket(expr, salt, _DUCKDB)
 
 
 # (key, session) → persisted DataFrame. Spark's CacheManager already

@@ -79,9 +79,9 @@ def sample_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         F.lit(_DEFAULT_RATE),
     )
-    split_bucket = _bucket(F.col("doc_id"), "split:")
+    split_bucket = _bucket("doc_id", "split:")
     return (
-        docs.withColumn("mix_bucket", _bucket(F.col("doc_id"), "mix:"))
+        docs.withColumn("mix_bucket", _bucket("doc_id", "mix:"))
         .withColumn("split_bucket", split_bucket)
         .filter(F.col("mix_bucket") < rate)
         .select(
@@ -125,7 +125,7 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-deduped so the join build input is minimal.
     """
     toks = _tokenized_docs(spark, sf_dir).withColumn(
-        "split_bucket", _bucket(F.col("doc_id"), "split:")
+        "split_bucket", _bucket("doc_id", "split:")
     )
     sh = toks.filter(F.size("t") >= 3).select(
         "doc_id", "split_bucket", F.expr(_SHINGLES_T).alias("s")
@@ -279,7 +279,7 @@ def export_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keyed = docs.select(
         "doc_id",
-        (_bucket(F.col("doc_id"), "shard:") % _N_SHARDS).alias("shard"),
+        (_bucket("doc_id", "shard:") % _N_SHARDS).alias("shard"),
         order_key.alias("order_key"),
     )
     w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
@@ -382,7 +382,7 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.join(F.broadcast(rates), "source")
         .filter(
-            _bucket(F.col("doc_id"), "temp:")
+            _bucket("doc_id", "temp:")
             < F.floor(F.col("keep_rate") * 1000).cast("long")
         )
         .select("doc_id", "source", F.round("keep_rate", 6).alias("keep_rate"))
@@ -438,7 +438,7 @@ def sample_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.join(F.broadcast(rates), ["source", "lang"])
         .filter(
-            _bucket(F.col("doc_id"), "reweight:")
+            _bucket("doc_id", "reweight:")
             < F.floor(F.col("keep_rate") * 1000).cast("long")
         )
         .select(
@@ -526,7 +526,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(1)).
     """
     toks = _tokenized_docs(spark, sf_dir).withColumn(
-        "split_bucket", _bucket(F.col("doc_id"), "split:")
+        "split_bucket", _bucket("doc_id", "split:")
     )
     sh = toks.filter(F.size("t") >= 3).select(
         "doc_id", "split_bucket", F.expr(_SHINGLES_T).alias("s")
@@ -754,7 +754,7 @@ def export_length_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = toks.select(
         "n_tokens",
         cap.cast("long").alias("bucket_cap"),
-        (_bucket(F.col("doc_id"), "lb:") % _LB_SHARDS).alias("shard"),
+        (_bucket("doc_id", "lb:") % _LB_SHARDS).alias("shard"),
     )
     return bucketed.groupBy("bucket_cap", "shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -929,7 +929,7 @@ def decontaminate_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     no doc×doc comparison exists.
     """
     toks = _tokenized_docs(spark, sf_dir).withColumn(
-        "split_bucket", _bucket(F.col("doc_id"), "split:")
+        "split_bucket", _bucket("doc_id", "split:")
     )
     sh = toks.filter(F.size("t") >= 3).select(
         "doc_id", "split_bucket", F.expr(_SHINGLES_T).alias("s")
@@ -1794,7 +1794,7 @@ def sample_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        (_bucket(F.col("source"), "fold:") % _KFOLD_K).alias("fold"),
+        (_bucket("source", "fold:") % _KFOLD_K).alias("fold"),
     )
     return (
         folds.groupBy("fold")
@@ -1966,7 +1966,7 @@ def sample_lm_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.crossJoin(ext)
         .select("doc_id", "fam", rate)
-        .filter(_bucket(F.col("doc_id"), "lmimp:") < F.col("rate_pm"))
+        .filter(_bucket("doc_id", "lmimp:") < F.col("rate_pm"))
         .select(
             "doc_id",
             F.col("fam").alias("familiarity_ppm"),
@@ -2111,7 +2111,7 @@ def decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jorvik_spark.queries.dedup import _mh_bands
 
     bands = _mh_bands(spark, sf_dir).withColumn(
-        "split_bucket", _bucket(F.col("doc_id"), "split:")
+        "split_bucket", _bucket("doc_id", "split:")
     )
     train_keys = (
         bands.filter(F.col("split_bucket") < _VAL_LO)

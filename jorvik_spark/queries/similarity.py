@@ -1546,7 +1546,7 @@ def embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
             F.round(mean, 6).alias("mean"),
             F.round(
-                dsum(F.col("x") * F.col("x")) / F.count(F.lit(1))
+                dsum("x * x") / F.count(F.lit(1))
                 - mean * mean,
                 6,
             ).alias("variance"),
@@ -1602,7 +1602,7 @@ def embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = ex.groupBy("pos").agg(
         mean.alias("mean"),
         (
-            dsum(F.col("x") * F.col("x")) / F.count(F.lit(1)) - mean * mean
+            dsum("x * x") / F.count(F.lit(1)) - mean * mean
         ).alias("variance"),
     )
     return ex.join(F.broadcast(stats), "pos").select(
@@ -2214,7 +2214,7 @@ def simsearch_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _vec_double(load_table(spark, sf_dir, "embeddings"))
         .withColumn("n2", F.expr(_DOT.format(a="v", b="v")))
         .filter(F.col("n2") > 0)
-        .withColumn("bkt", hash_bucket(F.col("vec_id"), _IIVF_SALT))
+        .withColumn("bkt", hash_bucket("vec_id", _IIVF_SALT))
     )
     hist = emb.filter(F.col("bkt") < _IIVF_HIST_LT)
     incoming = emb.filter(F.col("bkt") >= _IIVF_HIST_LT)
@@ -2798,7 +2798,7 @@ def embed_centroid_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            (hash_bucket(F.col("vec_id"), _SPLIT_DRIFT_SALT) % 2)
+            (hash_bucket("vec_id", _SPLIT_DRIFT_SALT) % 2)
             .cast("int")
             .alias("half"),
             F.expr(

@@ -1378,7 +1378,7 @@ def corpus_quality_rank_correlation(
                 "sample_permille must be in [1, 999]; use None for exact"
             )
         docs = docs.filter(
-            hash_bucket(F.col("doc_id"), "spearman:") < sample_permille
+            hash_bucket("doc_id", "spearman:") < sample_permille
         )
     j = scored.join(docs, "doc_id")
     wf = Window.partitionBy("source").orderBy("fam", "doc_id")

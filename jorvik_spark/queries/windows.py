@@ -55,19 +55,16 @@ _DEC = "decimal(25,6)"
 )
 def window_rank_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BENCH w1 — lag + row_number per user, top-3 most recent events."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.select(
-            "user_id",
-            "event_id",
-            "ts",
-            "value",
-            F.lag("value").over(w).alias("prev_value"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-    )
+    ev = load_table(spark, sf_dir, "events").filter("ts IS NOT NULL")
+    w = "OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC)"
+    return ev.selectExpr(
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        f"lag(value) {w} AS prev_value",
+        f"row_number() {w} AS rn",
+    ).filter("rn <= 3")
 
 
 @query(
@@ -263,15 +260,15 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     jorvik_spark.streaming — identical window expression, so this oracle
     check validates the streaming semantics too.
     """
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter("ts IS NOT NULL")
     return (
-        ev.groupBy(F.window("ts", "1 hour"), "event_type")
+        ev.groupBy(F.expr("window(ts, '1 hour') AS window"), "event_type")
         .agg(
-            F.count(F.lit(1)).alias("n_events"),
+            F.expr("count(1) AS n_events"),
             dsum("value").alias("sum_value"),
         )
-        .select(
-            F.col("window.start").alias("window_start"),
+        .selectExpr(
+            "window.start AS window_start",
             "event_type",
             "n_events",
             "sum_value",

@@ -14,6 +14,16 @@ Defaults chosen for scale (SURVEY.md §4/§7):
     nanosecond timestamps which Spark 4.x otherwise refuses to read
     (FIXTURES.md); readers normalize to microsecond timestamps.
   * Arrow enabled for any pandas-UDF path.
+  * ``spark.sql.codegen.cache.maxEntries=1024``. Spark keeps ONE compiled-
+    class cache per JVM (``CodeGenerator``), a Guava cache whose bound is
+    enforced per segment: with 4 segments the default 100 holds about 25
+    classes each, so the 87 classes the six headline shapes generate (41
+    for the ETL write path) can already evict, depending on the order
+    the shapes run; one measured order recompiled ~10 classes with
+    Janino on every pass. 1024 is >10× the largest working set measured.
+    The cache is sized from the conf when the class first loads, so the
+    value only takes effect through :func:`get_session`'s builder; on a
+    host-built session it is a static conf and stays the host's.
 """
 
 from __future__ import annotations
@@ -38,6 +48,8 @@ ENGINE_CONFS: dict[str, str] = {
     # local[N] has no network shuffle; on a real cluster this would be
     # sized ~2-3x total executor cores (or left to AQE coalescing).
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    # Static: read once per JVM when the codegen cache is built (above).
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 
@@ -60,11 +72,13 @@ def get_session(app_name: str = "jorvik_spark", master: str | None = None) -> Sp
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply engine confs that are runtime-settable onto an existing session.
 
-    Used when the session is provided by a host (e.g. the verification
-    driver) whose builder we do not control. Static confs are skipped, and
-    parallelism knobs the host may have tuned deliberately are never
-    overridden (we only fill them in when unset-or-default is detectable
-    isn't possible, so we simply leave them alone).
+    Used when the session is provided by a host (e.g. a notebook or a
+    verification harness) whose builder we do not control. Static confs such as
+    ``spark.sql.codegen.cache.maxEntries`` cannot change on a live session
+    and are skipped: the host keeps its own value. Parallelism knobs the
+    host may have tuned deliberately (``spark.sql.shuffle.partitions``)
+    are left alone, since a live session cannot tell a deliberate value
+    from the default.
     """
     _host_tuned = {"spark.sql.shuffle.partitions"}
     for k, v in ENGINE_CONFS.items():

@@ -17,20 +17,25 @@ import os
 import sys
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from jorvik_spark.session import get_session  # noqa: E402
 
 
 def main() -> None:
     rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    # Absolute: Spark reports absolute file paths (binaryFile scans), and
+    # the {sf_dir} oracles echo this value back.
+    sf_dir = os.path.abspath(
+        sys.argv[2] if len(sys.argv) > 2 else os.path.join(_ROOT, "testdata", "sf0.01")
+    )
     os.environ["SPARK_GRAFT_TEST_SF"] = sf_dir
 
     import __spark_entry__ as entrymod
     from tests.oracle_utils import compare, duck_con
 
-    spark = get_session("jorvik_spark_local_parity", master="local[32]")
+    spark = get_session("jorvik_spark_local_parity")
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     con = duck_con(sf_dir)
     report = {}
@@ -53,10 +58,7 @@ def main() -> None:
             }
             traceback.print_exc()
         print(json.dumps({name: report[name]}), flush=True)
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        f"LOCAL_PARITY_r{rnd}.json",
-    )
+    out = os.path.join(_ROOT, f"LOCAL_PARITY_r{rnd}.json")
     ok = sum(1 for r in report.values() if r["ok"])
     with open(out, "w") as f:
         json.dump(

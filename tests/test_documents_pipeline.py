@@ -160,7 +160,7 @@ def test_decontaminated_is_train_only_and_clean(spark, full_lake):
 
     dec = spark.read.parquet(f"{full_lake}/silver/decontaminated")
     assert (
-        dec.filter(hash_bucket(F.col("doc_id"), "split:") >= pipe._VAL_LO).count()
+        dec.filter(hash_bucket("doc_id", "split:") >= pipe._VAL_LO).count()
         == 0
     )
     near = spark.read.parquet(f"{full_lake}/silver/near_dedup")
@@ -169,7 +169,7 @@ def test_decontaminated_is_train_only_and_clean(spark, full_lake):
         .filter(F.size("t") >= 3)
         .select(
             "doc_id",
-            hash_bucket(F.col("doc_id"), "split:").alias("b"),
+            hash_bucket("doc_id", "split:").alias("b"),
             F.explode(F.expr(_SHINGLES_T)).alias("shingle"),
         )
     )

@@ -12,7 +12,10 @@ import __spark_entry__ as entrymod
 from tests.oracle_utils import duck_con, compare
 from jorvik_spark.tables import default_sf_dir
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", default_sf_dir())
+# Absolute, because Spark reports the absolute path of every file a
+# binaryFile scan reads while the {sf_dir} oracles echo this value back:
+# a relative SPARK_GRAFT_TEST_SF (testdata/sf0.01) would fail those rows.
+SF_DIR = os.path.abspath(os.environ.get("SPARK_GRAFT_TEST_SF", default_sf_dir()))
 # Pin the {sf_dir} oracle placeholder (binaryFile-scan oracles) to the SF
 # this suite runs at — the driver resolves it to sf0.01.
 os.environ["SPARK_GRAFT_TEST_SF"] = SF_DIR

@@ -122,6 +122,37 @@ def test_q5_degrades_to_smj_past_broadcast_threshold(spark):
     assert "BroadcastHashJoin" in plan  # the hinted ≤25-row dim build
 
 
+_HEADLINE_SHAPES = (
+    "agg_pricing_summary",
+    "join_q3_topk",
+    "join_q5_regional",
+    "window_rank_per_user",
+    "stream_tumbling_agg",
+    "agg_approx_distinct",
+)
+
+
+def test_headline_shapes_never_recompile(spark):
+    """Once warm, the six headline shapes generate no new Janino classes.
+
+    Spark keeps one compiled-class cache per JVM, bounded per Guava
+    segment; at its default of 100 entries the shapes' working set
+    evicts itself and every pass recompiles classes it compiled before.
+    ``get_session`` sizes the cache so the working set stays compiled."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    timer = metrics.METRIC_COMPILATION_TIME()
+
+    def run_all():
+        for name in _HEADLINE_SHAPES:
+            QUERIES[name](spark, SF_DIR).collect()
+
+    run_all()
+    before = timer.getCount()
+    run_all()
+    run_all()
+    assert timer.getCount() - before == 0
+
+
 def test_project_select_prunes_read_schema(spark):
     plan = _plan(spark, "project_select")
     assert "ReadSchema" in plan

@@ -20,6 +20,7 @@ import random
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -179,14 +180,14 @@ def test_isolation_path_roundtrip(spark, segments, folder, context):
 
 
 def test_fixed_point_quantization_cross_engine(spark):
-    """The dsum/davg quantization floor(x*1e6 + 0.5) must produce the
-    same LONG for the same IEEE double in Spark and DuckDB — including
-    half-boundary, negative, and subnormal-ish magnitudes. This is the
-    bitwise law the oracle hash parity of every money aggregation rests
-    on."""
+    """The dsum/davg quantization floor(x*1e6 + 0.5), rendered from the
+    one template for each engine, must produce the same BIGINT for the
+    same IEEE double in Spark and DuckDB — including half-boundary,
+    negative, and subnormal-ish magnitudes. This is the bitwise law the
+    oracle hash parity of every money aggregation rests on."""
     import duckdb
 
-    from jorvik_spark.queries.registry import _q
+    from jorvik_spark.queries.registry import _DUCKDB, _SPARK, _units
 
     vals = [
         0.0, -0.0, 1.5e-6, -1.5e-6, 0.5e-6, -0.5e-6,
@@ -197,13 +198,11 @@ def test_fixed_point_quantization_cross_engine(spark):
     ] + [x * 0.1 + 7e-7 for x in range(-50, 50)]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [
-        r.q for r in df.select(_q("x").alias("q")).collect()
+        r.q for r in df.select(F.expr(_units("x", _SPARK)).alias("q")).collect()
     ]
     con = duckdb.connect()
     want = [
-        con.execute(
-            "SELECT CAST(floor(? * 1000000 + 0.5) AS BIGINT)", [v]
-        ).fetchone()[0]
+        con.execute(f"SELECT {_units('?', _DUCKDB)}", [v]).fetchone()[0]
         for v in vals
     ]
     assert got == want, [
@@ -360,8 +359,6 @@ def test_cluster_size_histogram_law(spark, sizes):
     every group IS one component), the histogram over the computed
     labels must recover the multiset of planted sizes."""
     from collections import Counter
-
-    from pyspark.sql import functions as F
 
     from jorvik_spark.queries.dedup import bands_of_docs
 
@@ -538,8 +535,6 @@ def test_ppm_arithmetic_survives_corpus_scale_operands(spark):
     return the Python-exact integral quotient for operands past the
     int64 ceiling (tokens_removed ≈ 6e18 · 1e6 ≈ 6e24), where the old
     int64 forms overflowed (ANSI failure or silent wraparound)."""
-    from pyspark.sql import functions as F
-
     removed, total = 6_148_914_691_236_517_205, 9_223_372_036_854_775_783
     df = spark.createDataFrame(
         [(removed, total)], "tokens_removed long, tokens_total long"
@@ -563,29 +558,55 @@ def test_ppm_arithmetic_survives_corpus_scale_operands(spark):
 
 
 def test_dsum_exceeds_int64_unit_ceiling_and_matches_oracle(spark):
-    """registry.dsum accumulates quantized units in DECIMAL(38,0): two
-    rows of 9e12 currency units (9e18 quantized each) push the unit sum
-    to 1.8e19 — past int64, where the old accumulator overflowed — and
-    the result must still match DuckDB's HUGEINT-sum sql_dsum on the
-    same values bit-for-bit after the common /1e6 double conversion."""
+    """registry.dsum accumulates quantized units exactly: two rows of
+    ±9e12 currency units (±9e18 quantized each) push the unit sum to
+    ±1.8e19 — past int64, where a long accumulator overflows — and the
+    result must still match DuckDB's HUGEINT-sum sql_dsum of the same SQL
+    text bit-for-bit after the common /1e6 double conversion."""
     import duckdb
 
     from jorvik_spark.queries.registry import dsum, sql_dsum
 
     vals = [9.0e12, 9.0e12, 123.456789, -0.25]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    [got] = df.agg(dsum("x").alias("s")).collect()
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW t AS SELECT * FROM (VALUES "
         + ", ".join(f"({v!r})" for v in vals)
         + ") AS v(x)"
     )
-    [(want,)] = con.execute(
-        f"SELECT {sql_dsum('x')} FROM t"
-    ).fetchall()
-    assert got["s"] == want
-    assert abs(got["s"] - sum(vals)) < 1.0  # sanity: magnitude right
+    for expr, sign in (("x", 1), ("-x", -1)):
+        [got] = df.agg(dsum(expr).alias("s")).collect()
+        [(want,)] = con.execute(f"SELECT {sql_dsum(expr)} FROM t").fetchall()
+        assert got["s"] == want, expr
+        assert abs(got["s"] - sign * sum(vals)) < 1.0  # magnitude right
+
+
+def test_template_spark_result_types(spark):
+    """The Spark rendering of the template keeps the helpers' types:
+    DOUBLE for dsum/davg and BIGINT for hash_bucket. Spark SQL reads an
+    unsuffixed decimal literal as DECIMAL, so a template literal written
+    without its ``D`` suffix would silently turn every money aggregate
+    DECIMAL; the second half checks that this test would see it."""
+    from jorvik_spark.queries.registry import (
+        _SPARK,
+        _dsum,
+        davg,
+        dsum,
+        hash_bucket,
+    )
+
+    df = spark.createDataFrame([(1.25, 7)], "x double, k bigint")
+    aggs = df.agg(dsum("x * 2").alias("s"), davg("x").alias("a"))
+    assert aggs.dtypes == [("s", "double"), ("a", "double")]
+    assert aggs.first() == (2.5, 1.25)
+    bucket = df.select(hash_bucket("k", "salt:").alias("b"))
+    assert bucket.dtypes == [("b", "bigint")]
+    assert 0 <= bucket.first()["b"] < 1000
+
+    decimal_literal = _SPARK._replace(unscale="1000000.0")
+    mutated = df.agg(F.expr(_dsum("x", decimal_literal)).alias("s"))
+    assert mutated.dtypes[0][1].startswith("decimal")
 
 
 def test_local_checkpoint_release_private_api_still_resolves(spark):

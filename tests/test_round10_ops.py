@@ -61,7 +61,7 @@ def test_spearman_sample_is_length_unbiased(spark):
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "n_chars")
     full = docs.agg(F.avg("n_chars")).first()[0]
     samp = (
-        docs.filter(hash_bucket(F.col("doc_id"), "spearman:") < 500)
+        docs.filter(hash_bucket("doc_id", "spearman:") < 500)
         .agg(F.avg("n_chars"))
         .first()[0]
     )
@@ -240,7 +240,7 @@ def test_spearman_sampled_is_exact_statistic_over_subset(spark):
     }
     docs = (
         load_table(spark, SF_DIR, "documents")
-        .filter(hash_bucket(F.col("doc_id"), "spearman:") < permille)
+        .filter(hash_bucket("doc_id", "spearman:") < permille)
         .select("doc_id", "source", "n_chars")
         .collect()
     )

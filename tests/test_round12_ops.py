@@ -548,7 +548,7 @@ def test_incremental_ivf_sink_agrees_with_batch_query(spark, tmp_path):
     from jorvik_spark.streaming.sinks import incremental_ivf_sink
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
-        "bkt", hash_bucket(F.col("vec_id"), _IIVF_SALT)
+        "bkt", hash_bucket("vec_id", _IIVF_SALT)
     )
     src = str(tmp_path / "src")
     emb.filter(F.col("bkt") < _IIVF_HIST_LT).drop("bkt").coalesce(
