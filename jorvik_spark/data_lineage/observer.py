@@ -16,13 +16,16 @@ needs no watchdog; the reference's ``timeout`` argument is gone. Sources
 the optimizer would prune (``limit(0)``) and scalar-subquery sources are
 still recorded. Each source is logged once, in first-seen order.
 
-The log row is built as a one-row ``pyarrow.Table``, which Spark plans as
-a JVM ``LocalRelation``: appending it starts no Python worker and runs no
-RDD job (a Python list would plan to a ``LogicalRDD`` whose scan
-round-trips through a Python worker on every write). The row is still
-written by Spark's writer through the configured (isolated) storage, via a
-non-lineage-tracking storage (recursion guard, quirk Q10 kept), in Delta
-when available, else parquet.
+A streaming file source is recorded by its qualified path, like the batch
+scan of the same directory.
+
+The log row is built as a one-row ``pyarrow.Table`` and appended through a
+non-lineage-tracking storage (recursion guard, quirk Q10 kept), so an
+isolated run logs into its sandbox. A parquet log gets the row as one new
+file that the driver writes and publishes by rename
+(``append_table``): no Spark job runs. A Delta log (delta-spark
+importable) takes it through Spark's Delta writer, the only path that can
+commit to Delta.
 """
 
 from __future__ import annotations
@@ -53,9 +56,6 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
-# Hadoop's FileOutputCommitter writes a _SUCCESS file unless this is false.
-_MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-
 # In-memory leaves, named by the physical scan they plan into.
 _MEMORY_SCANS = {
     "LogicalRDD": "Scan ExistingRDD",
@@ -81,16 +81,27 @@ def _file_source(root_paths: list) -> str:
     return prefix[: prefix.rfind("/")]
 
 
-def _v2_source(leaf) -> str:
+def _v2_source(options, table) -> str:
     """A DataSource V2 relation (the Python data sources among them): its
     ``path`` option, its ``paths`` option (a JSON list), else the table's
     name."""
-    options = leaf.options()
     if options.containsKey("path"):
         return options.get("path")
     if options.containsKey("paths"):
         return _file_source(json.loads(options.get("paths")))
-    return leaf.table().name()
+    return table.name()
+
+
+def _stream_source(leaf) -> str:
+    """A V1 streaming source (the file streams): its ``path`` option,
+    qualified as the batch scan of that directory records it, else the
+    source's name."""
+    path = leaf.dataSource().options().get("path")
+    if not path.isDefined():
+        return leaf.sourceName()
+    from jorvik_spark.storage.basic import _hadoop_fs  # lazy: avoid circular import
+
+    return _hadoop_fs(SparkSession.getActiveSession(), path.get())[1].toString()
 
 
 def _leaf_source(leaf) -> str:
@@ -98,7 +109,11 @@ def _leaf_source(leaf) -> str:
     node_handler.py:49-69, on plan objects instead of explain text)."""
     kind = leaf.getClass().getSimpleName()
     if kind == "DataSourceV2Relation":
-        return _v2_source(leaf)
+        return _v2_source(leaf.options(), leaf.table())
+    if kind == "StreamingRelationV2":
+        return _v2_source(leaf.extraOptions(), leaf.table())
+    if kind == "StreamingRelation":
+        return _stream_source(leaf)
     if kind == "LogicalRelation":
         relation = leaf.relation()
         relation_kind = relation.getClass().getSimpleName()
@@ -133,8 +148,8 @@ class DataLineageLogger:
 
     def _create_lineage_log(
         self, data_sources: List[str], output_path: str, code_file_path: str
-    ) -> DataFrame:
-        """The one log row as an Arrow-backed ``LocalRelation``.
+    ):
+        """The one log row as a one-row ``pyarrow.Table``.
 
         ``observation_ts`` is an aware UTC instant: pyarrow stores an
         aware datetime with a non-zero offset as its wall-clock time, so
@@ -149,22 +164,20 @@ class DataLineageLogger:
             "transform_code_file": code_file_path,
             "observation_ts": datetime.now(timezone.utc),
         }
-        table = pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
-        return SparkSession.getActiveSession().createDataFrame(table, LINEAGE_SCHEMA)
+        return pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
 
-    def _store_lineage_log(self, lineage_log: DataFrame) -> None:
+    def _store_lineage_log(self, table) -> None:
+        """Append the row ``table`` to the log: by the driver for a
+        parquet log, by Spark's writer for a Delta log."""
         from jorvik_spark import storage  # lazy: avoid circular import
         from jorvik_spark.storage.basic import _MERGE_CREATE_FORMAT
 
         st = storage.configure(track_lineage=False)  # recursion guard (Q10)
-        # No _SUCCESS marker: an append into the existing log would rewrite
-        # it every time, and truncating a just-written file can stall. The
-        # option reaches only this job's Hadoop conf.
-        st.write(
-            lineage_log, self.lineage_log_path,
-            format=_MERGE_CREATE_FORMAT, mode="append",
-            options={_MARK_SUCCESS: "false"},
-        )
+        if _MERGE_CREATE_FORMAT == "delta":
+            log = SparkSession.getActiveSession().createDataFrame(table, LINEAGE_SCHEMA)
+            st.write(log, self.lineage_log_path, format="delta", mode="append")
+        else:
+            st.append_table(table, self.lineage_log_path)
 
     def update(self, df: DataFrame, output_path: str) -> None:
         """Capture and append one lineage row — BEST-EFFORT.

@@ -9,6 +9,30 @@ Appendix A): Q2 — streaming writes notify observers *after* ``start()``
 (the reference notifies before); Q3 — ``readStream`` accepts a declared
 schema and skips the batch-inference read when one is given.
 
+Parquet schemas from one footer
+-------------------------------
+Spark infers a parquet path's schema by running a one-task job that reads
+one footer. ``read`` reads that same footer on the driver instead: it
+lists the path through its own Hadoop FileSystem, skips what Spark's file
+index skips (``_x`` without ``=``, ``.x``, ``*._COPYING_``), takes the
+data file whose path sorts first (Spark's pick), and converts the footer
+with Spark's own converter under the live session conf. The read then
+passes that schema to ``.schema(...)``, so a storage read runs no job;
+partition columns are still discovered and appended by Spark. Spark's
+inference stays wherever the footer path could differ from it: read
+options, glob paths, ``mergeSchema`` or ``respectSummaryFiles`` on, a
+summary file or a stream sink's ``_spark_metadata`` log, a kept
+subdirectory not named ``k=v``, a partition column also stored in the
+files, no data file, more than
+``_FOOTER_LIST_LIMIT`` listed entries, or any JVM error (a missing path
+or a corrupt file then raises what Spark raises).
+
+Small appends from the driver
+-----------------------------
+``append_table`` appends a small ``pyarrow.Table`` (a lineage row) as one
+new parquet file that the driver writes and publishes by rename: no Spark
+job, no committer, no ``_SUCCESS``.
+
 MERGE without Delta
 -------------------
 This container has no delta-spark, so ``merge`` delegates to the Delta
@@ -42,9 +66,12 @@ write-amplified; the production recommendation is a transactional format
 
 from __future__ import annotations
 
+import uuid
 from typing import List, Union
+from urllib.parse import unquote
 
-from pyspark.errors import AnalysisException
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -72,6 +99,16 @@ _FID = "__jorvik_merge_fid__"
 # Distinctive raise_error payload for the in-plan multi-match guard;
 # merge() translates it back into the contract's ValueError.
 _MULTI_MATCH_MARKER = "JORVIK_MERGE_MULTI_MATCH"
+
+# A path with one of these is a glob (SparkHadoopUtil.isGlobPath).
+_GLOB_CHARS = frozenset("{}[]*?\\")
+# Parquet summary files: Spark's inference reads one before any data file.
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+# Each listed file costs a few gateway calls; past this many, Spark's own
+# inference (a JVM-side listing plus one task) is the cheaper path. The
+# cutoff comes from local-FS micro-timings; no benchmark workload lists this
+# many entries, and the per-entry cost on an object store is unmeasured.
+_FOOTER_LIST_LIMIT = 64
 
 
 def _check_format(format: str) -> None:
@@ -192,6 +229,98 @@ def _merge_rewrite(
     )
 
 
+def _listed(name: str) -> bool:
+    """Whether Spark's file index keeps a file or directory of this name
+    (HadoopFSUtils.shouldFilterOutPathName, negated)."""
+    if name.startswith(_SUMMARY_FILES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The data schema (a JVM ``StructType``) Spark's parquet inference
+    gives ``path``, read from one footer on the driver; ``None`` where
+    only that inference is right (see the module docstring)."""
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
+    if (
+        _GLOB_CHARS.intersection(path)
+        or sql_conf.isParquetSchemaMergingEnabled()
+        or sql_conf.isParquetSchemaRespectSummaries()
+    ):
+        return None
+    jvm = spark.sparkContext._jvm
+    HPath = jvm.org.apache.hadoop.fs.Path
+    try:
+        hconf = state.newHadoopConf()
+        root = HPath(path)
+        fs = root.getFileSystem(hconf)
+        root = fs.makeQualified(root)
+        if fs.exists(HPath(root, "_spark_metadata")):
+            return None
+        # listStatus, not listFiles: a located status loads permissions,
+        # which the local FileSystem does by forking a process per file.
+        # A file root lists as itself and is filtered by its own name, as
+        # in Spark's file index.
+        data, listed, pending = {}, 0, [(root, ())]
+        while pending:
+            directory, above = pending.pop()
+            statuses = fs.listStatus(directory)
+            listed += len(statuses)
+            if listed > _FOOTER_LIST_LIMIT:
+                return None
+            for status in statuses:
+                file = status.getPath()
+                name = file.getName()
+                if name in _SUMMARY_FILES:
+                    return None
+                if not _listed(name):
+                    continue
+                if status.isDirectory():
+                    # Without a partition column Spark reads only the
+                    # root's own files, and a plain directory beside
+                    # ``k=v`` ones is a conflict; either way only its
+                    # inference is right.
+                    if "=" not in name:
+                        return None
+                    pending.append((file, above + (name,)))
+                else:
+                    data[file.toString()] = (above, file)
+        if not data:
+            return None
+        above, first = data[min(data)]
+        # A partition column also stored in the files keeps its data-schema
+        # position only when Spark infers the schema itself.
+        keys = {unquote(d.split("=", 1)[0]).lower() for d in above}
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            hconf, first,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(first, footer),
+            parquet.ParquetToSparkSchemaConverter(sql_conf),
+        )
+        if keys and any(n.lower() in keys for n in schema.fieldNames()):
+            return None
+    except (Py4JError, PySparkException):
+        return None
+    return schema
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``path``'s Hadoop FileSystem, under the session's Hadoop conf (the
+    one Spark's file index uses, with any ``spark.conf`` Hadoop keys), and
+    ``path`` qualified by it."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return fs, fs.makeQualified(hpath)
+
+
 def _active_session() -> SparkSession:
     spark = SparkSession.getActiveSession()
     if spark is None:
@@ -209,9 +338,15 @@ class BasicStorage:
 
     def read(self, path: str, format: str = "parquet", options: dict = None) -> DataFrame:
         """Batch scan (reference basic.py:15-41). CSV defaults to
-        header=True + inferSchema=True."""
+        header=True + inferSchema=True. A parquet path without options
+        takes its schema from one footer read on the driver."""
         _check_format(format)
         spark = _active_session()
+        if format == "parquet" and not options and isinstance(path, str):
+            schema = _footer_schema(spark, path)
+            if schema is not None:
+                jreader = spark._jsparkSession.read().format(format).schema(schema)
+                return DataFrame(jreader.load(path), spark)
         options = dict(options or {})
         if format == "csv":
             options.setdefault("header", True)
@@ -242,6 +377,37 @@ class BasicStorage:
             writer = writer.partitionBy(partition_fields)
         writer.options(**options).mode(mode).save(path)
         self.notify_output_observers(df, path)
+
+    def append_table(self, table, path: str) -> None:
+        """Append ``table``, a small ``pyarrow.Table``, to the parquet table
+        at ``path`` as one new file that the driver writes and publishes:
+        no Spark job, no committer, no ``_SUCCESS``. The file is written
+        under a hidden temp name, which readers skip, then renamed into
+        place. Observers are not notified: there is no DataFrame."""
+        import pyarrow as pa  # lazy: loaded on the first append
+        import pyarrow.parquet as pq
+
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        spark = _active_session()
+        HPath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        fs, root = _hadoop_fs(spark, path)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = HPath(root, f".{name}.tmp")
+        try:
+            out = fs.create(tmp, False)
+            try:
+                out.write(buf.getvalue().to_pybytes())
+            finally:
+                out.close()
+            if not fs.rename(tmp, HPath(root, name)):
+                raise IOError(f"Could not publish {name} under {path}")
+        except Exception:
+            try:
+                fs.delete(tmp, False)  # best effort; the cause is re-raised
+            except Exception:  # noqa: BLE001
+                pass
+            raise
 
     # -- streaming --------------------------------------------------------
 

@@ -304,6 +304,14 @@ class IsolatedStorage:
             self._verbose_output(path, "Writing", format=format)
         self.storage.write(df, isolation_path, format, mode, partition_fields, options)
 
+    def append_table(self, table, path: str) -> None:
+        """Append a small ``pyarrow.Table`` to the isolated path, routed
+        exactly like :meth:`write`."""
+        isolation_path = self._create_isolation_path(path)
+        if self.verbose:
+            self._verbose_output(path, "Writing", format="parquet")
+        self.storage.append_table(table, isolation_path)
+
     def writeStream(
         self,
         df: DataFrame,

@@ -116,7 +116,11 @@ def table_source_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
     job, no footer read), via the path's own Hadoop FileSystem so the
     same call works on local/HDFS/S3A. Used to size-gate scale-dependent
     plan choices (e.g. the corpus-proportional memo tier) on a
-    deterministic, corpus-monotone signal."""
+    deterministic, corpus-monotone signal.
+
+    ``getContentSummary`` is a recursive listing, O(files) on an object
+    store; the result is cached, so it runs once per (sf_dir, table) per
+    process, and a table that changes later keeps its first size."""
     key = (sf_dir, name)
     hit = _SOURCE_BYTES_CACHE.get(key)
     if hit is not None:

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -12,3 +13,21 @@ from jorvik_spark.session import get_session  # noqa: E402
 def spark():
     s = get_session("jorvik_spark_tests")
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs ``fn()`` submits, counted with
+    ``statusTracker`` under a fresh job group."""
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"count-jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from jorvik_spark import storage
 from jorvik_spark.data_lineage.observer import LINEAGE_SCHEMA, DataLineageLogger
+from jorvik_spark.storage.basic import BasicStorage
 from jorvik_spark.storage.pydatasource import register as register_py_sources
 from jorvik_spark.tables import default_sf_dir
 
@@ -78,7 +79,9 @@ def _self_join(spark, lk):
 # first paren, scalar-subquery sources dropped, and optimizer-pruned sources
 # recorded as an empty local relation; the last block is DataSource V2
 # leaves (logged as "unknown_scan: DataSourceV2Relation" before) and a
-# self-join's one source (logged twice before).
+# self-join's one source (logged twice before); the stream cases are
+# recorded like the batch scan of the same source (logged as
+# "unknown_scan: StreamingRelation[V2]" before).
 SOURCE_CASES = [
     ("parquet_file", lambda s, lk: s.read.parquet(f"{lk.root}/region.parquet"),
      ["file:{root}/region.parquet"]),
@@ -116,7 +119,15 @@ SOURCE_CASES = [
      ["file:{root}/nation.parquet", "file:{root}/region.parquet",
       "file:{root}/supplier.parquet"]),
     ("streaming", lambda s, lk: s.readStream.schema("id LONG").parquet(f"{lk.root}/multi"),
-     ["unknown_scan: StreamingRelation"]),
+     ["file:{root}/multi"]),
+    ("stream_unnormalized_path",
+     lambda s, lk: s.readStream.schema("id LONG").parquet(f"{lk.root}//multi/"),
+     ["file:{root}/multi"]),
+    ("stream_from_storage", lambda s, lk: BasicStorage().readStream(f"{lk.root}/part"),
+     ["file:{root}/part"]),
+    ("stream_v2_rate",
+     lambda s, lk: s.readStream.format("rate").option("numPartitions", 1).load(),
+     ["RateStream(rowsPerSecond=1, rampUpTimeSeconds=0, numPartitions=1)"]),
     ("jdbc_query", lambda s, lk: _jdbc(s, "query", "select * from SALES_TABLE"),
      ["jdbc_scan: select * from SALES_TABLE"]),
     ("jdbc_table", lambda s, lk: _jdbc(s, "dbtable", "SALES_TABLE"),
@@ -156,11 +167,28 @@ def _log_row(data_sources=("file:/lake/a",), output_path="/lake/out"):
     )
 
 
-def test_log_row_is_a_local_relation(spark):
-    """An Arrow-built row plans to a JVM LocalRelation: appending it starts
-    no Python worker (a Python list would plan to a LogicalRDD)."""
-    analyzed = _log_row()._jdf.queryExecution().analyzed()
-    assert analyzed.getClass().getSimpleName() == "LocalRelation"
+def _append(spark, tmp_path, row):
+    """Append ``row`` through the observer's store step; the log read back."""
+    logger = DataLineageLogger(str(tmp_path / "log"))
+    logger._store_lineage_log(row)
+    return spark.read.parquet(logger.lineage_log_path)
+
+
+def test_log_append_runs_no_spark_job(spark, tmp_path, count_jobs):
+    """The driver writes and publishes the row: no Spark job, no temp
+    file left, one ``part-*.parquet`` per append."""
+    logger = DataLineageLogger(str(tmp_path / "log"))
+    row = _log_row()
+    assert count_jobs(lambda: spark.createDataFrame(row, LINEAGE_SCHEMA).write
+                      .mode("append").parquet(str(tmp_path / "spark_log"))) >= 1
+    assert count_jobs(lambda: logger._store_lineage_log(row)) == 0
+    assert count_jobs(lambda: logger._store_lineage_log(row)) == 0
+    names = sorted(os.listdir(logger.lineage_log_path))
+    data = [n for n in names if not n.startswith(".")]
+    assert len(data) == 2 and all(
+        n.startswith("part-") and n.endswith(".parquet") for n in data
+    )
+    assert not any(n.endswith(".tmp") or n.endswith(".tmp.crc") for n in names)
 
 
 @pytest.mark.parametrize(
@@ -168,25 +196,41 @@ def test_log_row_is_a_local_relation(spark):
     [([], "/lake/out"), (["file:/lake/ünïcødé/路径", "jdbc_scan: T"], "/lake/gold/日本")],
     ids=["no_sources", "non_ascii"],
 )
-def test_log_row_round_trips(spark, data_sources, output_path):
-    row = _log_row(data_sources, output_path).collect()[0]
+def test_log_row_round_trips(spark, tmp_path, data_sources, output_path):
+    log = _append(spark, tmp_path, _log_row(data_sources, output_path))
+    assert log.schema == LINEAGE_SCHEMA
+    row = log.collect()[0]
     assert row.output_path == output_path
     assert row.data_sources == data_sources
     assert row.transform_code_file == "job.py"
 
 
-def test_log_row_without_arrow_pyspark(spark):
-    """The row is built from a pyarrow.Table, which does not depend on the
-    pandas-conversion Arrow switch."""
+def test_log_row_without_arrow_pyspark(spark, tmp_path):
+    """The row is built and appended from a pyarrow.Table, which does not
+    depend on the pandas-conversion Arrow switch."""
     key = "spark.sql.execution.arrow.pyspark.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        log = _log_row()
+        log = _append(spark, tmp_path, _log_row())
         assert log.schema == LINEAGE_SCHEMA
         assert log.collect()[0].data_sources == ["file:/lake/a"]
     finally:
         spark.conf.set(key, before)
+
+
+def test_log_keeps_rows_spark_wrote(spark, tmp_path):
+    """A log Spark's writer started (INT96 timestamps, Spark's schema in
+    the footer) takes driver-written rows: one schema, every instant kept."""
+    logger = DataLineageLogger(str(tmp_path / "log"))
+    row = _log_row()
+    spark.createDataFrame(row, LINEAGE_SCHEMA).write.parquet(logger.lineage_log_path)
+    logger._store_lineage_log(row)
+    log = spark.read.parquet(logger.lineage_log_path)
+    assert log.schema == LINEAGE_SCHEMA
+    stamps = log.selectExpr("unix_micros(observation_ts) AS u").collect()
+    want = row.column("observation_ts")[0].value  # µs since the epoch
+    assert [r.u for r in stamps] == [want, want]
 
 
 def test_log_row_observation_ts_off_utc(spark, tmp_path):

@@ -252,3 +252,24 @@ def test_delta_scan_classified_by_lineage(dspark, st, tmp_path):
     sources = DataLineageLogger("unused")._get_data_sources(st.read(target, "delta"))
     assert len(sources) == 1
     assert sources[0].rstrip("/").endswith(target.rstrip("/"))
+
+
+def test_delta_lineage_append_is_a_delta_commit(dspark, tmp_path):
+    """With delta-spark importable the lineage log is a Delta table and
+    each append is one Delta commit: the driver-side parquet append, which
+    cannot commit to Delta, is never taken."""
+    from delta import DeltaTable
+
+    from jorvik_spark.data_lineage.observer import LINEAGE_SCHEMA, DataLineageLogger
+
+    logger = DataLineageLogger(str(tmp_path / "log"))
+    for _ in range(2):
+        logger._store_lineage_log(
+            logger._create_lineage_log(["file:/lake/a"], "/lake/out", "job.py")
+        )
+    assert _is_delta(dspark, logger.lineage_log_path)
+    history = DeltaTable.forPath(dspark, logger.lineage_log_path).history()
+    assert history.count() == 2
+    log = dspark.read.format("delta").load(logger.lineage_log_path)
+    assert log.schema == LINEAGE_SCHEMA
+    assert log.count() == 2

@@ -44,6 +44,9 @@ class FakeStorage:
     def merge(self, df, path, merge_condition, **kwargs):
         self.calls.append(("merge", path))
 
+    def append_table(self, table, path):
+        self.calls.append(("append_table", path))
+
 
 @pytest.fixture
 def set_conf(spark):
@@ -174,6 +177,18 @@ def test_write_always_isolated(spark, set_conf):
     st = IsolatedStorage(storage=fake, isolation_provider=lambda: "dev")
     st.write("df", "/mnt/data/t", "parquet", "overwrite")
     assert ("write", "/mnt/iso/dev/data/t") in fake.calls
+
+
+def test_append_table_always_isolated(spark, set_conf):
+    """A driver-side append is routed like a write: sandboxed, and refused
+    outside the mount."""
+    set_conf("/mnt", "iso")
+    fake = FakeStorage()
+    st = IsolatedStorage(storage=fake, isolation_provider=lambda: "dev")
+    st.append_table("table", "/mnt/_lineage/log")
+    assert ("append_table", "/mnt/iso/dev/_lineage/log") in fake.calls
+    with pytest.raises(ValueError, match="not under the mount point"):
+        st.append_table("table", "/elsewhere/log")
 
 
 def test_merge_always_isolated(spark, set_conf):
@@ -445,3 +460,33 @@ def test_uri_scheme_mount_round_trips(spark, set_conf):
     assert st._remove_isolation_path(isolated) == prod
     # outside the bucket → not isolatable, reads fall back
     assert st._try_create_isolation_path("s3a://other/t") is None
+
+
+def test_sandboxed_lineage_row_lands_in_sandbox_log(spark, set_conf, conf_keys, tmp_path):
+    """A feature-branch write logs its lineage row into the sandbox copy
+    of the log, never the production log, with the write's instant."""
+    import datetime
+
+    from jorvik_spark import storage
+    from jorvik_spark.storage import LINEAGE_LOG_PATH_CONF
+
+    mnt = str(tmp_path / "mnt")
+    (tmp_path / "mnt" / "iso").mkdir(parents=True)
+    set_conf(mnt, "iso")
+    spark.conf.set(LINEAGE_LOG_PATH_CONF, f"{mnt}/_lineage/log")
+    spark.conf.set("io.jorvik.storage.isolation_provider", "SPARK_CONFIG")
+    spark.conf.set("io.jorvik.storage.isolation_context", "dev")
+    try:
+        st = storage.configure()
+        assert isinstance(st, IsolatedStorage)
+        before = datetime.datetime.now(datetime.timezone.utc)
+        st.write(spark.range(3), f"{mnt}/out", mode="overwrite")
+        after = datetime.datetime.now(datetime.timezone.utc)
+    finally:
+        spark.conf.unset("io.jorvik.storage.isolation_context")
+    assert not (tmp_path / "mnt" / "_lineage").exists()
+    log = spark.read.parquet(f"{mnt}/iso/dev/_lineage/log")
+    row = log.selectExpr("output_path", "unix_micros(observation_ts) AS u").collect()
+    assert [r.output_path for r in row] == [f"{mnt}/iso/dev/out"]
+    micros = [int(t.timestamp() * 1_000_000) for t in (before, after)]
+    assert micros[0] - 1_000_000 <= row[0].u <= micros[1] + 1_000_000

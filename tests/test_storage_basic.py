@@ -646,3 +646,40 @@ def test_merge_matches_contract_replay(spark, st, tmp_path, config, broadcast, s
         spark.conf.set(key, before)
     got = sorted((tuple(r) for r in spark.read.parquet(target).collect()), key=repr)
     assert got == expected
+
+
+class _FailingRename:
+    """A Hadoop FileSystem whose ``rename`` returns False or raises."""
+
+    def __init__(self, fs, raises):
+        self._fs, self._raises = fs, raises
+
+    def rename(self, src, dst):
+        if self._raises:
+            raise IOError("rename refused")
+        return False
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("raises", [False, True], ids=["returns_false", "raises"])
+def test_append_table_leaves_no_temp_file_on_failure(st, tmp_path, monkeypatch, raises):
+    """A failed publish deletes its hidden temp file (and its checksum)
+    and raises."""
+    import pyarrow as pa
+
+    from jorvik_spark.storage import basic
+
+    real = basic._hadoop_fs
+
+    def failing(spark, path):
+        fs, root = real(spark, path)
+        return _FailingRename(fs, raises), root
+
+    monkeypatch.setattr(basic, "_hadoop_fs", failing)
+    target = tmp_path / "log"
+    target.mkdir()
+    with pytest.raises(IOError):
+        st.append_table(pa.table({"a": [1]}), str(target))
+    assert os.listdir(target) == []
