@@ -15,8 +15,9 @@ identical on both engines regardless of partitioning or plan shape.
 
 One template
 ------------
-``dsum``, ``davg`` and ``hash_bucket`` (the md5 sampling bucket) are each
-ONE SQL-text template, rendered per dialect: :func:`dsum` etc. return a
+``units`` (the quantization itself), ``dsum``, ``davg`` and
+``hash_bucket`` (the md5 sampling bucket) are each ONE SQL-text
+template, rendered per dialect: :func:`dsum` etc. return a
 single ``F.expr`` over the Spark rendering, and :func:`sql_dsum` etc.
 return the DuckDB rendering the oracle SQL embeds, so the engine and its
 oracle cannot drift. Callers pass SQL text, never Columns: building an
@@ -111,6 +112,13 @@ def _hash_bucket(expr: str, salt: str, d: _Dialect) -> str:
     return f"{d.hex8.format(digits)} % 1000"
 
 
+def units(expr: str) -> Column:
+    """A double SQL expression as exact BIGINT micro-units,
+    ``floor(x * 1e6 + 0.5)`` — the quantization inside :func:`dsum`, for
+    a fixed-point value column."""
+    return F.expr(_units(expr, _SPARK))
+
+
 def dsum(expr: str) -> Column:
     """Order-independent SUM of a double SQL expression (exact fixed-point
     internally); a DOUBLE."""
@@ -129,6 +137,11 @@ def hash_bucket(expr: str, salt: str) -> Column:
     the incremental-dedup history split so the scheme can never diverge
     between modules."""
     return F.expr(_hash_bucket(expr, salt, _SPARK))
+
+
+def sql_units(expr: str) -> str:
+    """DuckDB twin of :func:`units`."""
+    return _units(expr, _DUCKDB)
 
 
 def sql_dsum(expr: str) -> str:

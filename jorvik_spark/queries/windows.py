@@ -32,7 +32,37 @@ from jorvik_spark.queries.registry import (
     guarded_global_window,
     query,
     sql_dsum,
+    units,
 )
+
+
+def screened_events(
+    events: DataFrame,
+    key_col: str = "user_id",
+    *,
+    key: bool = True,
+    value: bool = True,
+    purchase: bool = True,
+    vu_type: str = "long",
+) -> DataFrame:
+    """(key, event_id, ts_us[, vu]): the rows a per-key time-series
+    stage reads. Keeps events with a ts and, per flag, a value, a
+    non-null key and ``event_type = 'purchase'``; ``vu`` is the value in
+    exact micro-units (:func:`~jorvik_spark.queries.registry.units`),
+    cast to ``vu_type``. Registered queries and their live twins in
+    ``jorvik_spark.streaming.ops`` screen through this one function."""
+    conds = ["ts IS NOT NULL"]
+    if value:
+        conds.append("value IS NOT NULL")
+    if key:
+        conds.append(f"`{key_col}` IS NOT NULL")
+    if purchase:
+        conds.append("event_type = 'purchase'")
+    cols = [key_col, "event_id", F.unix_micros("ts").alias("ts_us")]
+    if value:
+        cols.append(units("value").cast(vu_type).alias("vu"))
+    return events.filter(" AND ".join(conds)).select(*cols)
+
 
 _DEC = "decimal(25,6)"
 
@@ -593,14 +623,7 @@ def window_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("value").isNotNull()
             & (F.col("event_type") == "purchase")
         )
-        .select(
-            "user_id",
-            "event_id",
-            "ts",
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
-        )
+        .select("user_id", "event_id", "ts", units("value").alias("vu"))
     )
     return anomaly_zscore_flags(ev, "user_id").orderBy("user_id", "event_id")
 
@@ -1493,28 +1516,39 @@ def window_intervals_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller (events → islands → users). Integer µs arithmetic
     end-to-end; no floats, no UDFs.
     """
+    ev = interval_events(load_table(spark, sf_dir, "events"))
+    return interval_islands(ev).orderBy("user_id")
+
+
+def interval_events(events: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """(key, event_id, ts_us, end_us): each event with a ts as the
+    interval [ts, ts + value seconds], the length clamped to
+    [_IU_MIN_US, _IU_MAX_US] µs (a null value takes the floor)."""
     dur = F.expr(
         f"least(greatest(CAST(floor(coalesce(value, 0) * 1000000) AS"
         f" BIGINT), {_IU_MIN_US}L), {_IU_MAX_US}L)"
     )
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            (F.unix_micros("ts") + dur).alias("end_us"),
-        )
+    return events.filter(F.col("ts").isNotNull()).select(
+        key_col,
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        (F.unix_micros("ts") + dur).alias("end_us"),
     )
+
+
+def interval_islands(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """The per-key stage of :func:`window_intervals_merge` over
+    :func:`interval_events` rows: (key, n_intervals, n_islands,
+    covered_s, max_island_events). Also the batch branch of
+    ``running_intervals_union``."""
     order = [F.col("ts_us"), F.col("event_id")]
     w_prev = (
-        Window.partitionBy("user_id")
+        Window.partitionBy(key_col)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_cum = (
-        Window.partitionBy("user_id")
+        Window.partitionBy(key_col)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -1527,21 +1561,17 @@ def window_intervals_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("island", F.sum("new_island").over(w_cum))
     )
-    islands = labeled.groupBy("user_id", "island").agg(
+    islands = labeled.groupBy(key_col, "island").agg(
         (F.max("end_us") - F.min("ts_us")).alias("covered_us"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    return (
-        islands.groupBy("user_id")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_intervals"),
-            F.count(F.lit(1)).cast("long").alias("n_islands"),
-            F.expr("CAST(SUM(covered_us) div 1000000 AS BIGINT)").alias(
-                "covered_s"
-            ),
-            F.max("n_events").cast("long").alias("max_island_events"),
-        )
-        .orderBy("user_id")
+    return islands.groupBy(key_col).agg(
+        F.sum("n_events").cast("long").alias("n_intervals"),
+        F.count(F.lit(1)).cast("long").alias("n_islands"),
+        F.expr("CAST(SUM(covered_us) div 1000000 AS BIGINT)").alias(
+            "covered_s"
+        ),
+        F.max("n_events").cast("long").alias("max_island_events"),
     )
 
 
@@ -1591,45 +1621,9 @@ def window_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-nondeterministic under merge) and no libm: positions, not
     offsets-into-floats, pick the boundary values.
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & (F.col("event_type") == "purchase")
-        )
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
-        )
-        .withColumn("bucket", F.expr(f"ts_us div {_OHLC_BUCKET_US}"))
-    )
-    w = Window.partitionBy("user_id", "bucket").orderBy("ts_us", "event_id")
-    w_cnt = Window.partitionBy("user_id", "bucket")
-    pos = ev.select(
-        "user_id",
-        "bucket",
-        "vu",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(w_cnt).alias("cnt"),
-    )
+    ev = screened_events(load_table(spark, sf_dir, "events"), key=False)
     return (
-        pos.groupBy("user_id", "bucket")
-        .agg(
-            F.max(F.when(F.col("rn") == 1, F.col("vu")))
-            .cast("long")
-            .alias("open_u"),
-            F.max("vu").cast("long").alias("high_u"),
-            F.min("vu").cast("long").alias("low_u"),
-            F.max(F.when(F.col("rn") == F.col("cnt"), F.col("vu")))
-            .cast("long")
-            .alias("close_u"),
-            F.count(F.lit(1)).cast("long").alias("n_trades"),
-        )
+        ohlc_bars(ev)
         .select(
             "user_id",
             F.timestamp_micros(
@@ -1642,6 +1636,35 @@ def window_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_trades",
         )
         .orderBy("user_id", "bar_start")
+    )
+
+
+def ohlc_bars(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """The per-key stage of :func:`window_ohlc_bars` over
+    :func:`screened_events` rows: (key, bucket, open_u, high_u, low_u,
+    close_u, n_trades), one row per key and _OHLC_BUCKET_US bucket.
+    Also the batch branch of ``running_ohlc_bars``."""
+    w = Window.partitionBy(key_col, "bucket").orderBy("ts_us", "event_id")
+    w_cnt = Window.partitionBy(key_col, "bucket")
+    pos = ev.withColumn(
+        "bucket", F.expr(f"ts_us div {_OHLC_BUCKET_US}")
+    ).select(
+        key_col,
+        "bucket",
+        "vu",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(w_cnt).alias("cnt"),
+    )
+    return pos.groupBy(key_col, "bucket").agg(
+        F.max(F.when(F.col("rn") == 1, F.col("vu")))
+        .cast("long")
+        .alias("open_u"),
+        F.max("vu").cast("long").alias("high_u"),
+        F.min("vu").cast("long").alias("low_u"),
+        F.max(F.when(F.col("rn") == F.col("cnt"), F.col("vu")))
+        .cast("long")
+        .alias("close_u"),
+        F.count(F.lit(1)).cast("long").alias("n_trades"),
     )
 
 
@@ -1996,20 +2019,12 @@ def _value_runs(
     spark: SparkSession,
     sf_dir: str,
     stream_cols: list,
-    extra_filter=None,
     vu_expr=None,
 ):
-    """Shared gaps-and-islands core for the flatline screen and the
-    run-length census: runs of consecutive identical micro-unit values
-    per stream (``stream_cols``), ordered by (ts, event_id). ONE
-    implementation so the offender screen and its calibration census
-    can never drift on quantization, tie-break, or scope; both queries'
-    oracles carry the identical predicates. Null ts/value/stream-
-    identity rows are out of scope on BOTH engines by declared
-    semantics. Both row_numbers ride ONE stream-keyed sort exchange
-    (the (stream, vu) ranking is a sub-ordering of the stream one) and
-    the run collapse groups on a SUPERSET of the partition keys, so it
-    reuses that exchange map-side (plan-pinned, tests/test_plans.py).
+    """:func:`value_runs` over every event stream (``stream_cols``) of
+    the corpus, for the run-length census and the quantized screen.
+    Null ts/value/stream-identity rows are out of scope on BOTH engines
+    by declared semantics, as in the flatline screen.
 
     ``vu_expr``: the run-equality value (default: exact micro-unit
     value). The quantized flatline screen passes a coarser band here —
@@ -2021,30 +2036,56 @@ def _value_runs(
         & F.col("user_id").isNotNull()
         & F.col("event_type").isNotNull()
     )
-    if extra_filter is not None:
-        base = base & extra_filter
     if vu_expr is None:
-        vu_expr = F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast(
-            "long"
-        )
+        vu_expr = units("value")
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(base)
         .select(
             *stream_cols,
             "event_id",
-            F.unix_micros("ts").alias("t"),
+            F.unix_micros("ts").alias("ts_us"),
             vu_expr.alias("vu"),
         )
     )
-    wi = Window.partitionBy(*stream_cols).orderBy("t", "event_id")
-    wj = Window.partitionBy(*stream_cols, "vu").orderBy("t", "event_id")
+    return value_runs(ev, stream_cols)
+
+
+def value_runs(ev: DataFrame, stream_cols: list) -> DataFrame:
+    """(stream_cols, vu, grp, run_len): the runs of consecutive equal
+    ``vu`` per stream of (stream_cols, event_id, ts_us, vu) rows, in
+    (ts_us, event_id) order — position in the stream minus position in
+    the value group is constant exactly along a run. The one
+    gaps-and-islands core of the flatline screen, its live twin, the
+    run-length census and the quantized screen, so they cannot drift on
+    tie-break or run semantics. Both row_numbers ride ONE stream-keyed
+    sort exchange (the (stream, vu) ranking is a sub-ordering of the
+    stream one) and the run collapse groups on a SUPERSET of the
+    partition keys, so it reuses that exchange map-side (plan-pinned,
+    tests/test_plans.py)."""
+    wi = Window.partitionBy(*stream_cols).orderBy("ts_us", "event_id")
+    wj = Window.partitionBy(*stream_cols, "vu").orderBy("ts_us", "event_id")
     return (
         ev.withColumn(
             "grp", F.row_number().over(wi) - F.row_number().over(wj)
         )
         .groupBy(*stream_cols, "vu", "grp")
         .agg(F.count(F.lit(1)).alias("run_len"))
+    )
+
+
+def flatline_runs(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """The per-key stage of :func:`window_flatline_runs` over
+    :func:`screened_events` rows: (key, n_flatline_runs, longest_run,
+    n_flatlined_events) for keys with a run of ≥ _FLATLINE_MIN_RUN
+    equal values. Also the batch branch of ``running_flatline_runs``."""
+    runs = value_runs(ev, [key_col]).filter(
+        F.col("run_len") >= _FLATLINE_MIN_RUN
+    )
+    return runs.groupBy(key_col).agg(
+        F.count(F.lit(1)).cast("long").alias("n_flatline_runs"),
+        F.max("run_len").cast("long").alias("longest_run"),
+        F.sum("run_len").cast("long").alias("n_flatlined_events"),
     )
 
 
@@ -2086,26 +2127,13 @@ def window_flatline_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     islands on value equality: position-in-stream minus
     position-in-value-group is constant exactly along a run.
 
-    Scale shape: see :func:`_value_runs` (the shared core — one
+    Scale shape: see :func:`value_runs` (the shared core — one
     stream-keyed exchange, map-side run collapse); only offending
     users survive the run-length filter. Null users are out of scope
     on both engines, matching the census's declared semantics.
     """
-    runs = _value_runs(
-        spark,
-        sf_dir,
-        ["user_id"],
-        extra_filter=F.col("event_type") == "purchase",
-    ).filter(F.col("run_len") >= _FLATLINE_MIN_RUN)
-    return (
-        runs.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_flatline_runs"),
-            F.max("run_len").cast("long").alias("longest_run"),
-            F.sum("run_len").cast("long").alias("n_flatlined_events"),
-        )
-        .orderBy("user_id")
-    )
+    ev = screened_events(load_table(spark, sf_dir, "events"))
+    return flatline_runs(ev).orderBy("user_id")
 
 
 @query(
@@ -2150,7 +2178,7 @@ def window_value_run_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Non-vacuous at every SF, which also gives the shared
     gaps-and-islands core a value-rich driver hash row.
 
-    Scale shape: see :func:`_value_runs` (the shared core — one
+    Scale shape: see :func:`value_runs` (the shared core — one
     stream-keyed exchange, map-side run collapse); the census output
     is bounded by the longest run (a handful of rows at any corpus
     size). Null stream identity is out of scope on both engines (also
@@ -2317,27 +2345,21 @@ def window_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded 16-element array per row (state O(frame), never O(stream));
     output is row-per-event, pipelined — no second shuffle.
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("user_id").isNotNull()
-            & (F.col("event_type") == "purchase")
-        )
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("t"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .cast("double")
-            .alias("vu"),
-        )
+    # no final orderBy: the output is row-per-event (corpus-sized) and
+    # the driver compare is order-insensitive — a presentation sort here
+    # would be a full extra range exchange at 100 TB for nothing
+    return ewma_smooth(
+        screened_events(load_table(spark, sf_dir, "events"), vu_type="double")
     )
+
+
+def ewma_smooth(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """The per-event stage of :func:`window_ewma_smooth` over
+    :func:`screened_events` rows (``vu`` a double): (key, event_id, t,
+    n_in_frame, ewma_u). Also the batch branch of ``running_ewma``."""
     w = (
-        Window.partitionBy("user_id")
-        .orderBy("t", "event_id")
+        Window.partitionBy(key_col)
+        .orderBy("ts_us", "event_id")
         .rowsBetween(-_EWMA_FRAME, Window.currentRow)
     )
     framed = ev.withColumn("lst", F.collect_list("vu").over(w))
@@ -2347,13 +2369,10 @@ def window_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc * F.lit(1 - _EWMA_ALPHA)
         + x * F.lit(_EWMA_ALPHA),
     )
-    # no final orderBy: the output is row-per-event (corpus-sized) and
-    # the driver compare is order-insensitive — a presentation sort here
-    # would be a full extra range exchange at 100 TB for nothing
     return framed.select(
-        "user_id",
+        key_col,
         "event_id",
-        F.col("t").cast("long").alias("t"),
+        F.col("ts_us").cast("long").alias("t"),
         F.size("lst").cast("int").alias("n_in_frame"),
         F.floor(ewma + F.lit(0.5)).cast("long").alias("ewma_u"),
     )
@@ -2474,7 +2493,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE user-keyed sort exchange feeds the running max; the
     per-user collapse groups on the window's own partition key, so it
     reuses that exchange map-side (zero extra shuffle — the
-    ``_value_runs`` plan property, plan-pinned). Exact micro-unit
+    ``value_runs`` plan property, plan-pinned). Exact micro-unit
     integers end to end.
     """
     ev = (
@@ -2558,7 +2577,7 @@ def window_flatline_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     path that the exact screen's honest-empty row cannot (round-12
     verdict item #7).
 
-    Scale shape: identical to the shared :func:`_value_runs` core —
+    Scale shape: identical to the shared :func:`value_runs` core —
     ONE stream-keyed sort exchange, map-side run collapse (the quantizer
     only changes the equality column); only offending streams survive.
     """
@@ -2657,32 +2676,41 @@ def window_autocorr_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combined aggregate over per-user rows. Output ≤ 22 rows at any
     corpus size; per-task state is one window frame row.
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & (F.col("event_type") == "purchase")
+    mom = lag1_moments(screened_events(load_table(spark, sf_dir, "events")))
+    r1 = F.col("r1")
+    band = F.when(
+        r1.isNotNull(),
+        F.least(
+            F.greatest(F.floor(r1 * 10.0).cast("int"), F.lit(-10)), F.lit(9)
+        ),
+    ).cast("int")
+    return (
+        mom.select(band.alias("band"), "n")
+        .groupBy("band")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_users"),
+            F.sum("n").cast("long").alias("n_pairs"),
         )
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("t"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
-        )
+        .orderBy(F.col("band").asc_nulls_first())
     )
-    w = Window.partitionBy("user_id").orderBy("t", "event_id")
+
+
+def lag1_moments(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """The per-key stage of :func:`window_autocorr_census` over
+    :func:`screened_events` rows: the exact moments of each key's
+    consecutive (x, y) pairs — n, sx, sy, sxy, sxx, syy, dcx, dcy — and
+    ``r1``, their Pearson correlation as a double (NULL below 3 pairs or
+    with a zero-variance side). Also the batch branch of
+    ``running_autocorr``."""
+    w = Window.partitionBy(key_col).orderBy("ts_us", "event_id")
     pairs = ev.select(
-        "user_id",
+        key_col,
         F.lag("vu").over(w).alias("x"),
         F.col("vu").alias("y"),
     ).filter(F.col("x").isNotNull())
     xd = F.col("x").cast("decimal(19,0)")
     yd = F.col("y").cast("decimal(19,0)")
-    mom = pairs.groupBy("user_id").agg(
+    mom = pairs.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("long").alias("sx"),
         F.sum("y").cast("long").alias("sy"),
@@ -2698,29 +2726,17 @@ def window_autocorr_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.min("y") != F.max("y")).cast("int").alias("dcy"),
     )
     nd = F.col("n").cast("double")
-    sxd, syd2 = F.col("sx").cast("double"), F.col("sy").cast("double")
-    r1 = F.when(
-        (F.col("n") >= 3) & (F.col("dcx") == 1) & (F.col("dcy") == 1),
-        (nd * F.col("sxy").cast("double") - sxd * syd2)
-        / F.sqrt(
-            (nd * F.col("sxx").cast("double") - sxd * sxd)
-            * (nd * F.col("syy").cast("double") - syd2 * syd2)
+    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
+    return mom.withColumn(
+        "r1",
+        F.when(
+            (F.col("n") >= 3) & (F.col("dcx") == 1) & (F.col("dcy") == 1),
+            (nd * F.col("sxy").cast("double") - sxd * syd)
+            / F.sqrt(
+                (nd * F.col("sxx").cast("double") - sxd * sxd)
+                * (nd * F.col("syy").cast("double") - syd * syd)
+            ),
         ),
-    )
-    band = F.when(
-        r1.isNotNull(),
-        F.least(
-            F.greatest(F.floor(r1 * 10.0).cast("int"), F.lit(-10)), F.lit(9)
-        ),
-    ).cast("int")
-    return (
-        mom.select(band.alias("band"), "n")
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.sum("n").cast("long").alias("n_pairs"),
-        )
-        .orderBy(F.col("band").asc_nulls_first())
     )
 
 
@@ -3260,27 +3276,19 @@ def window_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded 16-element fold per row (state O(frame)), row-per-event
     pipelined output, no second shuffle and no presentation sort.
     """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("user_id").isNotNull()
-            & (F.col("event_type") == "purchase")
-        )
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("t"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .cast("double")
-            .alias("vu"),
-        )
+    return holt_smooth(
+        screened_events(load_table(spark, sf_dir, "events"), vu_type="double")
     )
+
+
+def holt_smooth(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """The per-event stage of :func:`window_holt_smooth` over
+    :func:`screened_events` rows (``vu`` a double): (key, event_id, t,
+    n_in_frame, level_u, trend_u, forecast_u). Also the batch branch of
+    ``running_holt``."""
     w = (
-        Window.partitionBy("user_id")
-        .orderBy("t", "event_id")
+        Window.partitionBy(key_col)
+        .orderBy("ts_us", "event_id")
         .rowsBetween(-_HOLT_FRAME, Window.currentRow)
     )
     framed = ev.withColumn("lst", F.collect_list("vu").over(w))
@@ -3302,9 +3310,9 @@ def window_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _step,
     )
     return framed.withColumn("st", st).select(
-        "user_id",
+        key_col,
         "event_id",
-        F.col("t").cast("long").alias("t"),
+        F.col("ts_us").cast("long").alias("t"),
         F.size("lst").cast("int").alias("n_in_frame"),
         F.floor(F.element_at("st", 1) + F.lit(0.5))
         .cast("long")
@@ -3513,37 +3521,14 @@ def window_breakout_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``jorvik_spark.streaming.ops.running_breakout`` (ring-buffer state,
     same definition, reconciled in tests).
     """
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("user_id").isNotNull()
-    ).select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("t"),
-        F.floor(F.col("value") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
-    )
-    w = Window.partitionBy("user_id").orderBy("t", "event_id").rowsBetween(
-        -_BREAKOUT_LOOKBACK, -1
-    )
-    scored = ev.select(
-        "user_id",
-        "vu",
-        F.max("vu").over(w).alias("prev_max"),
+    scored = breakout_scores(
+        screened_events(load_table(spark, sf_dir, "events"), purchase=False)
     )
     u = (
         scored.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_obs"),
-            F.sum(
-                F.when(
-                    F.col("prev_max").isNotNull()
-                    & (F.col("vu") > F.col("prev_max")),
-                    1,
-                ).otherwise(0)
-            ).alias("n_breakouts"),
+            F.sum(F.col("is_breakout").cast("int")).alias("n_breakouts"),
         )
         .filter(F.col("n_obs") >= 2)
     )
@@ -3560,4 +3545,26 @@ def window_breakout_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_breakouts").cast("long").alias("max_breakouts"),
         )
         .orderBy("rate_decile")
+    )
+
+
+def breakout_scores(
+    ev: DataFrame, key_col: str = "user_id", lookback: int = _BREAKOUT_LOOKBACK
+) -> DataFrame:
+    """The per-event stage of :func:`window_breakout_census` over
+    :func:`screened_events` rows: (key, event_id, t, vu, prev_max_u,
+    is_breakout), the max of the key's previous ≤ ``lookback`` values
+    and whether this value strictly exceeds it. Also the batch branch of
+    ``running_breakout``."""
+    w = Window.partitionBy(key_col).orderBy("ts_us", "event_id").rowsBetween(
+        -lookback, -1
+    )
+    prev_max = F.max("vu").over(w)
+    return ev.select(
+        key_col,
+        "event_id",
+        F.col("ts_us").cast("long").alias("t"),
+        F.col("vu").cast("long"),
+        prev_max.cast("long").alias("prev_max_u"),
+        (prev_max.isNotNull() & (F.col("vu") > prev_max)).alias("is_breakout"),
     )

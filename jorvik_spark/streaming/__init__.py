@@ -14,6 +14,16 @@ code path is exercised by the batch-twin oracle queries in
 ``jorvik_spark.queries.windows`` (identical window expressions) and by
 the live-stream tests in ``tests/test_streaming.py``
 (``trigger(availableNow=True)`` + ``processAllAvailable``).
+
+The ``running_*`` custom stateful operators ("live twins") share one
+contract, stated in ``jorvik_spark.streaming.ops``: a batch input runs
+the batch branch (the same function a registered query calls, where one
+exists); a streaming input runs one ``applyInPandasWithState`` scaffold
+that hands a per-key ``step`` function each micro-batch's rows as numpy
+columns sorted by (ts_us, event_id); the key keeps its own Spark type;
+the state and output schema strings are the checkpoint format.
+``tests/test_live_twins.py`` checks every operator against its batch
+branch.
 """
 
 from jorvik_spark.streaming.ops import (  # noqa: F401

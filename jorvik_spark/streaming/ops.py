@@ -18,12 +18,42 @@ Scale notes (100 TB/day stream):
   * ``applyInPandasWithState`` state must stay small per key (a few
     scalars here); unbounded per-key state is the streaming analogue of a
     driver collect.
+
+Live twins (the ``running_*`` operators)
+----------------------------------------
+Each ``running_*`` operator is a custom stateful operator with a batch
+twin, and the contract is the same for all of them:
+
+* **Batch branch.** A batch input returns the declarative form. Where a
+  registered query computes the same per-key stage, the two call one
+  function: :func:`anomaly_zscore_flags` here, and ``interval_islands``,
+  ``ohlc_bars``, ``flatline_runs``, ``ewma_smooth``, ``lag1_moments``,
+  ``holt_smooth`` and ``breakout_scores`` in
+  ``jorvik_spark.queries.windows`` (whose ``screened_events`` is also
+  the operators' shared row screen).
+* **Step function.** A streaming input runs :func:`_live_twin`, the one
+  ``applyInPandasWithState`` call in this module. The operator supplies
+  only ``step(state, cols) -> (state, rows)``: one key's micro-batch as
+  numpy columns in, the new state tuple and the output rows out.
+* **Order.** A key's rows reach ``step`` sorted by (ts_us, event_id), the
+  batch windows' order. With in-order delivery across micro-batches (the
+  landing-zone discipline), the last emission per key (update mode) or
+  every row (append mode) equals the batch branch. Out-of-order arrival
+  needs a watermark-buffered sort upstream.
+* **Key type.** The grouping key keeps its own Spark type in the output,
+  so a string key streams as it batches.
+* **State schema.** Per key, a few longs or a bounded ring. The state
+  and output schema strings are the checkpoint format: changing one
+  stops existing checkpoints from restoring.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+import math
+from collections import deque
+from typing import Callable, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -373,63 +403,107 @@ def interval_join_outer(
     )
 
 
+# An ``out_schema`` type → the nullable pandas dtype that carries it.
+_PD_DTYPES = {
+    "long": "Int64",
+    "int": "Int32",
+    "double": "Float64",
+    "boolean": "boolean",
+}
+
+# step(state, cols) -> (state, rows); see the module docstring.
+Step = Callable[[tuple, dict], Tuple[tuple, list]]
+
+
+def _live_twin(
+    filtered: DataFrame,
+    key_col: str,
+    step: Step,
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    mode: str = "update",
+) -> DataFrame:
+    """The streaming half of every ``running_*`` operator: one
+    ``applyInPandasWithState`` over ``filtered`` grouped by ``key_col``.
+
+    Per key and micro-batch it reads the state (``init`` for a new key),
+    concatenates the key's Arrow chunks, sorts them once by
+    (ts_us, event_id) when the projection carries ``ts_us`` (the totals
+    are order-free), and calls ``step`` with one numpy array per input
+    column — so a 64-bit id stays exact. It stores the state ``step``
+    returns and emits its rows (tuples in ``out_schema`` order) behind
+    the key, which keeps its own Spark type; each ``out_schema`` column
+    is a nullable pandas dtype.
+    """
+    names, types = zip(*(f.split() for f in out_schema.split(",")))
+    dtypes = [_PD_DTYPES[t] for t in types]
+
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        pdfs = list(pdfs)
+        pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        if "ts_us" in cols:
+            order = np.lexsort((cols["event_id"], cols["ts_us"]))
+            cols = {c: v[order] for c, v in cols.items()}
+        new_state, rows = step(state.get if state.exists else init, cols)
+        state.update(new_state)
+        if rows:
+            out = {key_col: [key[0]] * len(rows)}
+            for name, dtype, col in zip(names, dtypes, zip(*rows)):
+                out[name] = pd.array(list(col), dtype=dtype)
+            yield pd.DataFrame(out)
+
+    key_type = filtered.schema[key_col].dataType.simpleString()
+    return filtered.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType=f"{key_col} {key_type}, {out_schema}",
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _totals_step(col: str, total: Callable[[np.ndarray], float]) -> Step:
+    """Step of the running totals: state (n, total, n_nonnull) with SQL
+    SUM semantics — nulls are skipped and the total stays NULL until a
+    non-null value arrives (a NaN-skipping sum would say 0)."""
+
+    def step(st: tuple, cols: dict) -> tuple:
+        n, acc, n_nonnull = st
+        vals = cols[col][~pd.isna(cols[col])]
+        n, n_nonnull = n + len(cols[col]), n_nonnull + len(vals)
+        acc += total(vals)
+        return (n, acc, n_nonnull), [(n, acc if n_nonnull else None)]
+
+    return step
+
+
 def running_user_totals(
     df: DataFrame,
     key_col: str = "user_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """Custom stateful operator: per-key running (count, sum) emitted each
-    micro-batch, via ``applyInPandasWithState``.
-
-    The canonical shape for operators Spark's built-ins can't express
-    (per-key counters, custom sessionization, CDC conflation): state is a
-    few scalars per key, input arrives as an iterator of Arrow batches.
-    Batch inputs get the equivalent one-shot groupBy aggregate.
+    """Per-key running (n_events, total_value), re-emitted each
+    micro-batch — the canonical custom stateful shape (per-key counters,
+    custom sessionization, CDC conflation). The float total depends on
+    arrival order in its last bits; :func:`running_user_totals_fixedpoint`
+    is the exact form. Batch twin: the one-shot groupBy aggregate.
     """
     if not df.isStreaming:
         return df.groupBy(key_col).agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(value_col).alias("total_value"),
         )
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # n_nonnull mirrors SQL SUM semantics: nulls are skipped, and the
-        # total is NULL (not 0.0) until a non-null value has been seen —
-        # without it, pandas' NaN-skipping .sum() returns 0.0 for an
-        # all-null key and the stream diverges from the batch twin.
-        n, total, n_nonnull = (
-            state.get if state.exists else (0, 0.0, 0)
-        )
-        for pdf in pdfs:
-            n += len(pdf)
-            vals = pdf[value_col].dropna()
-            n_nonnull += len(vals)
-            total += float(vals.sum()) if len(vals) else 0.0
-        state.update((n, total, n_nonnull))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [n],
-                "total_value": [total if n_nonnull else None],
-            }
-        )
-
-    # The grouping key keeps ITS OWN type in the output schema — a
-    # hardcoded `long` would crash the Arrow conversion for string keys
-    # (e.g. key_col="event_type") while the batch path sailed through.
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, n_events long, total_value double"
-        ),
-        stateStructType="n long, total double, n_nonnull long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        df.select(key_col, value_col),
+        key_col,
+        _totals_step(value_col, lambda v: float(v.sum())),
+        "n_events long, total_value double",
+        "n long, total double, n_nonnull long",
+        (0, 0.0, 0),
     )
 
 
@@ -438,71 +512,28 @@ def running_user_totals_fixedpoint(
     key_col: str = "user_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """:func:`running_user_totals` with the value sum carried in EXACT
-    integer micro-units (the registry ``dsum`` quantization:
-    ``floor(v * 1e6 + 0.5)`` per value, integers summed) instead of a
-    float accumulator. Float sums are arrival-order-dependent in the
-    last ulps, so a replayed/repartitioned stream could emit a
-    hash-different total; the fixed-point total is order-independent and
-    therefore value-hash-comparable against a batch SQL twin — which is
-    what lets the driver check a custom stateful operator at all.
-
-    Output: (key, n_events long, total_u long) — ``total_u`` is NULL
-    until a non-null value arrives (SQL SUM semantics), else the exact
-    micro-unit sum. Python ints are arbitrary-precision, so the running
-    per-key total cannot overflow; the emitted long holds any total
-    below 9.2e12 in value units — the same int64 unit ceiling every
-    dsum consumer documents.
+    """:func:`running_user_totals` with the sum carried in exact integer
+    micro-units (``total_u``, the registry ``units`` quantization summed
+    as integers) instead of a float, so the total is independent of
+    arrival order and partitioning, and hash-comparable with a batch SQL
+    twin (``stream_stateful_running_totals``). The Python state total is
+    unbounded; the emitted long holds any total below 9.2e12 value
+    units, the ceiling every dsum consumer documents.
     """
-    import numpy as np
-
-    def _q(vals: pd.Series) -> int:
-        return int(np.floor(vals.to_numpy() * 1e6 + 0.5).astype("int64").sum())
+    from jorvik_spark.queries.registry import units
 
     if not df.isStreaming:
         return df.groupBy(key_col).agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                F.floor(F.col(value_col) * 1_000_000 + F.lit(0.5)).cast(
-                    "long"
-                )
-            ).alias("total_u"),
+            F.sum(units(value_col)).alias("total_u"),
         )
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n, total_u, n_nonnull = (
-            state.get if state.exists else (0, 0, 0)
-        )
-        for pdf in pdfs:
-            n += len(pdf)
-            vals = pdf[value_col].dropna()
-            n_nonnull += len(vals)
-            if len(vals):
-                total_u += _q(vals)
-        state.update((n, total_u, n_nonnull))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [n],
-                "total_u": pd.array(
-                    [total_u if n_nonnull else None], dtype="Int64"
-                ),
-            }
-        )
-
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, n_events long, total_u long"
-        ),
-        stateStructType="n long, total_u long, n_nonnull long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        df.select(key_col, units(value_col).alias("vu")),
+        key_col,
+        _totals_step("vu", lambda v: int(v.astype("int64").sum())),
+        "n_events long, total_u long",
+        "n long, total_u long, n_nonnull long",
+        (0, 0, 0),
     )
 
 
@@ -569,86 +600,49 @@ def running_anomaly_zscore(
     key_col: str = "user_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """Online 3σ anomaly flags — the LIVE twin of the batch predicate
-    :func:`anomaly_zscore_flags` (registered as ``window_anomaly_zscore``
-    over purchase events): per key, each event is tested against the
-    trailing ≤ 8 previously-seen quantized values via the exact integer
-    identity ``(n·x − S)² > 9·(n·Q − S²)``, and flagged rows are emitted
-    as they are detected. State per key is the ring of ≤ 8 micro-unit
-    longs — bounded, tiny, replayable.
+    """Online 3σ anomaly flags, the live twin of
+    :func:`anomaly_zscore_flags` (registered as ``window_anomaly_zscore``):
+    each event is tested against the trailing ≤ 8 earlier quantized
+    values of its key with the exact identity
+    ``(n·x − S)² > 9·(n·Q − S²)``, and flagged rows are emitted as they
+    are detected. State: the ring of ≤ 8 micro-unit longs.
 
-    Scope contract: this function screens only null ts/values — the
-    CALLER pre-filters to the event population it wants monitored (the
-    registered batch query restricts to ``event_type = 'purchase'``
-    before calling the shared predicate; feed this function the same
-    filter for live-vs-batch equality, else other event types enter the
-    ring and bias the baseline).
-
-    Equivalence contract: with per-key IN-ORDER event-time delivery
-    (rows sorted by (ts, event_id) within each micro-batch — this
-    function sorts them — and batches arriving in time order, the usual
-    landing-zone discipline), the emitted flags equal the batch form's
-    rows exactly; tests pin that across a multi-file replay. Out-of-
-    order arrivals would need a watermark-buffered sort upstream — the
-    documented trade of an ONLINE detector.
+    Unlike the other twins it screens only null ts/values: the caller
+    picks the monitored population (the registered query passes purchase
+    events; pass the same filter for live-vs-batch equality).
     """
+    from jorvik_spark.queries.registry import units
+
     filtered = df.filter(
         F.col("ts").isNotNull() & F.col(value_col).isNotNull()
     ).select(
         key_col,
         "event_id",
         "ts",
-        F.floor(F.col(value_col) * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
+        F.unix_micros("ts").alias("ts_us"),
+        units(value_col).alias("vu"),
     )
     if not df.isStreaming:
         return anomaly_zscore_flags(filtered, key_col).drop("ts")
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        ring: list[int] = list(state.get[0]) if state.exists else []
-        out_ids: list[int] = []
-        out_vals: list[int] = []
-        out_n: list[int] = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for _, row in rows.iterrows():
-            x = int(row["vu"])
+    def step(st: tuple, cols: dict) -> tuple:
+        ring, out = deque(st[0], maxlen=8), []
+        for eid, x in zip(cols["event_id"].tolist(), cols["vu"].tolist()):
             n = len(ring)
             if n >= 4:
-                s = sum(ring)
-                qq = sum(v * v for v in ring)
-                if (n * x - s) ** 2 > 9 * (n * qq - s * s):
-                    out_ids.append(int(row["event_id"]))
-                    out_vals.append(x)
-                    out_n.append(n)
+                s, q = sum(ring), sum(v * v for v in ring)
+                if (n * x - s) ** 2 > 9 * (n * q - s * s):
+                    out.append((eid, x, n))
             ring.append(x)
-            if len(ring) > 8:
-                ring.pop(0)
-        state.update((ring,))
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]] * len(out_ids), dtype="Int64"),
-                "event_id": pd.array(out_ids, dtype="Int64"),
-                "value_units": pd.array(out_vals, dtype="Int64"),
-                "n_prior": pd.array(out_n, dtype="Int64"),
-            }
-        )
+        return (list(ring),), out
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, event_id long, value_units long, "
-            "n_prior long"
-        ),
-        stateStructType="vals array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered.drop("ts"),
+        key_col,
+        step,
+        "event_id long, value_units long, n_prior long",
+        "vals array<long>",
+        ([],),
     )
 
 
@@ -762,129 +756,53 @@ def running_intervals_union(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online interval-union census — the LIVE stateful twin of the
-    batch ``window_intervals_merge`` query: per key, variable-length
-    event intervals [ts, ts + clamp(value s)] merge into islands as they
-    arrive, and every micro-batch emits the key's updated summary
+    """Online interval union, the live twin of ``window_intervals_merge``:
+    per key, the intervals [ts, ts + clamp(value s)] merge into islands
+    as they arrive, and each micro-batch re-emits the key's
     (n_intervals, n_islands, covered_s, max_island_events) — the
-    occupancy/billing counter a live dashboard reads instead of
-    re-scanning history.
-
-    State per key is FIVE longs plus the open island's (start, max_end,
-    n_events) — constant, replayable, checkpoint-safe (the restart test
-    pattern of ``running_anomaly_zscore`` applies). Equivalence
-    contract: with per-key in-order event-time delivery, the LAST
-    emitted row per key equals the batch query's row exactly — the
-    interval clamp below and the batch query's must stay byte-identical
-    (both derive from windows._IU_MIN_US/_IU_MAX_US).
+    occupancy/billing counter a dashboard reads instead of re-scanning
+    history. State: the interval and closed-island counts, the closed
+    islands' covered µs and largest event count, and the open island's
+    (start, max_end, n_events), -1 while there is none.
     """
-    from jorvik_spark.queries.windows import _IU_MAX_US, _IU_MIN_US
+    from jorvik_spark.queries.windows import interval_events, interval_islands
 
-    dur = (
-        f"least(greatest(CAST(floor(coalesce(value, 0) * 1000000) AS"
-        f" BIGINT), {_IU_MIN_US}L), {_IU_MAX_US}L)"
-    )
-    filtered = df.filter(F.col("ts").isNotNull()).select(
-        key_col,
-        "event_id",
-        "ts",
-        F.unix_micros("ts").alias("ts_us"),
-        (F.unix_micros("ts") + F.expr(dur)).alias("end_us"),
-    )
+    filtered = interval_events(df, key_col)
     if not df.isStreaming:
-        # Batch twin: delegate to the registered window formulation via
-        # the same gaps-and-islands pass (used by the equality tests).
-        from pyspark.sql import Window
+        return interval_islands(filtered, key_col)
 
-        order = [F.col("ts_us"), F.col("event_id")]
-        w_prev = (
-            Window.partitionBy(key_col)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_cum = (
-            Window.partitionBy(key_col)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        labeled = filtered.withColumn(
-            "new_island",
-            F.when(
-                F.max("end_us").over(w_prev) >= F.col("ts_us"), F.lit(0)
-            ).otherwise(F.lit(1)),
-        ).withColumn("island", F.sum("new_island").over(w_cum))
-        islands = labeled.groupBy(key_col, "island").agg(
-            (F.max("end_us") - F.min("ts_us")).alias("covered_us"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        return islands.groupBy(key_col).agg(
-            F.sum("n_events").cast("long").alias("n_intervals"),
-            F.count(F.lit(1)).cast("long").alias("n_islands"),
-            F.expr("CAST(SUM(covered_us) div 1000000 AS BIGINT)").alias(
-                "covered_s"
-            ),
-            F.max("n_events").cast("long").alias("max_island_events"),
-        )
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (n_iv, n_closed, cov_closed, max_ev,
-             cur_s, cur_e, cur_n) = state.get
-        else:
-            n_iv = n_closed = cov_closed = max_ev = 0
-            cur_s = cur_e = cur_n = -1
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        for _, row in rows.iterrows():
-            s, e = int(row["ts_us"]), int(row["end_us"])
+    def step(st: tuple, cols: dict) -> tuple:
+        n_iv, n_closed, cov_closed, max_ev, cur_s, cur_e, cur_n = st
+        for s, e in zip(cols["ts_us"].tolist(), cols["end_us"].tolist()):
             n_iv += 1
-            if cur_n < 0:
-                cur_s, cur_e, cur_n = s, e, 1
-            elif s <= cur_e:
-                cur_e = max(cur_e, e)
-                cur_n += 1
-            else:
+            if cur_n > 0 and s <= cur_e:
+                cur_e, cur_n = max(cur_e, e), cur_n + 1
+                continue
+            if cur_n > 0:
                 n_closed += 1
                 cov_closed += cur_e - cur_s
                 max_ev = max(max_ev, cur_n)
-                cur_s, cur_e, cur_n = s, e, 1
-        state.update(
-            (n_iv, n_closed, cov_closed, max_ev, cur_s, cur_e, cur_n)
+            cur_s, cur_e, cur_n = s, e, 1
+        open_cov = cur_e - cur_s if cur_n > 0 else 0
+        report = (
+            n_iv,
+            n_closed + (cur_n > 0),
+            (cov_closed + open_cov) // 1_000_000,
+            max(max_ev, cur_n, 0),
         )
-        open_cov = (cur_e - cur_s) if cur_n > 0 else 0
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]], dtype="Int64"),
-                "n_intervals": pd.array([n_iv], dtype="Int64"),
-                "n_islands": pd.array(
-                    [n_closed + (1 if cur_n > 0 else 0)], dtype="Int64"
-                ),
-                "covered_s": pd.array(
-                    [(cov_closed + open_cov) // 1_000_000], dtype="Int64"
-                ),
-                "max_island_events": pd.array(
-                    [max(max_ev, max(cur_n, 0))], dtype="Int64"
-                ),
-            }
-        )
+        return (n_iv, n_closed, cov_closed, max_ev, cur_s, cur_e, cur_n), [
+            report
+        ]
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, n_intervals long, n_islands long, "
-            "covered_s long, max_island_events long"
-        ),
-        stateStructType=(
-            "n_iv long, n_closed long, cov_closed long, max_ev long, "
-            "cur_s long, cur_e long, cur_n long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "n_intervals long, n_islands long, covered_s long, "
+        "max_island_events long",
+        "n_iv long, n_closed long, cov_closed long, max_ev long, "
+        "cur_s long, cur_e long, cur_n long",
+        (0, 0, 0, 0, -1, -1, -1),
     )
 
 
@@ -892,146 +810,61 @@ def running_ohlc_bars(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online OHLC bar generator — the LIVE stateful twin of the batch
-    ``window_ohlc_bars`` query: per key, hourly open/high/low/close
-    bars over the purchase value stream, each touched bar re-emitted
-    with its updated state every micro-batch (update mode; the LAST
-    emission per (key, bar) is that bar's final truth once event time
-    moves past it).
-
-    State per key is ONE open bar (7 longs) — in-order delivery means a
-    bar can never reopen once a later bucket starts, so closed bars
-    leave state immediately: the streaming analogue of the batch
-    query's "output is strictly |users| × |active hours|" bound.
-    Equivalence contract: same as the other twins — per-key in-order
-    event-time delivery; the bucket width and micro-unit quantization
-    derive from the SAME constants as the batch query
-    (windows._OHLC_BUCKET_US), so the formulas cannot drift.
+    """Online hourly OHLC bars, the live twin of ``window_ohlc_bars``:
+    every bar a micro-batch touches is re-emitted with its updated
+    (open_u, high_u, low_u, close_u, n_trades), so the last emission per
+    (key, bar_start_us) is the bar's final value. State: the one open
+    bar (bucket, o, h, lo, c, n) — with in-order delivery a bar never
+    reopens once a later one starts. Both branches emit ``bar_start_us``
+    (epoch µs) where the registered query emits a ``bar_start``
+    timestamp.
     """
-    from jorvik_spark.queries.windows import _OHLC_BUCKET_US
-
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & (F.col("event_type") == "purchase")
-    ).select(
-        key_col,
-        "event_id",
-        "ts",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
+    from jorvik_spark.queries.windows import (
+        _OHLC_BUCKET_US,
+        ohlc_bars,
+        screened_events,
     )
+
+    filtered = screened_events(df, key_col, key=False)
     if not df.isStreaming:
-        # Batch twin: the same one-sort-exchange formulation as the
-        # registered window_ohlc_bars query, emitted in THIS twin's
-        # schema (raw bar_start_us long, caller's key_col) — so the
-        # two 'live twin' APIs behave alike: batch input transparently
-        # delegates instead of raising (matches running_intervals_union
-        # above; used by the batch-equality tests).
-        from pyspark.sql import Window
-
-        bucket = F.expr(f"ts_us div {_OHLC_BUCKET_US}")
-        w = Window.partitionBy(key_col, "bucket").orderBy(
-            "ts_us", "event_id"
-        )
-        pos = filtered.withColumn("bucket", bucket).select(
+        return ohlc_bars(filtered, key_col).select(
             key_col,
-            "bucket",
-            "vu",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy(key_col, "bucket"))
-            .alias("cnt"),
-        )
-        return (
-            pos.groupBy(key_col, "bucket")
-            .agg(
-                F.max(F.when(F.col("rn") == 1, F.col("vu")))
-                .cast("long")
-                .alias("open_u"),
-                F.max("vu").cast("long").alias("high_u"),
-                F.min("vu").cast("long").alias("low_u"),
-                F.max(F.when(F.col("rn") == F.col("cnt"), F.col("vu")))
-                .cast("long")
-                .alias("close_u"),
-                F.count(F.lit(1)).cast("long").alias("n_trades"),
-            )
-            .select(
-                key_col,
-                (F.col("bucket") * F.lit(_OHLC_BUCKET_US))
-                .cast("long")
-                .alias("bar_start_us"),
-                "open_u",
-                "high_u",
-                "low_u",
-                "close_u",
-                "n_trades",
-            )
+            (F.col("bucket") * F.lit(_OHLC_BUCKET_US))
+            .cast("long")
+            .alias("bar_start_us"),
+            "open_u",
+            "high_u",
+            "low_u",
+            "close_u",
+            "n_trades",
         )
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bucket, o, h, lo, c, n = state.get
-        else:
-            bucket, o, h, lo, c, n = -1, 0, 0, 0, 0, 0
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        touched: dict[int, tuple] = {}
-        for _, row in rows.iterrows():
-            b = int(row["ts_us"]) // _OHLC_BUCKET_US
-            x = int(row["vu"])
-            if b != bucket:
-                if bucket >= 0:
-                    touched[bucket] = (o, h, lo, c, n)
-                bucket, o, h, lo, c, n = b, x, x, x, x, 1
-            else:
-                h, lo, c, n = max(h, x), min(lo, x), x, n + 1
+    def step(st: tuple, cols: dict) -> tuple:
+        bucket, *bar = st
+        touched = {}
+        for t, x in zip(cols["ts_us"].tolist(), cols["vu"].tolist()):
+            b = t // _OHLC_BUCKET_US
+            if b == bucket:
+                o, h, lo, _, n = bar
+                bar = (o, max(h, x), min(lo, x), x, n + 1)
+                continue
+            if bucket >= 0:
+                touched[bucket] = bar
+            bucket, bar = b, (x, x, x, x, 1)
         if bucket >= 0:
-            touched[bucket] = (o, h, lo, c, n)
-        state.update((bucket, o, h, lo, c, n))
-        buckets = sorted(touched)
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]] * len(buckets), dtype="Int64"),
-                "bar_start_us": pd.array(
-                    [b * _OHLC_BUCKET_US for b in buckets], dtype="Int64"
-                ),
-                "open_u": pd.array(
-                    [touched[b][0] for b in buckets], dtype="Int64"
-                ),
-                "high_u": pd.array(
-                    [touched[b][1] for b in buckets], dtype="Int64"
-                ),
-                "low_u": pd.array(
-                    [touched[b][2] for b in buckets], dtype="Int64"
-                ),
-                "close_u": pd.array(
-                    [touched[b][3] for b in buckets], dtype="Int64"
-                ),
-                "n_trades": pd.array(
-                    [touched[b][4] for b in buckets], dtype="Int64"
-                ),
-            }
-        )
+            touched[bucket] = bar
+        return (bucket, *bar), [
+            (b * _OHLC_BUCKET_US, *touched[b]) for b in sorted(touched)
+        ]
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, bar_start_us long, open_u long, "
-            "high_u long, low_u long, close_u long, n_trades long"
-        ),
-        stateStructType=(
-            "bucket long, o long, h long, lo long, c long, n long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "bar_start_us long, open_u long, high_u long, low_u long, "
+        "close_u long, n_trades long",
+        "bucket long, o long, h long, lo long, c long, n long",
+        (-1, 0, 0, 0, 0, 0),
     )
 
 
@@ -1042,42 +875,26 @@ def running_cusum_changepoints(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online one-sided CUSUM change-point detector — the LIVE stateful
-    sibling of the batch ``window_cusum_changepoints`` query, completing
-    the anomaly family's twin coverage (z-score, MAD, OHLC, intervals
-    all have one). Per key: the first _CUSUM_BASELINE_N purchase values
-    freeze the in-control mean μ (Page's CUSUM monitors against a KNOWN
-    in-control level — the deployment form; the batch query's
-    whole-history mean is unknowable mid-stream, the one semantic
-    difference, documented here), then every later event advances
-    S = max(0, S + (x − μ)) and the key's running report
-    (first_exceed_pos/event once S > h, max_cusum) re-emits per batch —
-    the LAST emission is that key's truth.
+    """Online one-sided CUSUM, the live sibling of
+    ``window_cusum_changepoints``: per key, the first _CUSUM_BASELINE_N
+    purchase values freeze the in-control mean μ, then each later event
+    advances S = max(0, S + (x − μ)), and once S exceeds h the key's
+    (first_exceed_pos, first_exceed_event, max_cusum) is re-emitted
+    each micro-batch. Positions count monitored events (1 = the first
+    after the baseline). State: the baseline ring, μ, S, max S, the
+    position and the first crossing (-1 until one).
 
-    State per key is eight longs + the ≤ 8-value baseline ring — bounded,
-    replayable, checkpoint-safe. The batch branch below computes the
-    IDENTICAL frozen-baseline semantics declaratively (prefix-sum minus
-    running-min closed form over the monitored suffix), so batch input
-    delegates instead of raising and the equality tests compare the two
-    forms row for row. Positions count MONITORED events (1 = the first
-    event after the baseline window).
+    It differs from the registered query in one way: Page's CUSUM
+    monitors against a known in-control level, while the query's
+    whole-history mean is unknowable mid-stream. The batch branch
+    computes the same frozen-baseline semantics declaratively (prefix
+    sum minus running minimum over the monitored suffix).
     """
-    from jorvik_spark.queries.windows import _CUSUM_H_U
     from pyspark.sql import Window
 
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & (F.col("event_type") == "purchase")
-    ).select(
-        key_col,
-        "event_id",
-        "ts",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
-    )
+    from jorvik_spark.queries.windows import _CUSUM_H_U, screened_events
+
+    filtered = screened_events(df, key_col, key=False)
     if not df.isStreaming:
         order_w = Window.partitionBy(key_col).orderBy("ts_us", "event_id")
         pos = filtered.withColumn("j", F.row_number().over(order_w))
@@ -1129,20 +946,10 @@ def running_cusum_changepoints(
             )
         )
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ring, mu, s_cur, s_max, pos, f_pos, f_ev = state.get
-            ring = list(ring)
-        else:
-            ring, mu, s_cur, s_max, pos, f_pos, f_ev = [], 0, 0, 0, 0, -1, -1
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        for _, row in rows.iterrows():
-            x = int(row["vu"])
+    def step(st: tuple, cols: dict) -> tuple:
+        ring, mu, s_cur, s_max, pos, f_pos, f_ev = st
+        ring = list(ring)
+        for eid, x in zip(cols["event_id"].tolist(), cols["vu"].tolist()):
             if len(ring) < _CUSUM_BASELINE_N:
                 ring.append(x)
                 if len(ring) == _CUSUM_BASELINE_N:
@@ -1152,171 +959,71 @@ def running_cusum_changepoints(
                 continue
             pos += 1
             s_cur = max(0, s_cur + (x - mu))
-            if s_cur > s_max:
-                s_max = s_cur
+            s_max = max(s_max, s_cur)
             if f_pos < 0 and s_cur > _CUSUM_H_U:
-                f_pos, f_ev = pos, int(row["event_id"])
-        state.update((ring, mu, s_cur, s_max, pos, f_pos, f_ev))
-        if f_pos >= 0:
-            yield pd.DataFrame(
-                {
-                    key_col: pd.array([key[0]], dtype="Int64"),
-                    "first_exceed_pos": pd.array([f_pos], dtype="Int64"),
-                    "first_exceed_event": pd.array([f_ev], dtype="Int64"),
-                    "max_cusum": pd.array([s_max], dtype="Int64"),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    key_col: pd.array([], dtype="Int64"),
-                    "first_exceed_pos": pd.array([], dtype="Int64"),
-                    "first_exceed_event": pd.array([], dtype="Int64"),
-                    "max_cusum": pd.array([], dtype="Int64"),
-                }
-            )
+                f_pos, f_ev = pos, eid
+        report = [(f_pos, f_ev, s_max)] if f_pos >= 0 else []
+        return (ring, mu, s_cur, s_max, pos, f_pos, f_ev), report
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, first_exceed_pos long, "
-            "first_exceed_event long, max_cusum long"
-        ),
-        stateStructType=(
-            "ring array<long>, mu long, s_cur long, s_max long, "
-            "pos long, f_pos long, f_ev long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "first_exceed_pos long, first_exceed_event long, max_cusum long",
+        "ring array<long>, mu long, s_cur long, s_max long, "
+        "pos long, f_pos long, f_ev long",
+        ([], 0, 0, 0, 0, -1, -1),
     )
-
-
-_FLAT_MIN_RUN = 3  # must equal windows._FLATLINE_MIN_RUN (asserted below)
 
 
 def running_flatline_runs(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online flatline (stuck-value) detector — the LIVE stateful twin
-    of the batch ``window_flatline_runs`` query: per key, runs of
-    ≥ _FLAT_MIN_RUN consecutive identical purchase values accumulate
-    into the key's report (n_flatline_runs, longest_run,
-    n_flatlined_events), re-emitted each micro-batch for keys with at
-    least one qualifying run — the LAST emission is that key's truth.
-    A frozen value is invisible to the deviation-based live screens
-    (z-score/MAD/CUSUM twins) by construction; this is the fourth
-    member of the monitoring family.
-
-    State per key is FIVE longs (current run's value + length, closed
-    qualifying runs' count / longest / event total) — constant,
-    replayable, checkpoint-safe. The OPEN run participates in the
-    emission as soon as it qualifies (exactly the batch semantics: a
-    still-running flatline is already a flatline), then merges into the
-    closed totals only when a different value arrives, so no run is
-    double-counted. Batch input delegates to the same gaps-and-islands
-    formulation the registered query uses, in this twin's schema.
+    """Online flatline (stuck-value) detector, the live twin of
+    ``window_flatline_runs``: per key, runs of ≥ _FLATLINE_MIN_RUN
+    consecutive equal purchase values add up to (n_flatline_runs,
+    longest_run, n_flatlined_events), re-emitted each micro-batch for
+    keys with a qualifying run. State: the current run's value and
+    length, and the closed qualifying runs' count, longest and event
+    total. The open run counts in the emission as soon as it qualifies
+    (as in the batch query) but joins the closed totals only when a
+    different value arrives, so no run counts twice.
     """
-    from pyspark.sql import Window
-
-    from jorvik_spark.queries.windows import _FLATLINE_MIN_RUN
-
-    assert _FLAT_MIN_RUN == _FLATLINE_MIN_RUN
-
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        # null stream identity out of scope — mirrors the registered
-        # batch query's declared semantics (and the run census's)
-        & F.col(key_col).isNotNull()
-        & (F.col("event_type") == "purchase")
-    ).select(
-        key_col,
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
+    from jorvik_spark.queries.windows import (
+        _FLATLINE_MIN_RUN,
+        flatline_runs,
+        screened_events,
     )
-    if not df.isStreaming:
-        wi = Window.partitionBy(key_col).orderBy("ts_us", "event_id")
-        wj = Window.partitionBy(key_col, "vu").orderBy("ts_us", "event_id")
-        runs = (
-            filtered.withColumn(
-                "grp", F.row_number().over(wi) - F.row_number().over(wj)
-            )
-            .groupBy(key_col, "vu", "grp")
-            .agg(F.count(F.lit(1)).alias("run_len"))
-            .filter(F.col("run_len") >= _FLAT_MIN_RUN)
-        )
-        return runs.groupBy(key_col).agg(
-            F.count(F.lit(1)).cast("long").alias("n_flatline_runs"),
-            F.max("run_len").cast("long").alias("longest_run"),
-            F.sum("run_len").cast("long").alias("n_flatlined_events"),
-        )
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_vu, cur_len, n_runs, longest, flat_ev = state.get
-        else:
-            cur_vu, cur_len, n_runs, longest, flat_ev = 0, 0, 0, 0, 0
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        for _, row in rows.iterrows():
-            x = int(row["vu"])
+    filtered = screened_events(df, key_col)
+    if not df.isStreaming:
+        return flatline_runs(filtered, key_col)
+
+    def close(n_runs: int, longest: int, flat_ev: int, run: int) -> tuple:
+        if run < _FLATLINE_MIN_RUN:
+            return n_runs, longest, flat_ev
+        return n_runs + 1, max(longest, run), flat_ev + run
+
+    def step(st: tuple, cols: dict) -> tuple:
+        cur_vu, cur_len, *closed = st
+        for x in cols["vu"].tolist():
             if cur_len > 0 and x == cur_vu:
                 cur_len += 1
             else:
-                if cur_len >= _FLAT_MIN_RUN:
-                    n_runs += 1
-                    longest = max(longest, cur_len)
-                    flat_ev += cur_len
+                closed = close(*closed, cur_len)
                 cur_vu, cur_len = x, 1
-        state.update((cur_vu, cur_len, n_runs, longest, flat_ev))
-        # open run folds into the emission once it qualifies (batch
-        # semantics) without touching the closed-run state
-        o_runs, o_long, o_ev = n_runs, longest, flat_ev
-        if cur_len >= _FLAT_MIN_RUN:
-            o_runs += 1
-            o_long = max(o_long, cur_len)
-            o_ev += cur_len
-        if o_runs > 0:
-            yield pd.DataFrame(
-                {
-                    key_col: pd.array([key[0]], dtype="Int64"),
-                    "n_flatline_runs": pd.array([o_runs], dtype="Int64"),
-                    "longest_run": pd.array([o_long], dtype="Int64"),
-                    "n_flatlined_events": pd.array([o_ev], dtype="Int64"),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    key_col: pd.array([], dtype="Int64"),
-                    "n_flatline_runs": pd.array([], dtype="Int64"),
-                    "longest_run": pd.array([], dtype="Int64"),
-                    "n_flatlined_events": pd.array([], dtype="Int64"),
-                }
-            )
+        report = close(*closed, cur_len)
+        return (cur_vu, cur_len, *closed), [report] if report[0] else []
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, n_flatline_runs long, "
-            "longest_run long, n_flatlined_events long"
-        ),
-        stateStructType=(
-            "cur_vu long, cur_len long, n_runs long, longest long, "
-            "flat_ev long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "n_flatline_runs long, longest_run long, n_flatlined_events long",
+        "cur_vu long, cur_len long, n_runs long, longest long, "
+        "flat_ev long",
+        (0, 0, 0, 0, 0),
     )
 
 
@@ -1399,110 +1106,63 @@ def suggest_watermark(
     return f"{2 ** hist[-1][0] - 1} seconds"  # unreachable; total covers
 
 
+def _frame_step(frame: int, fold: Callable[[deque], tuple]) -> Step:
+    """Step of the frame-fold twins (EWMA, Holt): per event, push the
+    value into the ring of the last ``frame`` + 1 values and emit
+    (event_id, t, n_in_frame, *fold(ring)). The ring IS the batch
+    window's frame, so replaying a batch recomputes the same folds."""
+
+    def step(st: tuple, cols: dict) -> tuple:
+        ring, out = deque(st[0], maxlen=frame + 1), []
+        for eid, t, x in zip(
+            cols["event_id"].tolist(),
+            cols["ts_us"].tolist(),
+            cols["vu"].tolist(),
+        ):
+            ring.append(x)
+            out.append((eid, t, len(ring), *fold(ring)))
+        return (list(ring),), out
+
+    return step
+
+
 def running_ewma(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online EWMA smoother — the LIVE stateful sibling of the batch
-    ``window_ewma_smooth`` query (round 13), extending the twin family
-    (z-score, MAD, OHLC, intervals, CUSUM, flatline all have one).
-    Emits one row per purchase event with the exponentially-weighted
-    average of that event's bounded frame (the last _EWMA_FRAME values
-    plus itself), exactly the batch query's restart-at-frame-head left
-    fold: state per key is ONLY the ≤ _EWMA_FRAME-value ring, so the
-    fold re-runs per event over at most 16 doubles — identical float
-    op sequence to the batch window's F.aggregate, so live and batch
-    agree bit-for-bit on ewma_u (the tests pin row equality).
-
-    State is bounded, replayable and checkpoint-safe (the ring IS the
-    frame; replaying a batch recomputes the same folds). Batch input
-    delegates to the identical declarative window form instead of
-    raising — the documented running_* convention.
+    """Online EWMA, the live twin of ``window_ewma_smooth``: one row per
+    purchase event with the exponentially weighted average of its frame
+    (the last _EWMA_FRAME values and itself), folded left from the frame
+    head with the same double operations as the batch ``F.aggregate``,
+    so ``ewma_u`` agrees bit for bit. State: the ≤ _EWMA_FRAME + 1-value
+    ring.
     """
-    from jorvik_spark.queries.windows import _EWMA_ALPHA, _EWMA_FRAME
-    from pyspark.sql import Window
-
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col(key_col).isNotNull()
-        & (F.col("event_type") == "purchase")
-    ).select(
-        key_col,
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .cast("double")
-        .alias("vu"),
+    from jorvik_spark.queries.windows import (
+        _EWMA_ALPHA,
+        _EWMA_FRAME,
+        ewma_smooth,
+        screened_events,
     )
+
+    filtered = screened_events(df, key_col, vu_type="double")
     if not df.isStreaming:
-        w = (
-            Window.partitionBy(key_col)
-            .orderBy("ts_us", "event_id")
-            .rowsBetween(-_EWMA_FRAME, Window.currentRow)
-        )
-        framed = filtered.withColumn("lst", F.collect_list("vu").over(w))
-        ewma = F.aggregate(
-            F.slice(F.col("lst"), 2, F.size("lst") - 1),
-            F.element_at("lst", 1),
-            lambda acc, x: acc * F.lit(1 - _EWMA_ALPHA)
-            + x * F.lit(_EWMA_ALPHA),
-        )
-        return framed.select(
-            key_col,
-            "event_id",
-            F.col("ts_us").cast("long").alias("t"),
-            F.size("lst").cast("int").alias("n_in_frame"),
-            F.floor(ewma + F.lit(0.5)).cast("long").alias("ewma_u"),
-        )
+        return ewma_smooth(filtered, key_col)
 
-    alpha, frame = _EWMA_ALPHA, _EWMA_FRAME
+    def fold(ring: deque) -> tuple:
+        first, *rest = ring
+        acc = first
+        for x in rest:
+            acc = acc * (1 - _EWMA_ALPHA) + x * _EWMA_ALPHA
+        return (math.floor(acc + 0.5),)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        ring = list(state.get[0]) if state.exists else []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        out_eid, out_t, out_n, out_ewma = [], [], [], []
-        for _, row in rows.iterrows():
-            ring.append(float(row["vu"]))
-            if len(ring) > frame + 1:
-                ring.pop(0)
-            # identical left fold as the batch window's F.aggregate
-            acc = ring[0]
-            for x in ring[1:]:
-                acc = acc * (1 - alpha) + x * alpha
-            out_eid.append(int(row["event_id"]))
-            out_t.append(int(row["ts_us"]))
-            out_n.append(len(ring))
-            out_ewma.append(int(math.floor(acc + 0.5)))
-        state.update((ring,))
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]] * len(out_eid), dtype="Int64"),
-                "event_id": pd.array(out_eid, dtype="Int64"),
-                "t": pd.array(out_t, dtype="Int64"),
-                "n_in_frame": pd.array(out_n, dtype="Int32"),
-                "ewma_u": pd.array(out_ewma, dtype="Int64"),
-            }
-        )
-
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, event_id long, t long, "
-            "n_in_frame int, ewma_u long"
-        ),
-        stateStructType="ring array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        _frame_step(_EWMA_FRAME, fold),
+        "event_id long, t long, n_in_frame int, ewma_u long",
+        "ring array<double>",
+        ([],),
+        mode="append",
     )
 
 
@@ -1518,164 +1178,71 @@ def running_autocorr(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online lag-1 autocorrelation — the LIVE stateful sibling of the
-    per-user moment stage inside the batch ``window_autocorr_census``
-    query (round 13), extending the twin family (z-score, MAD, OHLC,
-    intervals, CUSUM, flatline, EWMA all have one). Per key, every
-    micro-batch re-emits (n_pairs, r_u): the Pearson correlation of
-    consecutive purchase values so far, as a micro-unit long — the
-    signal a live model-router reads to decide whether a user's stream
-    has become momentum-driven (r → +1) or mean-reverting (r → −1).
+    """Online lag-1 autocorrelation, the live twin of the per-key moment
+    stage of ``window_autocorr_census``: each micro-batch re-emits the
+    key's (n_pairs, r_u), the Pearson correlation of consecutive
+    purchase values so far in micro-units — NULL below 3 pairs or with a
+    zero-variance side, the census's declared semantics.
 
-    EXACT integer state, not float state: the five moments accumulate
-    as Python arbitrary-precision integers and persist through the
-    Arrow state schema as (hi, lo) long pairs split at 2^60 (the three
-    product sums overflow int64 at natural data — the batch twin holds
-    them in DECIMAL(38,0)); zero-variance sides are detected by
-    any-value-differs flags against the first/second values (exactly
-    the batch twin's MIN≠MAX guard, O(1) state), never a float test.
-    r_u itself is the batch twin's identical fixed dag — exact ints →
-    IEEE doubles → one multiply/subtract/sqrt/divide chain →
-    floor(r*1e6+0.5) — so live and batch agree bit-for-bit and the
-    restart test pins row equality. Degenerate series (< 3 pairs or a
-    zero-variance side) report r_u NULL, the census's declared
-    semantics.
-
-    State per key is 16 longs — bounded, replayable, checkpoint-safe.
-    Batch input delegates to the identical declarative form (the
-    documented running_* convention).
+    State: exact integer moments — the value count, the previous, first
+    and second values, two any-value-differs flags (the batch MIN≠MAX
+    guard), Σx, Σy, and the three product sums as (hi, lo) long pairs
+    split at 2^60 (they overflow int64 at natural data; the batch form
+    holds them in DECIMAL(38,0)). ``r_u`` is the batch form's fixed dag
+    of double operations on those integers, so the two agree bit for
+    bit.
     """
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col(key_col).isNotNull()
-        & (F.col("event_type") == "purchase")
-    ).select(
-        key_col,
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
-    )
-    if not df.isStreaming:
-        from pyspark.sql import Window
+    from jorvik_spark.queries.registry import units
+    from jorvik_spark.queries.windows import lag1_moments, screened_events
 
-        w = Window.partitionBy(key_col).orderBy("ts_us", "event_id")
-        pairs = filtered.select(
-            key_col,
-            F.lag("vu").over(w).alias("x"),
-            F.col("vu").alias("y"),
-        ).filter(F.col("x").isNotNull())
-        xd = F.col("x").cast("decimal(19,0)")
-        yd = F.col("y").cast("decimal(19,0)")
-        mom = pairs.groupBy(key_col).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").cast("long").alias("sx"),
-            F.sum("y").cast("long").alias("sy"),
-            F.sum(xd * yd).alias("sxy"),
-            F.sum(xd * xd).alias("sxx"),
-            F.sum(yd * yd).alias("syy"),
-            # min!=max, not COUNT(DISTINCT) — the census's
-            # Expand-avoidance (see window_autocorr_census)
-            (F.min("x") != F.max("x")).cast("int").alias("dcx"),
-            (F.min("y") != F.max("y")).cast("int").alias("dcy"),
-        )
-        nd = F.col("n").cast("double")
-        sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
-        r1 = F.when(
-            (F.col("n") >= 3) & (F.col("dcx") == 1) & (F.col("dcy") == 1),
-            (nd * F.col("sxy").cast("double") - sxd * syd)
-            / F.sqrt(
-                (nd * F.col("sxx").cast("double") - sxd * sxd)
-                * (nd * F.col("syy").cast("double") - syd * syd)
-            ),
-        )
-        return mom.select(
+    filtered = screened_events(df, key_col)
+    if not df.isStreaming:
+        return lag1_moments(filtered, key_col).select(
             key_col,
             F.col("n").cast("long").alias("n_pairs"),
-            F.floor(r1 * 1_000_000 + F.lit(0.5)).cast("long").alias("r_u"),
+            units("r1").alias("r_u"),
         )
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        if state.exists:
-            (nv, prev, v0, v1, dx, dy, sx, sy,
-             sxy_hi, sxy_lo, sxx_hi, sxx_lo, syy_hi, syy_lo) = state.get
-            sxy = sxy_hi * _HILO_BASE + sxy_lo
-            sxx = sxx_hi * _HILO_BASE + sxx_lo
-            syy = syy_hi * _HILO_BASE + syy_lo
-        else:
-            nv, prev, v0, v1, dx, dy = 0, 0, 0, 0, 0, 0
-            sx = sy = sxy = sxx = syy = 0
-        # Concat ALL Arrow chunks before the one global sort (the
-        # running_ewma pattern): a per-chunk sort would form pairs that
-        # straddle a chunk boundary in arrival order whenever a key's
-        # micro-batch spans multiple record batches, diverging from the
-        # batch twin's (ts_us, event_id) ordering.
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        for vu in rows["vu"].astype("int64"):
-            cur = int(vu)
+    def step(st: tuple, cols: dict) -> tuple:
+        nv, prev, v0, v1, dx, dy, sx, sy, *hilo = st
+        sxy, sxx, syy = (
+            hi * _HILO_BASE + lo for hi, lo in zip(hilo[::2], hilo[1::2])
+        )
+        for cur in cols["vu"].tolist():
             if nv == 0:
                 v0 = cur
             elif nv == 1:
                 v1 = cur
             if nv >= 1:
                 # pair (prev -> cur): x-series gains prev, y gains cur
-                if prev != v0:
-                    dx = 1
-                if nv >= 2 and cur != v1:
-                    dy = 1
+                dx |= prev != v0
+                dy |= nv >= 2 and cur != v1
                 sx += prev
                 sy += cur
                 sxy += prev * cur
                 sxx += prev * prev
                 syy += cur * cur
-            prev = cur
-            nv += 1
-        sxy_hi, sxy_lo = divmod(sxy, _HILO_BASE)
-        sxx_hi, sxx_lo = divmod(sxx, _HILO_BASE)
-        syy_hi, syy_lo = divmod(syy, _HILO_BASE)
-        state.update(
-            (nv, prev, v0, v1, dx, dy, sx, sy,
-             sxy_hi, sxy_lo, sxx_hi, sxx_lo, syy_hi, syy_lo)
-        )
-        n = nv - 1
-        r_u = None
+            prev, nv = cur, nv + 1
+        n, r_u = nv - 1, None
         if n >= 3 and dx and dy:
-            # the batch twin's EXACT dag: ints -> IEEE doubles -> one
-            # multiply/subtract/sqrt/divide chain -> half-up micro floor
             num = float(n) * float(sxy) - float(sx) * float(sy)
             den = math.sqrt(
                 (float(n) * float(sxx) - float(sx) * float(sx))
                 * (float(n) * float(syy) - float(sy) * float(sy))
             )
-            r_u = int(math.floor(num / den * 1_000_000 + 0.5))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_pairs": pd.array([n], dtype="Int64"),
-                "r_u": pd.array([r_u], dtype="Int64"),
-            }
-        )
+            r_u = math.floor(num / den * 1_000_000 + 0.5)
+        hilo = [p for v in (sxy, sxx, syy) for p in divmod(v, _HILO_BASE)]
+        return (nv, prev, v0, v1, dx, dy, sx, sy, *hilo), [(n, r_u)]
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=f"{key_col} {key_type}, n_pairs long, r_u long",
-        stateStructType=(
-            "nv long, prev long, v0 long, v1 long, dx long, dy long,"
-            " sx long, sy long, sxy_hi long, sxy_lo long,"
-            " sxx_hi long, sxx_lo long, syy_hi long, syy_lo long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "n_pairs long, r_u long",
+        "nv long, prev long, v0 long, v1 long, dx long, dy long,"
+        " sx long, sy long, sxy_hi long, sxy_lo long,"
+        " sxx_hi long, sxx_lo long, syy_hi long, syy_lo long",
+        (0,) * 14,
     )
 
 
@@ -1683,126 +1250,47 @@ def running_holt(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online Holt level+trend smoother — the LIVE stateful sibling of
-    the batch ``window_holt_smooth`` query (round 14), following the
-    ``running_ewma`` pattern exactly: state per key is ONLY the
-    bounded ≤ _HOLT_FRAME+1-value ring (the ring IS the frame), each
-    event re-runs the identical left fold over at most 16 doubles with
-    the 2-element list accumulator, so live and batch agree
-    bit-for-bit on level_u/trend_u/forecast_u (tests pin row equality
-    across a kill-and-resume). Batch input delegates to the identical
-    declarative window form instead of raising — the documented
-    running_* convention.
+    """Online Holt level+trend smoother, the live twin of
+    ``window_holt_smooth``: per purchase event, the (level, trend) left
+    fold over its frame (level = first value, trend = 0 at the frame
+    head) with the batch 2-element accumulator's double operations, so
+    level_u/trend_u/forecast_u agree bit for bit. State: the
+    ≤ _HOLT_FRAME + 1-value ring.
     """
-    from pyspark.sql import Window
-
-    from jorvik_spark.queries.windows import _HOLT_ALPHA, _HOLT_BETA, _HOLT_FRAME
-
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col(key_col).isNotNull()
-        & (F.col("event_type") == "purchase")
-    ).select(
-        key_col,
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .cast("double")
-        .alias("vu"),
+    from jorvik_spark.queries.windows import (
+        _HOLT_ALPHA,
+        _HOLT_BETA,
+        _HOLT_FRAME,
+        holt_smooth,
+        screened_events,
     )
+
+    filtered = screened_events(df, key_col, vu_type="double")
     if not df.isStreaming:
-        w = (
-            Window.partitionBy(key_col)
-            .orderBy("ts_us", "event_id")
-            .rowsBetween(-_HOLT_FRAME, Window.currentRow)
-        )
-        framed = filtered.withColumn("lst", F.collect_list("vu").over(w))
-        a, b = _HOLT_ALPHA, _HOLT_BETA
+        return holt_smooth(filtered, key_col)
 
-        def _step(acc, x):
-            lvl = F.element_at(acc, 1)
-            trd = F.element_at(acc, 2)
-            new_l = x * F.lit(a) + (lvl + trd) * F.lit(1 - a)
-            new_b = (new_l - lvl) * F.lit(b) + trd * F.lit(1 - b)
-            return F.array(new_l, new_b)
-
-        st = F.aggregate(
-            F.slice(F.col("lst"), 2, F.size("lst") - 1),
-            F.array(F.element_at("lst", 1), F.lit(0.0)),
-            _step,
-        )
-        return framed.withColumn("st", st).select(
-            key_col,
-            "event_id",
-            F.col("ts_us").cast("long").alias("t"),
-            F.size("lst").cast("int").alias("n_in_frame"),
-            F.floor(F.element_at("st", 1) + F.lit(0.5))
-            .cast("long")
-            .alias("level_u"),
-            F.floor(F.element_at("st", 2) + F.lit(0.5))
-            .cast("long")
-            .alias("trend_u"),
-            F.floor(
-                F.element_at("st", 1) + F.element_at("st", 2) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("forecast_u"),
+    def fold(ring: deque) -> tuple:
+        lvl, *rest = ring
+        trd = 0.0
+        for x in rest:
+            new_l = x * _HOLT_ALPHA + (lvl + trd) * (1 - _HOLT_ALPHA)
+            trd = (new_l - lvl) * _HOLT_BETA + trd * (1 - _HOLT_BETA)
+            lvl = new_l
+        return (
+            math.floor(lvl + 0.5),
+            math.floor(trd + 0.5),
+            math.floor(lvl + trd + 0.5),
         )
 
-    alpha, beta, frame = _HOLT_ALPHA, _HOLT_BETA, _HOLT_FRAME
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        ring = list(state.get[0]) if state.exists else []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        out = {k: [] for k in ("eid", "t", "n", "l", "b", "f")}
-        for _, row in rows.iterrows():
-            ring.append(float(row["vu"]))
-            if len(ring) > frame + 1:
-                ring.pop(0)
-            # identical left fold as the batch window's F.aggregate
-            lvl, trd = ring[0], 0.0
-            for x in ring[1:]:
-                new_l = x * alpha + (lvl + trd) * (1 - alpha)
-                trd = (new_l - lvl) * beta + trd * (1 - beta)
-                lvl = new_l
-            out["eid"].append(int(row["event_id"]))
-            out["t"].append(int(row["ts_us"]))
-            out["n"].append(len(ring))
-            out["l"].append(int(math.floor(lvl + 0.5)))
-            out["b"].append(int(math.floor(trd + 0.5)))
-            out["f"].append(int(math.floor(lvl + trd + 0.5)))
-        state.update((ring,))
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]] * len(out["eid"]), dtype="Int64"),
-                "event_id": pd.array(out["eid"], dtype="Int64"),
-                "t": pd.array(out["t"], dtype="Int64"),
-                "n_in_frame": pd.array(out["n"], dtype="Int32"),
-                "level_u": pd.array(out["l"], dtype="Int64"),
-                "trend_u": pd.array(out["b"], dtype="Int64"),
-                "forecast_u": pd.array(out["f"], dtype="Int64"),
-            }
-        )
-
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, event_id long, t long, n_in_frame int,"
-            " level_u long, trend_u long, forecast_u long"
-        ),
-        stateStructType="ring array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        _frame_step(_HOLT_FRAME, fold),
+        "event_id long, t long, n_in_frame int,"
+        " level_u long, trend_u long, forecast_u long",
+        "ring array<double>",
+        ([],),
+        mode="append",
     )
 
 
@@ -1810,28 +1298,16 @@ def running_churn(
     df: DataFrame,
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Online per-key inactivity tracker — the LIVE stateful sibling of
-    the batch ``audit_user_churn_census`` (round 15): per event, the
-    closed gap to the key's previous event and the running maximum
-    historical gap. The census's churn ratio is then one narrow
-    expression over each key's LATEST row (open silence ÷
-    max_hist_gap_us) — an ops dashboard keeps this per-key state hot
-    instead of re-scanning history per refresh.
-
-    State per key is TWO longs (last event µs, max closed gap µs) —
-    the smallest state in the running_* family. Ties inside a
-    micro-batch break by (ts_us, event_id), the module convention, so
-    live and batch agree bit-for-bit (the restart test pins row
-    equality across a kill-and-resume). Batch input delegates to the
-    identical declarative window form instead of raising.
+    """Online per-key inactivity tracker, the live sibling of
+    ``audit_user_churn_census``: per event, the gap to the key's
+    previous event and the running maximum gap. The census's churn ratio
+    is one expression over each key's latest row (open silence ÷
+    max_hist_gap_us). State: (last event µs, max gap µs), the max gap
+    -1 for a key with one event and no gap yet.
     """
-    filtered = df.filter(
-        F.col("ts").isNotNull() & F.col(key_col).isNotNull()
-    ).select(
-        key_col,
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-    )
+    from jorvik_spark.queries.windows import screened_events
+
+    filtered = screened_events(df, key_col, value=False, purchase=False)
     if not df.isStreaming:
         from pyspark.sql import Window
 
@@ -1852,52 +1328,25 @@ def running_churn(
             )
         )
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        last_t, maxg = state.get if state.exists else (None, None)
-        # decode the single-event sentinel stored below: a restored key
-        # with (last_t, -1) has a timestamp but no gap history yet
-        maxg = None if maxg == -1 else maxg
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        out = {k: [] for k in ("eid", "t", "gap", "maxg")}
-        for _, row in rows.iterrows():
-            t = int(row["ts_us"])
+    def step(st: tuple, cols: dict) -> tuple:
+        last_t, maxg = st
+        maxg, out = None if maxg == -1 else maxg, []
+        for eid, t in zip(cols["event_id"].tolist(), cols["ts_us"].tolist()):
             gap = None if last_t is None else t - last_t
             if gap is not None and (maxg is None or gap > maxg):
                 maxg = gap
-            out["eid"].append(int(row["event_id"]))
-            out["t"].append(t)
-            out["gap"].append(gap)
-            out["maxg"].append(maxg)
+            out.append((eid, t, gap, maxg))
             last_t = t
-        # state columns are non-nullable longs in practice once a key
-        # has 2+ events; a single-event key stores (last_t, -1) and
-        # decodes -1 back to "no history yet"
-        state.update((last_t, -1 if maxg is None else maxg))
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]] * len(out["eid"]), dtype="Int64"),
-                "event_id": pd.array(out["eid"], dtype="Int64"),
-                "t": pd.array(out["t"], dtype="Int64"),
-                "gap_us": pd.array(out["gap"], dtype="Int64"),
-                "max_hist_gap_us": pd.array(out["maxg"], dtype="Int64"),
-            }
-        )
+        return (last_t, -1 if maxg is None else maxg), out
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, event_id long, t long,"
-            " gap_us long, max_hist_gap_us long"
-        ),
-        stateStructType="last_t long, maxg long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "event_id long, t long, gap_us long, max_hist_gap_us long",
+        "last_t long, maxg long",
+        (None, -1),
+        mode="append",
     )
 
 
@@ -1906,91 +1355,37 @@ def running_breakout(
     key_col: str = "user_id",
     lookback: int = 8,
 ) -> DataFrame:
-    """Online rolling-max breakout detector — the LIVE stateful sibling
-    of the batch ``window_breakout_census`` (round 16): per event, the
-    max of the key's previous ≤ ``lookback`` micro-quantized values and
-    whether this reading strictly exceeds it (a new recent high). The
-    census's per-user breakout counts are then a plain aggregate over
-    these rows — an alerting pipeline consumes the per-event flag
-    directly instead of re-windowing history.
-
-    State per key is a hard-bounded ring of ≤ ``lookback`` longs (the
-    holt/EWMA ring convention); ties inside a micro-batch break by
-    (ts_us, event_id), the module convention, so live and batch agree
-    bit-for-bit. Batch input delegates to the identical declarative
-    window form instead of raising.
+    """Online rolling-max breakout detector, the live twin of the
+    per-event stage of ``window_breakout_census``: per event, the max of
+    the key's previous ≤ ``lookback`` micro-unit values (``prev_max_u``)
+    and whether this value strictly exceeds it (a new recent high); the
+    census's per-user breakout counts are a plain aggregate over these
+    rows. State: the ring of ≤ ``lookback`` values.
     """
-    filtered = df.filter(
-        F.col("ts").isNotNull()
-        & F.col(key_col).isNotNull()
-        & F.col("value").isNotNull()
-    ).select(
-        key_col,
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.floor(F.col("value") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
-    )
+    from jorvik_spark.queries.windows import breakout_scores, screened_events
+
+    filtered = screened_events(df, key_col, purchase=False)
     if not df.isStreaming:
-        from pyspark.sql import Window
+        return breakout_scores(filtered, key_col, lookback)
 
-        w = Window.partitionBy(key_col).orderBy("ts_us", "event_id").rowsBetween(
-            -lookback, -1
-        )
-        prev_max = F.max("vu").over(w)
-        return filtered.select(
-            key_col,
-            "event_id",
-            F.col("ts_us").cast("long").alias("t"),
-            F.col("vu").cast("long"),
-            prev_max.cast("long").alias("prev_max_u"),
-            (
-                prev_max.isNotNull() & (F.col("vu") > prev_max)
-            ).alias("is_breakout"),
-        )
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (ring,) = state.get if state.exists else ([],)
-        ring = list(ring)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_us", "event_id"])
-        out = {k: [] for k in ("eid", "t", "vu", "pm", "br")}
-        for _, row in rows.iterrows():
-            t, vu = int(row["ts_us"]), int(row["vu"])
+    def step(st: tuple, cols: dict) -> tuple:
+        ring, out = deque(st[0], maxlen=lookback), []
+        for eid, t, x in zip(
+            cols["event_id"].tolist(),
+            cols["ts_us"].tolist(),
+            cols["vu"].tolist(),
+        ):
             pm = max(ring) if ring else None
-            out["eid"].append(int(row["event_id"]))
-            out["t"].append(t)
-            out["vu"].append(vu)
-            out["pm"].append(pm)
-            out["br"].append(pm is not None and vu > pm)
-            ring.append(vu)
-            if len(ring) > lookback:
-                ring.pop(0)
-        state.update((ring,))
-        yield pd.DataFrame(
-            {
-                key_col: pd.array([key[0]] * len(out["eid"]), dtype="Int64"),
-                "event_id": pd.array(out["eid"], dtype="Int64"),
-                "t": pd.array(out["t"], dtype="Int64"),
-                "vu": pd.array(out["vu"], dtype="Int64"),
-                "prev_max_u": pd.array(out["pm"], dtype="Int64"),
-                "is_breakout": pd.array(out["br"], dtype="boolean"),
-            }
-        )
+            out.append((eid, t, x, pm, pm is not None and x > pm))
+            ring.append(x)
+        return (list(ring),), out
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, event_id long, t long, vu long,"
-            " prev_max_u long, is_breakout boolean"
-        ),
-        stateStructType="ring array<bigint>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _live_twin(
+        filtered,
+        key_col,
+        step,
+        "event_id long, t long, vu long, prev_max_u long, is_breakout boolean",
+        "ring array<bigint>",
+        ([],),
+        mode="append",
     )

@@ -187,7 +187,7 @@ def test_fixed_point_quantization_cross_engine(spark):
     oracle hash parity of every money aggregation rests on."""
     import duckdb
 
-    from jorvik_spark.queries.registry import _DUCKDB, _SPARK, _units
+    from jorvik_spark.queries.registry import sql_units, units
 
     vals = [
         0.0, -0.0, 1.5e-6, -1.5e-6, 0.5e-6, -0.5e-6,
@@ -198,11 +198,11 @@ def test_fixed_point_quantization_cross_engine(spark):
     ] + [x * 0.1 + 7e-7 for x in range(-50, 50)]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [
-        r.q for r in df.select(F.expr(_units("x", _SPARK)).alias("q")).collect()
+        r.q for r in df.select(units("x").alias("q")).collect()
     ]
     con = duckdb.connect()
     want = [
-        con.execute(f"SELECT {_units('?', _DUCKDB)}", [v]).fetchone()[0]
+        con.execute(f"SELECT {sql_units('?')}", [v]).fetchone()[0]
         for v in vals
     ]
     assert got == want, [
@@ -765,11 +765,17 @@ def test_countmin_sketch_law(spark, counts):
         max_size=20,
     )
 )
+# exact half-way quotients (98437.5 micro-units either sign): both
+# engines round them away from zero, a binary-float round() does not
+@example(events=[(0, 45, 0), (0, 46, 1), (0, 109, 0)])
+@example(events=[(0, 45, 0), (0, 46, -1), (0, 109, 0)])
 def test_time_weighted_avg_law(spark, events):
     """Law behind window_time_weighted_avg, vs a brute-force Python
     model: per user, TWA = Σ(value·hold)/Σ(hold) over the sorted
     timeline using only POSITIVE holding intervals — users whose events
-    all share one instant produce NO row (never a 0/0)."""
+    all share one instant produce NO row (never a 0/0). The model rounds
+    the exact quotient to 6 places half away from zero, as Spark's and
+    DuckDB's round() do."""
     import datetime
     import tempfile
 
@@ -809,7 +815,9 @@ def test_time_weighted_avg_law(spark, events):
                 sd += dur
                 n += 1
         if sd > 0:
-            want[u] = (n, round((svd / sd) / 1_000_000.0, 6), sd)
+            # svd / sd is the TWA in micro-units: round it to an integer
+            k = (2 * abs(svd) + sd) // (2 * sd)
+            want[u] = (n, (k if svd >= 0 else -k) / 1_000_000, sd)
     got = {
         r["user_id"]: (
             r["n_intervals"],
