@@ -35,10 +35,10 @@ twin, and the contract is the same for all of them:
   ``applyInPandasWithState`` call in this module. The operator supplies
   only ``step(state, cols) -> (state, rows)``: one key's micro-batch as
   numpy columns in, the new state tuple and the output rows out.
-* **Order.** A key's rows reach ``step`` sorted by (ts_us, event_id), the
-  batch windows' order. With in-order delivery across micro-batches (the
-  landing-zone discipline), the last emission per key (update mode) or
-  every row (append mode) equals the batch branch. Out-of-order arrival
+* **Order.** A key's rows reach ``step`` sorted by (ts_us, event_id), a
+  NULL id first: the batch windows' order. With in-order delivery across
+  micro-batches (the landing-zone discipline), the last emission per key
+  (update mode) or every row (append mode) equals the batch branch. Out-of-order arrival
   needs a watermark-buffered sort upstream.
 * **Key type.** The grouping key keeps its own Spark type in the output,
   so a string key streams as it batches.
@@ -430,14 +430,22 @@ def _live_twin(
     Per key and micro-batch it reads the state (``init`` for a new key),
     concatenates the key's Arrow chunks, sorts them once by
     (ts_us, event_id) when the projection carries ``ts_us`` (the totals
-    are order-free), and calls ``step`` with one numpy array per input
-    column — so a 64-bit id stays exact. It stores the state ``step``
-    returns and emits its rows (tuples in ``out_schema`` order) behind
-    the key, which keeps its own Spark type; each ``out_schema`` column
-    is a nullable pandas dtype.
+    are order-free; a NULL id sorts first, as in the batch windows), and
+    calls ``step`` with one numpy array per input column. ``event_id``
+    crosses as a non-null long plus a null flag, since pandas would carry
+    a long column holding a NULL as float64 and round ids >= 2^53; a NULL
+    id reaches ``step`` as None in an object array. It stores the state
+    ``step`` returns and emits its rows (tuples in ``out_schema`` order)
+    behind the key, which keeps its own Spark type; each ``out_schema``
+    column is a nullable pandas dtype.
     """
     names, types = zip(*(f.split() for f in out_schema.split(",")))
     dtypes = [_PD_DTYPES[t] for t in types]
+    if "event_id" in filtered.columns:
+        filtered = filtered.withColumns({
+            "event_id": F.coalesce("event_id", F.lit(0)),
+            "_id_null": F.col("event_id").isNull(),
+        })
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -446,8 +454,12 @@ def _live_twin(
         pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
         cols = {c: pdf[c].to_numpy() for c in pdf.columns}
         if "ts_us" in cols:
-            order = np.lexsort((cols["event_id"], cols["ts_us"]))
+            order = np.lexsort((cols["event_id"], ~cols["_id_null"], cols["ts_us"]))
             cols = {c: v[order] for c, v in cols.items()}
+        null_id = cols.pop("_id_null", None)
+        if null_id is not None and null_id.any():
+            cols["event_id"] = cols["event_id"].astype(object)
+            cols["event_id"][null_id] = None
         new_state, rows = step(state.get if state.exists else init, cols)
         state.update(new_state)
         if rows:

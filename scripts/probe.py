@@ -5,12 +5,12 @@ Usage:
   python scripts/probe.py QUERY [QUERY ...] [--runs N] [--plan-dir DIR]
                           [--sf DIR] [--collect]
 
-Per query: warm until two consecutive runs improve < 3% (bench.py's
-regime, cap 8), then N timed runs of a noop-sink write (computes every
-column, discards the result — times the computation, not the sink or the
-driver transfer); reports each run and the median. --collect times
-.collect() instead (bench.py's regime) for apples-to-apples against
-BENCH numbers. Plans land in --plan-dir as <query>.txt when given.
+Per query: bench.py's plateau warm-up (``bench.warm_up``), then N timed
+runs of a noop-sink write (computes every column, discards the result —
+times the computation, not the sink or the driver transfer); reports
+each run and the median. --collect times .collect() instead (bench.py's
+regime) for apples-to-apples against BENCH numbers. Plans land in
+--plan-dir as <query>.txt when given.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from jorvik_spark.session import get_session  # noqa: E402
 from jorvik_spark.queries import QUERIES  # noqa: E402
 
@@ -64,14 +65,7 @@ def main() -> None:
         if args.runs <= 0:
             print(f"PLAN {qname} written", flush=True)
             continue
-        prev = float("inf")
-        plateau = 0
-        for i in range(8):
-            cur = run_once(qname)
-            plateau = plateau + 1 if cur > prev * 0.97 else 0
-            if i >= 2 and plateau >= 2:
-                break
-            prev = min(prev, cur)
+        bench.warm_up(lambda: run_once(qname))
         runs = [run_once(qname) for _ in range(args.runs)]
         try:
             load = round(os.getloadavg()[0], 2)

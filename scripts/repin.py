@@ -1,31 +1,23 @@
-"""Fresh-session deep-warm quiet 5-run pin capture (PINS.json discipline).
+"""Re-pin gate-table entries; the only writer of PINS.json ``labels``.
 
 Usage:
-  python scripts/repin.py LABEL [LABEL ...] [--runs N] [--out FILE]
-  python scripts/repin.py --cold LABEL [...]   # cold-pin regime
+  python scripts/repin.py [LABEL ...] [--captures N] [--sf DIR]
 
-Labels are bench cohort labels (e.g. r10_triangle). Per label: resolve
-the registered query via bench's cohort dicts, deep-warm exactly like
-bench.time_query (plateau detection, cap 10), then N timed collect()
-runs. Emits one JSON object {label: {query, runs, median, load_before,
-load_after}} suitable for pasting into PINS.json provenance fields.
+Measures the labels (default: every label) N times (default 3) with
+bench.py's routine, one pass over the labels per capture, and sets each
+label's ``warm`` (and ``cold``, when the entry pins one) to the median of the
+per-capture ratios. ``runs`` keeps those ratios; ``date``, ``nproc`` and the
+1-min ``load_window`` record where they were taken. The table is rewritten
+after every capture. A re-pin can tighten as well as loosen.
 
---cold switches to the bench's cold regime (r18): labels resolve via
-BENCH_COLD_QUERIES, each run starts from a clear_memos() state and
-there is no deep warm-up beyond one throwaway JIT run WITH memos
-cleared before it (the bench's cold pass runs inside an already-JIT-hot
-session, so a fresh-process cold pin must discard the first run or it
-would pin JVM compile time into the ref).
-
-Run this on a QUIET host in a FRESH process — the point of the pin is a
-session unpolluted by a prior capture's JIT/cache state beyond the
-query's own deep warm-up.
+A label is added by hand as ``"label": {"query": NAME, "cold": null}``
+(``"cold": 0`` to pin its cold regime too) and then re-pinned. Run on the
+host the gate should hold on, with SPARK_GRAFT_CPUS as bench.py runs.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import statistics
 import sys
@@ -34,98 +26,39 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from jorvik_spark.session import get_session  # noqa: E402
-from jorvik_spark.queries import QUERIES  # noqa: E402
-
-ALL_COHORTS = (
-    bench.BENCH_QUERIES,
-    bench.BENCH_2C_QUERIES,
-    bench.BENCH_R8_QUERIES,
-    bench.BENCH_R9_QUERIES,
-    bench.BENCH_R10_QUERIES,
-    bench.BENCH_R11_QUERIES,
-    bench.BENCH_R12_QUERIES,
-    bench.BENCH_R13_QUERIES,
-    bench.BENCH_R14_QUERIES,
-    bench.BENCH_R15_QUERIES,
-    bench.BENCH_R16_QUERIES,
-)
+from jorvik_spark.tables import default_sf_dir  # noqa: E402
 
 
-def resolve(label: str, cold: bool = False) -> str:
-    if cold:
-        if label in bench.BENCH_COLD_QUERIES:
-            return bench.BENCH_COLD_QUERIES[label]
-        raise SystemExit(f"unknown cold bench label: {label}")
-    for cohort in ALL_COHORTS:
-        if label in cohort:
-            return cohort[label]
-    raise SystemExit(f"unknown bench label: {label}")
+def pin(labels: dict, captures: list) -> None:
+    for lb, e in labels.items():
+        runs = {r: [c[r][lb]["x"] for c in captures] for r in bench.REGIMES if lb in captures[0][r]}
+        loads = [c[r][lb]["load"] for c in captures for r in runs]
+        e.update({r: round(statistics.median(xs), 4) for r, xs in runs.items()})
+        e.update(runs=runs, date=time.strftime("%Y-%m-%d"),
+                 nproc=int(os.environ["SPARK_GRAFT_CPUS"]), load_window=[min(loads), max(loads)])
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("labels", nargs="+")
-    ap.add_argument("--runs", type=int, default=5)
-    ap.add_argument("--cold", action="store_true")
-    ap.add_argument("--out", default=None)
-    ap.add_argument(
-        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    )
+    ap.add_argument("labels", nargs="*")
+    ap.add_argument("--captures", type=int, default=3)
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR") or default_sf_dir("sf0.1"))
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)
-    spark = get_session("jorvik_repin", master=f"local[{cpus}]")
+    doc = bench.load_table()
+    if bench.sf_of(args.sf) != doc["sf"] and args.labels:
+        raise SystemExit(f"the table is pinned at sf {doc['sf']}: re-pin every label to move it")
+    doc["sf"] = bench.sf_of(args.sf)
+    labels = {lb: doc["labels"][lb] for lb in args.labels or doc["labels"]}
+    from jorvik_spark.queries import QUERIES
 
-    from jorvik_spark.queries.registry import clear_memos
-
-    out: dict = {"date": time.strftime("%Y-%m-%d"), "cpus": int(cpus)}
-    for label in args.labels:
-        qname = resolve(label, cold=args.cold)
-        fn = QUERIES[qname]
-        load_before = round(os.getloadavg()[0], 2)
-        if args.cold:
-            # one discarded cleared run absorbs fresh-process JIT; each
-            # timed run then starts from a cleared memo state (the bench
-            # cold regime)
-            clear_memos()
-            fn(spark, args.sf).collect()
-        else:
-            # bench.py's adaptive warm-up regime, verbatim
-            prev = float("inf")
-            plateau = 0
-            for i in range(10):
-                t0 = time.perf_counter()
-                fn(spark, args.sf).collect()
-                cur = time.perf_counter() - t0
-                plateau = plateau + 1 if cur > prev * 0.97 else 0
-                if i >= 2 and plateau >= 2:
-                    break
-                prev = min(prev, cur)
-        runs = []
-        for _ in range(args.runs):
-            if args.cold:
-                clear_memos()
-            t0 = time.perf_counter()
-            fn(spark, args.sf).collect()
-            runs.append(round(time.perf_counter() - t0, 4))
-        if args.cold:
-            clear_memos()
-        row = {
-            "query": qname,
-            "runs": runs,
-            "median": round(statistics.median(runs), 4),
-            "load_before": load_before,
-            "load_after": round(os.getloadavg()[0], 2),
-        }
-        out[label] = row
-        print(f"{label}: {row}", file=sys.stderr)
-    payload = json.dumps(out, indent=1)
-    print(payload)
-    if args.out:
-        with open(args.out, "w") as fh:
-            fh.write(payload)
+    spark, calibrate = bench.session("jorvik_repin")
+    timer = bench.collect_timer(spark, args.sf)
+    captures = []
+    for _ in range(args.captures):
+        captures.append(bench.run_table(labels, QUERIES, timer, calibrate, applied=False))
+        pin(labels, captures)
+        bench.write_table(doc)
 
 
 if __name__ == "__main__":

@@ -16,6 +16,20 @@ def spark():
 
 
 @pytest.fixture
+def few_shuffle_partitions(spark):
+    """Four shuffle partitions for the test, restored after it: a stateful
+    drain over one or two keys then runs four state stores per micro-batch
+    instead of the session's 32."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)``: the Spark jobs ``fn()`` submits, counted with
     ``statusTracker`` under a fresh job group."""

@@ -1,7 +1,7 @@
-"""bench.py's cold pass must cover EVERY memo_df key family (r18, the
-r17 verdict's item #2): a one-time session build (shingle index,
-adjacency bitmaps, ANN ground truth, …) whose cost regresses 10× would
-otherwise be invisible to every warm gate.
+"""bench.py's cold regime must cover EVERY memo_df key family: a one-time
+session build (shingle index, adjacency bitmaps, ANN ground truth, …)
+whose cost regresses 10× would otherwise be invisible to every warm gate.
+The cold labels are the PINS.json labels with a ``cold`` pin.
 
 Two layers: a STATIC check that every memo key prefix found in the
 source has a cold-list shape claiming it, and a DYNAMIC check that
@@ -60,9 +60,12 @@ def test_cold_list_builds_every_memo_family(spark):
     source prefix."""
     from jorvik_spark.queries import QUERIES
 
+    cold = {lb: e["query"] for lb, e in bench.load_table()["labels"].items()
+            if e["cold"] is not None}
+    assert len(cold) >= 29
     registry.clear_memos()
     created: set[str] = set()
-    for lb, qn in bench.BENCH_COLD_QUERIES.items():
+    for lb, qn in cold.items():
         assert qn in QUERIES, f"cold label {lb} names unknown query {qn}"
         QUERIES[qn](spark, SF_DIR).collect()
         created |= {k.split(":", 1)[0] for k in registry._MEMO}
@@ -75,5 +78,5 @@ def test_cold_list_builds_every_memo_family(spark):
     }
     assert not missing, (
         f"memo families with no cold-list shape: {sorted(missing)} — "
-        "add a representative query to bench.BENCH_COLD_QUERIES"
+        "pin a cold regime for a representative query in PINS.json"
     )

@@ -6,7 +6,8 @@ the result with the operator's own batch branch over the same rows: the
 last emission per key (per bar for OHLC) for the update-mode twins,
 every row for the twins that emit one row per event. The stream has a
 STRING key, event ids above 2^53 (a float64 round trip collapses
-2^60 + 1 onto 2^60), ties on ts broken by event_id, and
+2^60 + 1 onto 2^60) in the same micro-batch as a NULL id, ties on ts
+broken by event_id (a NULL id first), and
 ``spark.sql.execution.arrow.maxRecordsPerBatch=2``, so a key's rows span
 several Arrow chunks and arrive out of (ts, event_id) order.
 
@@ -43,6 +44,9 @@ def _rows() -> list:
             minute = 7 * (i - (i == 4)) + k
             ts = base + datetime.timedelta(minutes=minute)
             rows.append((id0 + i, ts, key, "purchase", v, None))
+            if id0 == _BIG_ID and i == 0:
+                # a NULL id beside 2^60 + 1, at its ts: it sorts first
+                rows.append((None, ts, key, "purchase", 9.9, None))
         late = base + datetime.timedelta(minutes=200 + k)
         rows.append((id0 + 50, late, key, "view", 99.0, None))
         rows.append((id0 + 51, late, key, "purchase", None, None))
@@ -99,21 +103,15 @@ def twin_src(spark, tmp_path_factory):
 
 
 @pytest.fixture
-def small_arrow_batches(spark):
-    # two rows per Arrow chunk; four state partitions keep the drains
-    # short (two keys need no more)
-    confs = {
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "2",
-        "spark.sql.shuffle.partitions": "4",
-    }
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
+def small_arrow_batches(spark, few_shuffle_partitions):
+    # two rows per Arrow chunk
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
     try:
         yield
     finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+        spark.conf.set(key, old)
 
 
 def _norm(row) -> tuple:

@@ -1,112 +1,64 @@
-"""PINS.json ↔ bench.py consistency (round-14 verdict item #3).
+"""PINS.json, bench.py's gate table: every label names a registered query,
+bench gates against exactly these pins, and every pinned ratio is the
+median of the captures recorded beside it."""
 
-Gate reference seconds are machine-checkable evidence now: bench.py
-builds every GATE_*_REF from PINS.json, and this suite asserts the file
-covers every gated bench label with the required provenance fields —
-so a re-pin without recorded evidence fails CI instead of hiding in
-PROFILE.md prose.
-"""
-
-import json
 import statistics
-from pathlib import Path
 
 import bench
+from jorvik_spark.queries import QUERIES
 
-PINS_PATH = Path(__file__).resolve().parent.parent / "PINS.json"
-
-REQUIRED_FIELDS = {
-    "ref",
-    "pinned_round",
-    "method",
-    "source",
-    "runs",
-    "date",
-    "load_window",
-    "session",
-    "old_ref",
-    "reason",
-}
-
-# gate key in PINS.json -> (bench membership dict, bench ref dict)
-GATED_COHORTS = {
-    "2c": (bench.BENCH_2C_QUERIES, bench.GATE_2C_REF),
-    "r8": (bench.BENCH_R8_QUERIES, bench.GATE_R8_REF),
-    "r9": (bench.BENCH_R9_QUERIES, bench.GATE_R9_REF),
-    "r10": (bench.BENCH_R10_QUERIES, bench.GATE_R10_REF),
-    "r11": (bench.BENCH_R11_QUERIES, bench.GATE_R11_REF),
-    "r12": (bench.BENCH_R12_QUERIES, bench.GATE_R12_REF),
-    "r13": (bench.BENCH_R13_QUERIES, bench.GATE_R13_REF),
-    "r14": (bench.BENCH_R14_QUERIES, bench.GATE_R14_REF),
-    "r15": (bench.BENCH_R15_QUERIES, bench.GATE_R15_REF),
-}
+TABLE = bench.load_table()
+LABELS = TABLE["labels"]
+FIELDS = {"query", "warm", "cold", "runs", "date", "nproc", "load_window"}
 
 
-def _pins():
-    return json.loads(PINS_PATH.read_text())["gates"]
+def _pinned(entry: dict) -> set:
+    return {r for r in bench.REGIMES if entry.get(r) is not None}
+
+
+def test_every_label_names_a_registered_query():
+    unknown = {lb: e["query"] for lb, e in LABELS.items() if e["query"] not in QUERIES}
+    assert not unknown
 
 
 def test_every_gated_label_has_a_pin_and_nothing_extra():
-    pins = _pins()
-    for key, (members, _) in GATED_COHORTS.items():
-        assert key in pins, f"gate {key} missing from PINS.json"
-        pinned = set(pins[key]["pins"])
-        assert pinned == set(members), (
-            f"gate {key}: PINS.json labels {pinned} != bench membership "
-            f"{set(members)}"
-        )
+    assert set(bench.HEADLINE) <= set(LABELS)
+    assert TABLE["sf"] == 0.1
+    for lb, e in LABELS.items():
+        assert "warm" in _pinned(e), f"{lb}: no warm pin"
+        assert set(e["runs"]) == _pinned(e), f"{lb}: runs {set(e['runs'])} != pins"
 
 
 def test_bench_refs_come_from_pins():
-    pins = _pins()
-    for key, (_, refs) in GATED_COHORTS.items():
-        for lb, entry in pins[key]["pins"].items():
-            assert refs[lb] == entry["ref"], f"{lb}: bench ref != PINS.json ref"
+    # bench's own loop over the table, with instant fake timings
+    detail = bench.run_table(LABELS, {q: q for q in QUERIES}, lambda q, c: 1.0,
+                             lambda: 1.0, applied=True)
+    for r in bench.REGIMES:
+        assert set(detail[r]) == {lb for lb, e in LABELS.items() if e[r] is not None}
+        for lb, row in detail[r].items():
+            assert row["ref"] == LABELS[lb][r]
 
 
 def test_pin_entries_carry_required_provenance():
-    for key, g in _pins().items():
-        for lb, entry in g["pins"].items():
-            missing = REQUIRED_FIELDS - set(entry)
-            assert not missing, f"{lb}: missing fields {missing}"
-            assert entry["ref"] > 0
-            assert isinstance(entry["pinned_round"], int)
-            assert entry["method"] and entry["source"] and entry["reason"]
-            assert entry["session"] in (
-                "fresh-deep-warm",
-                "bench-session",
-                "driver-capture",
-            )
+    for lb, e in LABELS.items():
+        assert set(e) == FIELDS, f"{lb}: fields {set(e)}"
+        assert e["date"] and e["nproc"] >= 1, lb
+        lo, hi = e["load_window"]
+        assert 0 <= lo <= hi, lb
 
 
 def test_recorded_run_lists_support_their_ref():
-    # When a run list is recorded AND the method is a median-of-runs
-    # pin, median(runs) must reproduce ref within 2% (rounding). Pins
-    # whose runs are capture medians with ref at the band edge declare
-    # that in `method` and are checked for band membership instead.
-    for key, g in _pins().items():
-        for lb, entry in g["pins"].items():
-            runs = entry["runs"]
-            if not runs:
-                continue
-            if "median" in entry["method"] and "max of" not in entry["method"]:
-                med = statistics.median(runs)
-                assert abs(med - entry["ref"]) <= 0.02 * entry["ref"], (
-                    f"{lb}: median({runs}) = {med} != ref {entry['ref']}"
-                )
-            else:
-                lo, hi = min(runs), max(runs)
-                assert lo <= entry["ref"] <= hi * 1.02, (
-                    f"{lb}: ref {entry['ref']} outside run band [{lo}, {hi}]"
-                )
+    # every pin is the median of its captures: no "max of" exemption
+    for lb, e in LABELS.items():
+        for r in _pinned(e):
+            runs = e["runs"][r]
+            med = statistics.median(runs)
+            assert e[r] > 0 and abs(med - e[r]) <= 0.02 * e[r], (
+                f"{lb} {r}: median({runs}) = {med} != ref {e[r]}"
+            )
 
 
 def test_rule_new_pins_record_runs():
-    # Pins made from round 15 on MUST carry the run list (the PROFILE.md
-    # prose era ends with the r14 re-pins). r14-cohort birth pins are
-    # grandfathered: their source captures predate this file.
-    for key, g in _pins().items():
-        for lb, entry in g["pins"].items():
-            if entry["pinned_round"] >= 15 and key != "r14":
-                assert entry["runs"], f"{lb}: post-r14 pin without a run list"
-                assert entry["date"], f"{lb}: post-r14 pin without a date"
+    for lb, e in LABELS.items():
+        for r in _pinned(e):
+            assert len(e["runs"][r]) >= 3, f"{lb} {r}: fewer than 3 captures"

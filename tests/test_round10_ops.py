@@ -279,6 +279,7 @@ def test_spearman_sampled_is_exact_statistic_over_subset(spark):
     assert got == expected
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_anomaly_zscore_stream_equals_batch(spark, tmp_path):
     """The online detector must flag EXACTLY the batch window query's
     rows under in-order delivery — across a two-file replay so the ≤8

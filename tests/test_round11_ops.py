@@ -79,6 +79,7 @@ def test_knn_graph_passes_guard_at_default_bound(spark):
     assert df.filter(F.col("rank") == 1).count() > 0
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_anomaly_zscore_survives_restart(spark, tmp_path):
     """Kill-and-resume: the detector's per-key ring must come back from
     the checkpointed state store, not from replayed input. The spike in
@@ -136,6 +137,7 @@ def test_running_anomaly_zscore_survives_restart(spark, tmp_path):
     assert live == batch_all
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_intervals_union_matches_batch_across_restart(spark, tmp_path):
     """The live interval-union twin must converge to the batch query's
     per-user summary, with the open-island state surviving a kill:
@@ -243,6 +245,7 @@ def test_intervals_union_batch_twin_equals_registered_query(spark):
     assert reg == twin and len(reg) > 0
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_ohlc_bars_matches_batch_across_restart(spark, tmp_path):
     """The live bar generator must converge to the registered batch
     query's bars, with the OPEN bar surviving a kill: user 1's hour-0

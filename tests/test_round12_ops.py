@@ -351,6 +351,7 @@ def test_degree_bcast_budget_parses_conf_sizes(spark, monkeypatch):
 # --- live twins: running CUSUM + incremental IVF sink ------------------
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_cusum_matches_batch_across_restart(spark, tmp_path):
     """The live CUSUM detector must converge to its batch branch, with
     the frozen baseline and the accumulating S statistic surviving a
@@ -596,6 +597,7 @@ def test_incremental_ivf_sink_agrees_with_batch_query(spark, tmp_path):
     assert kept  # the screen didn't degenerate to drop-everything
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_flatline_matches_batch_across_restart(spark, tmp_path):
     """The live flatline detector must converge to its batch branch,
     with an OPEN run straddling the restart cut: user 1's stuck value

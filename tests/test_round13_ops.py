@@ -369,6 +369,7 @@ def test_bootstrap_explode_feeds_partial_aggregate(spark):
     assert "CartesianProduct" not in tree
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_ewma_matches_batch_across_restart(spark, tmp_path):
     """The live EWMA must equal its batch branch row-for-row, with the
     frame ring surviving a kill: user 1's post-restart events fold over
@@ -732,6 +733,7 @@ def test_centroid_split_drift_is_one_for_duplicated_labels(spark, tmp_path):
     assert (got[1]["n_a"], got[1]["n_b"]) in {(1, 0), (0, 1)}
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_autocorr_matches_batch_across_restart(spark, tmp_path):
     """The live lag-1 autocorrelation must converge to its batch branch
     with the exact integer moments surviving a kill: user 1's series

@@ -19,6 +19,7 @@ from jorvik_spark.tables import default_sf_dir
 _SF = default_sf_dir()
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_autocorr_pairs_survive_arrow_chunk_boundaries(
     spark, tmp_path
 ):
@@ -607,6 +608,7 @@ def test_holt_tracks_a_linear_ramp(spark, tmp_path):
     )
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_holt_matches_batch_across_restart(spark, tmp_path):
     """The live Holt smoother must equal its batch window form
     bit-for-bit, with the ≤16-value ring surviving a kill mid-stream:

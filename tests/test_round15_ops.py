@@ -13,6 +13,7 @@ import hashlib
 import os
 
 import pandas as pd
+import pytest
 
 from jorvik_spark.queries import QUERIES
 
@@ -361,6 +362,7 @@ def test_kendall_recency_cap_binds_at_512(spark, tmp_path):
     assert r["tau_ppm"] == 1000000
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_churn_matches_batch_across_restart(spark, tmp_path):
     """The live churn tracker must equal its batch window form
     bit-for-bit, with the 2-long state surviving a kill mid-stream —
@@ -466,6 +468,7 @@ def test_running_churn_final_rows_rederive_the_census(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_churn_restored_single_event_sentinel_decodes(spark, tmp_path):
     """A single-event key stores the (last_t, -1) no-history sentinel;
     on restore it must decode back to None. The masked failure mode

@@ -14,6 +14,7 @@ import hashlib
 import os
 
 import pandas as pd
+import pytest
 
 from jorvik_spark.queries import QUERIES
 
@@ -115,6 +116,7 @@ def test_breakout_census_lookback_binds_at_8(spark, tmp_path):
     assert (r["n_users"], r["n_obs"], r["n_breakouts"]) == (1, 10, 1)
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_breakout_matches_batch_across_restart(spark, tmp_path):
     """The live ring-buffer twin equals its batch window form
     bit-for-bit across a kill-and-resume (the running_churn test

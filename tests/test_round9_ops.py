@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from jorvik_spark.queries import QUERIES
 
@@ -17,6 +18,7 @@ from jorvik_spark.tables import default_sf_dir
 SF_DIR = default_sf_dir()
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_stateful_fixedpoint_stream_equals_batch(spark, tmp_path):
     """The streaming applyInPandasWithState fold must reach EXACTLY the
     batch aggregate's state — including an all-null-value key whose

@@ -91,6 +91,7 @@ def test_dedup_within_watermark(spark, tmp_path):
     )
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_user_totals_stateful(spark, events_src):
     stream = S.running_user_totals(_stream(spark, events_src))
     _run_to_memory(stream, "t_state", "update")
@@ -153,6 +154,7 @@ def test_foreach_batch_merge_requires_checkpoint(spark, tmp_path):
         )
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_stateful_accumulates_across_microbatches(spark, tmp_path):
     """maxFilesPerTrigger=1 over a 4-file source forces 4 micro-batches,
     so per-key state must survive and accumulate between batches — the
@@ -189,6 +191,7 @@ def test_stateful_accumulates_across_microbatches(spark, tmp_path):
     assert g == wnt
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_user_totals_string_key(spark, events_src):
     """The output schema must carry the grouping key's own type — a
     string key (event_type) crashed the Arrow conversion when the key
@@ -211,6 +214,7 @@ def test_running_user_totals_string_key(spark, events_src):
     assert g == wnt and len(g) > 0
 
 
+@pytest.mark.usefixtures("few_shuffle_partitions")
 def test_running_user_totals_all_null_values_match_batch(spark, tmp_path):
     """SQL SUM of an all-null column is NULL; the stream state must agree
     (pandas' NaN-skipping sum would emit 0.0)."""

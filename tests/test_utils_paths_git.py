@@ -4,6 +4,7 @@ test_get_current_git_branch_*.
 """
 
 import subprocess
+from pathlib import Path
 from unittest import mock
 
 import pytest
@@ -41,8 +42,12 @@ def test_get_current_git_branch_subprocess_error_raises():
             get_current_git_branch()
 
 
+@pytest.mark.skipif(
+    not (Path(__file__).resolve().parents[1] / ".git").exists(),
+    reason="the tree is not a git checkout (GitUtilsError is the designed outcome)",
+)
 def test_get_current_git_branch_real_repo():
-    """This repo is a git checkout — the real subprocess path returns its
-    actual branch (non-empty, no whitespace)."""
+    """In a git checkout the real subprocess path returns its actual
+    branch (non-empty, no whitespace)."""
     branch = get_current_git_branch()
     assert branch == branch.strip()
