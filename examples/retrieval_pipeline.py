@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from jorvik_spark.pipelines import ETL, FileInput, FileOutput, etl
+from jorvik_spark.queries.registry import spark_units, units
 from jorvik_spark.queries.similarity import (
     _DOT,
     _EUCL,
@@ -275,15 +276,12 @@ def make_gold_topk(lake: str) -> ETL:
                 F.posexplode(F.expr(_SUBVECTORS)).alias("m", "s"),
             )
         )
-        sqd = F.round(F.expr(_PQ_SQD), 6)
         qd = F.broadcast(
             qsubs.join(F.broadcast(codebooks), "m").select(
                 "query_id",
                 "m",
                 "code",
-                F.floor(sqd * 1_000_000 + F.lit(0.5))
-                .cast("long")
-                .alias("qd_u"),
+                units(f"round({_PQ_SQD}, 6)").alias("qd_u"),
             )
         )
         # ADC over the probed cells of the persisted index.
@@ -472,8 +470,7 @@ def make_silver_jl_sketch(lake: str) -> ETL:
         ex = _vectors(emb).select(
             "vec_id",
             F.posexplode(
-                F.expr("transform(v, x -> CAST(floor(x * 1000000 + 0.5)"
-                       " AS BIGINT))")
+                F.expr(f"transform(v, x -> {spark_units('x')})")
             ).alias("pos", "eu"),
         )
         signs = F.broadcast(

@@ -24,10 +24,14 @@ from jorvik_spark.queries.registry import (
     guarded_global_window,
     hash_bucket,
     memo_df,
+    octave,
     query,
     sql_davg,
     sql_dsum,
     sql_hash_bucket,
+    sql_octave,
+    sql_units,
+    units,
 )
 
 _SEGMENT_HI = 300_000.0
@@ -945,9 +949,16 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# r² = num² / (den1·den2), in doubles on both engines.
+_R2 = (
+    "(CAST(num AS DOUBLE) * CAST(num AS DOUBLE))"
+    " / (CAST(den1 AS DOUBLE) * CAST(den2 AS DOUBLE))"
+)
+
+
 @query(
     "agg_regression_moments",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT l_returnflag,
                COUNT(*)::HUGEINT AS n,
@@ -971,9 +982,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((num * 1000000) // den1 AS BIGINT) AS slope_ppm,
            CAST((sy * 1000000 - ((num * 1000000) // den1) * sx) // n
                 AS BIGINT) AS intercept_ppm,
-           CAST(floor((CAST(num AS DOUBLE) * CAST(num AS DOUBLE))
-                      / (CAST(den1 AS DOUBLE) * CAST(den2 AS DOUBLE))
-                      * 1000000 + 0.5) AS BIGINT) AS r2_ppm
+           {sql_units(_R2)} AS r2_ppm
     FROM d
     """,
 )
@@ -1032,11 +1041,7 @@ def agg_regression_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("intercept_ppm"),
-        F.expr(
-            "CAST(floor((CAST(num AS DOUBLE) * CAST(num AS DOUBLE))"
-            " / (CAST(den1 AS DOUBLE) * CAST(den2 AS DOUBLE))"
-            " * 1000000 + 0.5) AS BIGINT)"
-        ).alias("r2_ppm"),
+        units(_R2).alias("r2_ppm"),
     )
 
 
@@ -1421,7 +1426,7 @@ _BOOT_SALT = "boot13"
     oracle=f"""
     WITH ev AS (
         SELECT event_type, event_id,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE value IS NOT NULL AND event_type IS NOT NULL
           AND event_id IS NOT NULL),
@@ -1495,9 +1500,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "event_id",
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     # r17: the B-fold md5 expansion is ~64 hash evaluations per input
@@ -1571,7 +1574,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
                    AS exposed,
                SUM(CASE WHEN event_type = 'purchase'
-                   THEN CAST(floor(value * 1000000 + 0.5) AS BIGINT)
+                   THEN {sql_units('value')}
                    ELSE 0 END) AS rev_u
         FROM events
         WHERE user_id IS NOT NULL
@@ -1652,9 +1655,7 @@ def agg_ab_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast(
-                        "long"
-                    ),
+                    units("value"),
                 ).otherwise(F.lit(0))
             ).alias("rev_u"),
         )
@@ -1720,7 +1721,7 @@ def agg_ab_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_conversion_lag_census",
-    oracle="""
+    oracle=f"""
     WITH firsts AS (
         SELECT user_id,
                MIN(CASE WHEN event_type = 'view'
@@ -1733,9 +1734,8 @@ def agg_ab_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     lags AS (
         SELECT user_id, (fp - fv) // 1000000 AS lag_s
         FROM firsts WHERE fv IS NOT NULL AND fp IS NOT NULL)
-    SELECT CAST(CASE WHEN lag_s < 0 THEN -1
-                     WHEN lag_s = 0 THEN 0
-                     ELSE length(bin(lag_s)) END AS INTEGER) AS lag_bits,
+    SELECT CASE WHEN lag_s < 0 THEN -1
+                ELSE {sql_octave('lag_s')} END AS lag_bits,
            CAST(COUNT(*) AS BIGINT) AS n_users,
            CAST(MIN(lag_s) AS BIGINT) AS min_lag_s,
            CAST(MAX(lag_s) AS BIGINT) AS max_lag_s
@@ -1778,12 +1778,7 @@ def agg_conversion_lag_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("fv").isNotNull() & F.col("fp").isNotNull())
         .withColumn("lag_s", F.expr("(fp - fv) div 1000000"))
     )
-    bits = (
-        F.when(F.col("lag_s") < 0, F.lit(-1))
-        .when(F.col("lag_s") == 0, F.lit(0))
-        .otherwise(F.length(F.conv(F.col("lag_s").cast("string"), 10, 2)))
-        .cast("int")
-    )
+    bits = F.when(F.col("lag_s") < 0, F.lit(-1)).otherwise(octave("lag_s"))
     return (
         firsts.groupBy(bits.alias("lag_bits"))
         .agg(
@@ -1896,7 +1891,7 @@ def agg_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_conversion_hazard",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS t
         FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
@@ -1915,8 +1910,7 @@ def agg_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM t0 JOIN lastseen l ON t0.user_id = l.user_id
         LEFT JOIN conv c ON t0.user_id = c.user_id),
     o AS (SELECT converted,
-                 CASE WHEN dur_s = 0 THEN 0
-                      ELSE length(bin(dur_s)) END AS oct
+                 {sql_octave('dur_s')} AS oct
           FROM per),
     g AS (SELECT oct, CAST(SUM(converted) AS BIGINT) AS d,
                  CAST(SUM(1 - converted) AS BIGINT) AS c
@@ -1995,11 +1989,7 @@ def agg_conversion_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dur_s"),
         )
     )
-    oct_col = (
-        F.when(F.col("dur_s") == 0, F.lit(0))
-        .otherwise(F.length(F.conv(F.col("dur_s").cast("string"), 10, 2)))
-        .cast("int")
-    )
+    oct_col = octave("dur_s")
     g = per.groupBy(oct_col.alias("oct")).agg(
         F.sum("converted").cast("long").alias("d"),
         F.sum(1 - F.col("converted")).cast("long").alias("c"),
@@ -2041,7 +2031,7 @@ def agg_conversion_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_cohort_ltv",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value
         FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
@@ -2053,7 +2043,7 @@ def agg_conversion_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST((epoch_us(date_trunc('week', e.ts))
                      - epoch_us(c.cohort_week)) // 604800000000
                     AS INTEGER) AS age_week,
-               CAST(floor(e.value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('e.value')} AS vu
         FROM ev e JOIN cohort c ON e.user_id = c.user_id
         WHERE e.event_type = 'purchase' AND e.value IS NOT NULL),
     cells AS (
@@ -2110,9 +2100,7 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_micros(F.date_trunc("week", F.col("ts")))
                 - F.unix_micros(F.col("cohort_week"))
             ).alias("diff_us"),
-            F.floor(F.col("value") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
         # both timestamps are week-aligned, so the division is exact;
         # div mirrors the oracle's integer //
@@ -2143,10 +2131,10 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_rfm_octave_census",
-    oracle="""
+    oracle=f"""
     WITH p AS (
         SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND user_id IS NOT NULL
           AND value IS NOT NULL AND event_type = 'purchase'),
@@ -2155,14 +2143,9 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM p GROUP BY user_id),
     mx AS (SELECT MAX(t) AS t_now FROM p),
     bands AS (
-        SELECT CAST(CASE WHEN (m.t_now - u.last_t) // 3600000000 <= 0
-                         THEN 0 ELSE length(bin((m.t_now - u.last_t)
-                                                // 3600000000)) END
-                    AS INTEGER) AS r_band,
-               CAST(length(bin(u.f)) AS INTEGER) AS f_band,
-               CAST(CASE WHEN u.mu // 1000000 <= 0 THEN 0
-                         ELSE length(bin(u.mu // 1000000)) END
-                    AS INTEGER) AS m_band
+        SELECT {sql_octave('(m.t_now - u.last_t) // 3600000000')} AS r_band,
+               {sql_octave('u.f')} AS f_band,
+               {sql_octave('greatest(u.mu // 1000000, 0)')} AS m_band
         FROM u CROSS JOIN mx m)
     SELECT r_band, f_band, m_band,
            CAST(COUNT(*) AS BIGINT) AS n_users
@@ -2193,7 +2176,7 @@ def agg_rfm_octave_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "user_id",
         F.unix_micros("ts").alias("t"),
-        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("vu"),
+        units("value").alias("vu"),
     )
     u = p.groupBy("user_id").agg(
         F.max("t").alias("last_t"),
@@ -2202,17 +2185,10 @@ def agg_rfm_octave_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = F.broadcast(p.agg(F.max("t").alias("t_now")))
 
-    def bits(col):
-        return (
-            F.when(col <= 0, F.lit(0))
-            .otherwise(F.length(F.conv(col.cast("string"), 10, 2)))
-            .cast("int")
-        )
-
     bands = u.crossJoin(mx).select(
-        bits(F.expr("(t_now - last_t) div 3600000000")).alias("r_band"),
-        bits(F.col("f")).alias("f_band"),
-        bits(F.expr("mu div 1000000")).alias("m_band"),
+        octave("(t_now - last_t) div 3600000000").alias("r_band"),
+        octave("f").alias("f_band"),
+        octave("greatest(mu div 1000000, 0)").alias("m_band"),
     )
     return (
         bands.groupBy("r_band", "f_band", "m_band")
@@ -2226,18 +2202,16 @@ def agg_rfm_octave_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_pareto_share_census",
-    oracle="""
+    oracle=f"""
     WITH r AS (
         SELECT o_custkey,
-               CAST(floor(o_totalprice * 1000000 + 0.5) AS BIGINT) AS rev_u
+               {sql_units('o_totalprice')} AS rev_u
         FROM orders WHERE o_totalprice IS NOT NULL),
     u AS (SELECT o_custkey,
                  CAST(SUM(CAST(rev_u AS HUGEINT)) AS HUGEINT) AS crev
           FROM r GROUP BY o_custkey),
     bands AS (
-        SELECT CAST(CASE WHEN crev // 1000000 <= 0 THEN 0
-                         ELSE length(bin(crev // 1000000)) END
-                    AS INTEGER) AS rev_band,
+        SELECT {sql_octave('greatest(crev // 1000000, 0)')} AS rev_band,
                crev
         FROM u),
     cells AS (
@@ -2276,20 +2250,12 @@ def agg_pareto_share_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").isNotNull()
     ).select(
         "o_custkey",
-        F.floor(F.col("o_totalprice") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("rev_u"),
+        units("o_totalprice").alias("rev_u"),
     )
     u = r.groupBy("o_custkey").agg(
         F.sum(F.col("rev_u").cast("decimal(38,0)")).alias("crev")
     )
-    band = (
-        F.when(F.expr("crev div 1000000") <= 0, F.lit(0))
-        .otherwise(
-            F.length(F.conv(F.expr("crev div 1000000").cast("string"), 10, 2))
-        )
-        .cast("int")
-    )
+    band = octave("greatest(crev div 1000000, 0)")
     cells = u.groupBy(band.alias("rev_band")).agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
         F.sum("crev").alias("band_rev"),
@@ -2341,8 +2307,7 @@ _LIFT_BAND_CAP = 16
         FROM e CROSS JOIN spl s GROUP BY e.user_id),
     scoped AS (SELECT * FROM u WHERE pre_n >= 1),
     cells AS (
-        SELECT CAST(LEAST(length(bin(pre_n)), {_LIFT_BAND_CAP})
-                    AS INTEGER) AS band,
+        SELECT LEAST({sql_octave('pre_n')}, {_LIFT_BAND_CAP}) AS band,
                COUNT(*) AS n_users,
                SUM(converted) AS n_converted
         FROM scoped GROUP BY 1),
@@ -2408,10 +2373,7 @@ def agg_conversion_lift_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("pre_n") >= 1)
     )
-    band = F.least(
-        F.length(F.conv(F.col("pre_n").cast("string"), 10, 2)),
-        F.lit(_LIFT_BAND_CAP),
-    ).cast("int")
+    band = F.least(octave("pre_n"), F.lit(_LIFT_BAND_CAP))
     cells = u.groupBy(band.alias("band")).agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("converted").alias("n_converted"),

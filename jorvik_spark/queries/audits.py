@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jorvik_spark.tables import load_table, spread_scan
-from jorvik_spark.queries.registry import query
+from jorvik_spark.queries.registry import (
+    octave,
+    query,
+    sql_octave,
+    sql_units,
+    units,
+)
 
 # Columns profiled by audit_column_profile — a fixed, small list: each
 # exact distinct count multiplies the scan via Expand, so profiling is
@@ -293,7 +299,7 @@ def audit_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audit_event_lateness",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t
@@ -304,8 +310,7 @@ def audit_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
                              ROWS UNBOUNDED PRECEDING) - t)
                // 1000000 AS late_s
         FROM ev)
-    SELECT CAST(CASE WHEN late_s = 0 THEN 0
-                     ELSE length(bin(late_s)) END AS INTEGER)
+    SELECT {sql_octave('late_s')}
                AS lateness_bits,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(MAX(late_s) AS BIGINT) AS max_lateness_s,
@@ -344,13 +349,7 @@ def audit_event_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     late = ev.withColumn("mx", F.max("t").over(w)).withColumn(
         "late_s", F.expr("CAST((mx - t) div 1000000 AS BIGINT)")
     )
-    bits = (
-        F.when(F.col("late_s") == 0, F.lit(0))
-        .otherwise(
-            F.length(F.conv(F.col("late_s").cast("string"), 10, 2))
-        )
-        .cast("int")
-    )
+    bits = octave("late_s")
     return (
         late.groupBy(bits.alias("lateness_bits"))
         .agg(
@@ -464,6 +463,13 @@ def audit_primary_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly 1_000_000.
 _BENFORD_PPM = [301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757]
 assert sum(_BENFORD_PPM) == 1_000_000
+# A digit's chi-square term (observed - expected)² / expected, in doubles
+# over exact integer ppm counts, on both engines.
+_CHI2 = (
+    "(CAST(n_obs * 1000000 - n_total * exp_ppm AS DOUBLE) / 1000000)"
+    " * (CAST(n_obs * 1000000 - n_total * exp_ppm AS DOUBLE) / 1000000)"
+    " / (CAST(n_total * exp_ppm AS DOUBLE) / 1000000)"
+)
 
 
 @query(
@@ -492,13 +498,7 @@ assert sum(_BENFORD_PPM) == 1_000_000
            END AS obs_ppm,
            j.exp_ppm,
            CASE WHEN j.n_total = 0 THEN NULL
-                ELSE CAST(floor(
-               (CAST(j.n_obs * 1000000 - j.n_total * j.exp_ppm AS DOUBLE)
-                / 1000000.0)
-               * (CAST(j.n_obs * 1000000 - j.n_total * j.exp_ppm AS DOUBLE)
-                  / 1000000.0)
-               / (CAST(j.n_total * j.exp_ppm AS DOUBLE) / 1000000.0)
-               * 1000000.0 + 0.5) AS BIGINT)
+                ELSE {sql_units(_CHI2)}
            END AS chi2_contrib_u
     FROM j
     ORDER BY digit
@@ -557,10 +557,6 @@ def audit_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_obs").over(Window.partitionBy()).cast("long"),
         )
     )
-    dev_u = (F.col("n_obs") * 1_000_000 - F.col("n_total") * F.col("exp_ppm")).cast(
-        "double"
-    ) / 1e6
-    e_dbl = (F.col("n_total") * F.col("exp_ppm")).cast("double") / 1e6
     # n_total = 0 guard (all prices NULL/non-positive): obs_ppm's int
     # div-by-zero NULLs on both engines, but the chi2 term is 0/0 → NaN,
     # and DuckDB's CAST(floor(NaN) AS BIGINT) raises where Spark's cast
@@ -577,7 +573,7 @@ def audit_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("obs_ppm"),
         "exp_ppm",
         F.when(empty, F.lit(None).cast("long"))
-        .otherwise(F.floor(dev_u * dev_u / e_dbl * 1e6 + F.lit(0.5)).cast("long"))
+        .otherwise(units(_CHI2))
         .alias("chi2_contrib_u"),
     ).orderBy("digit")
 
@@ -889,7 +885,7 @@ def audit_key_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audit_order_total_reconciliation",
-    oracle="""
+    oracle=f"""
     WITH rec AS (
         SELECT l_orderkey,
                CAST(SUM(CAST(floor(l_extendedprice * (1 - l_discount)
@@ -904,7 +900,7 @@ def audit_key_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     d AS (
         SELECT CASE WHEN rc IS NULL THEN -1
                     WHEN abs(rc - tc) = 0 THEN 0
-                    ELSE length(bin(abs(rc - tc) * 1000000 // tc))
+                    ELSE {sql_octave('greatest(abs(rc - tc) * 1000000 // tc, 1)')}
                END AS band,
                CASE WHEN rc IS NULL THEN NULL
                     ELSE abs(rc - tc) * 1000000 // tc END AS dev_ppm
@@ -967,12 +963,12 @@ def audit_order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .join(rec, F.col("o_orderkey") == F.col("l_orderkey"), "left")
     )
-    dev = F.expr("abs(rc - tc) * CAST(1000000 AS BIGINT) div tc")
+    dev_sql = "abs(rc - tc) * CAST(1000000 AS BIGINT) div tc"
+    dev = F.expr(dev_sql)
     band = (
         F.when(F.col("rc").isNull(), F.lit(-1))
         .when(F.expr("abs(rc - tc)") == 0, F.lit(0))
-        .otherwise(F.length(F.conv(dev.cast("string"), 10, 2)))
-        .cast("int")
+        .otherwise(octave(f"greatest({dev_sql}, 1)"))
     )
     dev_ppm = F.when(F.col("rc").isNull(), F.lit(None).cast("long")).otherwise(
         dev.cast("long")
@@ -1245,10 +1241,10 @@ def audit_fk_fanout_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audit_value_precision_census",
-    oracle="""
+    oracle=f"""
     WITH v AS (
         SELECT user_id,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events WHERE value IS NOT NULL),
     d AS (
         SELECT user_id, vu,
@@ -1290,9 +1286,7 @@ def audit_value_precision_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull()
     ).select(
         "user_id",
-        F.floor(F.col("value") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
+        units("value").alias("vu"),
     )
     n_dec = F.expr(
         "CASE WHEN vu % 1000000 = 0 THEN 0"

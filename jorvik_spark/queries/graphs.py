@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jorvik_spark.tables import load_table
-from jorvik_spark.queries.registry import memo_df, query
+from jorvik_spark.queries.registry import memo_df, octave, query, sql_octave
 
 _PR_ROUNDS = 3
 # damping 0.85 in ppm: rank' = 150000 + (850000 * Σ share) div 1e6
@@ -63,15 +63,9 @@ def _bcast_budget_bytes(spark: SparkSession) -> int:
 def _degree_bcast_budget_rows(spark: SparkSession) -> int:
     """Row budget for the triangle census's deliberate degree-relation
     broadcast: autoBroadcastJoinThreshold bytes / ~32 B per hashed
-    (node, degree) row. Overridable via JORVIK_DEGREE_BCAST_MAX_ROWS
-    (plan tests force both shapes); a disabled threshold (-1/0) means
-    never hint — the optimizer's shuffle plan is then the honest one.
+    (node, degree) row; a disabled threshold (-1/0) means never hint —
+    the optimizer's shuffle plan is then the honest one.
     """
-    import os
-
-    env = os.environ.get("JORVIK_DEGREE_BCAST_MAX_ROWS")
-    if env is not None:
-        return int(env)
     return _bcast_budget_bytes(spark) // 32
 
 
@@ -82,22 +76,19 @@ def _tri_adj_bcast_max_nodes(spark: SparkSession) -> int:
     graph — n(n-1)/2 oriented edges at ~16 B each in the built hash
     relation. Gating on n ≤ isqrt(budget_bytes / 8) therefore proves
     the broadcast fits from the node-count METADATA alone (no extra
-    job), regardless of density. Overridable via
-    JORVIK_TRI_ADJ_MAX_NODES (0 disables the fast path; tests force
-    both shapes) — a TEST-ONLY knob, clamped (r17 ADVICE) to the node
-    count whose worst-case packed bitmap saturates Spark's 8 GiB
-    broadcast hard cap, isqrt(8 GiB / 8) = 32768: past that the
-    double-broadcast is illegal regardless of what the override asks
-    for, and build_bitmaps' single-partition rank window (fine at
-    ≤ 32k rows) would become a genuine one-task sort.
+    job), regardless of density. Clamped (r17 ADVICE) to the node count
+    whose worst-case packed bitmap saturates Spark's 8 GiB broadcast
+    hard cap, isqrt(8 GiB / 8) = 32768: past that the double-broadcast
+    is illegal whatever the threshold says, and build_bitmaps'
+    single-partition rank window (fine at ≤ 32k rows) would become a
+    genuine one-task sort.
     """
     import math
-    import os
 
-    env = os.environ.get("JORVIK_TRI_ADJ_MAX_NODES")
-    if env is not None:
-        return min(int(env), math.isqrt((8 << 30) // 8))
-    return math.isqrt(_bcast_budget_bytes(spark) // 8)
+    return min(
+        math.isqrt(_bcast_budget_bytes(spark) // 8),
+        math.isqrt((8 << 30) // 8),
+    )
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,7 +116,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_distribution",
-    oracle="""
+    oracle=f"""
     WITH pairs AS (
         SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
@@ -137,8 +128,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                    COUNT(*) AS d
             FROM edges GROUP BY 1, 2)
     SELECT node_type,
-           CAST(CASE WHEN d = 0 THEN 0
-                     ELSE length(bin(d)) END AS INTEGER)
+           {sql_octave('d')}
                AS degree_bits,
            CAST(COUNT(*) AS BIGINT) AS n_nodes,
            CAST(MIN(d) AS BIGINT) AS min_degree,
@@ -161,12 +151,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("src") % 2 == 0, F.lit("customer"))
             .otherwise(F.lit("supplier"))
             .alias("node_type"),
-            F.when(F.col("d") == 0, F.lit(0))
-            .otherwise(
-                F.length(F.conv(F.col("d").cast("string"), 10, 2))
-            )
-            .cast("int")
-            .alias("degree_bits"),
+            octave("d").alias("degree_bits"),
             "d",
         )
     )

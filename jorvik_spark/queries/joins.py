@@ -32,7 +32,15 @@ from jorvik_spark.queries.registry import (
     query,
     sql_davg,
     sql_dsum,
+    sql_units,
+    units,
 )
+
+
+def _sql_share_units(part: str, whole: str) -> str:
+    """DuckDB: the share part/whole in micro-units, from the two exact
+    unit sums divided in doubles (the Spark side divides the same sums)."""
+    return sql_units(f"SUM({sql_units(part)}) / SUM({sql_units(whole)})")
 
 
 @query(
@@ -650,13 +658,11 @@ def join_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "join_q14_promo_share",
     oracle=f"""
-    SELECT CAST(floor(
-               (SUM(CAST(floor(CASE WHEN p.p_type = 'PROMO'
-                                    THEN l.l_extendedprice * (1 - l.l_discount)
-                                    ELSE 0.0 END * 1000000 + 0.5) AS BIGINT))
-                / SUM(CAST(floor(l.l_extendedprice * (1 - l.l_discount)
-                                 * 1000000 + 0.5) AS BIGINT)))
-               * 1000000 + 0.5) AS BIGINT) AS promo_share_ppm,
+    SELECT {_sql_share_units(
+               "CASE WHEN p.p_type = 'PROMO'"
+               " THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0.0 END",
+               "l.l_extendedprice * (1 - l.l_discount)",
+           )} AS promo_share_ppm,
            {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS total_revenue,
            COUNT(*) AS n_items
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -684,34 +690,24 @@ def join_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = load_table(spark, sf_dir, "part")
     rev_sql = "l_extendedprice * (1 - l_discount)"
-    rev = F.expr(rev_sql)
-    promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
+    promo_sql = f"CASE WHEN p_type = 'PROMO' THEN {rev_sql} ELSE 0D END"
     # Quantized units accumulate in DECIMAL(38,0) (int64 overflows past
     # 9.2e12 value units per group — one 100 TB revenue month); the share
     # division casts both exact sums to double, mirroring DuckDB's
     # HUGEINT/HUGEINT → double, so the rounded ppm stays hash-identical.
-    q = lambda c: F.sum(  # noqa: E731
-        F.floor(c * 1_000_000 + F.lit(0.5)).cast("decimal(38,0)")
-    )
+    q = lambda e: F.sum(units(e).cast("decimal(38,0)"))  # noqa: E731
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .agg(
-            q(promo_rev).alias("_promo_q"),
-            q(rev).alias("_all_q"),
+            q(promo_sql).alias("_promo_q"),
+            q(rev_sql).alias("_all_q"),
             dsum(rev_sql).alias("total_revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .select(
-            F.floor(
-                (
-                    F.col("_promo_q").cast("double")
-                    / F.col("_all_q").cast("double")
-                )
-                * 1_000_000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("promo_share_ppm"),
+            units("CAST(_promo_q AS DOUBLE) / CAST(_all_q AS DOUBLE)").alias(
+                "promo_share_ppm"
+            ),
             "total_revenue",
             "n_items",
         )
@@ -816,11 +812,10 @@ def join_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_q15_top_supplier",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT l_suppkey,
-               SUM(CAST(floor(l_extendedprice * (1 - l_discount)
-                              * 1000000 + 0.5) AS BIGINT)) AS total_q
+               SUM({sql_units('l_extendedprice * (1 - l_discount)')}) AS total_q
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
@@ -856,11 +851,7 @@ def join_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-supplier quarter can pass the int64 unit ceiling at extreme
     # corpus scale, and the argmax equality must compare exact integers.
     rev_q = F.sum(
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            * 1_000_000
-            + F.lit(0.5)
-        ).cast("decimal(38,0)")
+        units("l_extendedprice * (1 - l_discount)").cast("decimal(38,0)")
     )
     rev = li.groupBy("l_suppkey").agg(rev_q.alias("total_q"))
     mx = rev.agg(F.max("total_q").alias("m"))
@@ -1206,12 +1197,10 @@ def join_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN nation n2 ON n2.n_nationkey = s.s_nationkey
         WHERE p.p_type = 'ECONOMY' AND r.r_name = 'ASIA')
     SELECT o_year,
-           CAST(floor(
-               (SUM(CAST(floor(CASE WHEN supp_nation = 'NATION_9'
-                                    THEN volume ELSE 0.0 END
-                               * 1000000 + 0.5) AS BIGINT))
-                / SUM(CAST(floor(volume * 1000000 + 0.5) AS BIGINT)))
-               * 1000000 + 0.5) AS BIGINT) AS mkt_share_ppm,
+           {_sql_share_units(
+               "CASE WHEN supp_nation = 'NATION_9' THEN volume ELSE 0.0 END",
+               "volume",
+           )} AS mkt_share_ppm,
            {sql_dsum('volume')} AS total_revenue,
            COUNT(*) AS n_items
     FROM allrev GROUP BY o_year ORDER BY o_year
@@ -1250,13 +1239,10 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem")
     volume_sql = "l_extendedprice * (1 - l_discount)"
-    volume = F.expr(volume_sql)
-    target_vol = F.when(
-        F.col("supp_nation") == "NATION_9", volume
-    ).otherwise(F.lit(0.0))
-    q = lambda col: F.sum(  # noqa: E731
-        F.floor(col * 1_000_000 + F.lit(0.5)).cast("decimal(38,0)")
+    target_sql = (
+        f"CASE WHEN supp_nation = 'NATION_9' THEN {volume_sql} ELSE 0D END"
     )
+    q = lambda e: F.sum(units(e).cast("decimal(38,0)"))  # noqa: E731
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
@@ -1264,23 +1250,16 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, o.o_custkey == cust.c_custkey)
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
-            q(target_vol).alias("_target_q"),
-            q(volume).alias("_all_q"),
+            q(target_sql).alias("_target_q"),
+            q(volume_sql).alias("_all_q"),
             dsum(volume_sql).alias("total_revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .select(
             "o_year",
-            F.floor(
-                (
-                    F.col("_target_q").cast("double")
-                    / F.col("_all_q").cast("double")
-                )
-                * 1_000_000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("mkt_share_ppm"),
+            units("CAST(_target_q AS DOUBLE) / CAST(_all_q AS DOUBLE)").alias(
+                "mkt_share_ppm"
+            ),
             "total_revenue",
             "n_items",
         )
@@ -1581,7 +1560,7 @@ _SCD2_TIER_MID = 150_000 * 1_000_000
     WITH yearly AS (
         SELECT o_custkey,
                CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
-               SUM(CAST(floor(o_totalprice * 1000000 + 0.5) AS BIGINT))
+               SUM({sql_units('o_totalprice')})
                    AS spend_u
         FROM orders GROUP BY 1, 2),
     tiered AS (
@@ -1636,9 +1615,7 @@ def join_scd2_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(
             "o_custkey",
             F.year("o_orderdate").cast("long").alias("yr"),
-            F.floor(F.col("o_totalprice") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("u"),
+            units("o_totalprice").alias("u"),
         )
         .groupBy("o_custkey", "yr")
         .agg(F.sum("u").alias("spend_u"))
@@ -1755,11 +1732,11 @@ def join_null_safe_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_q11_important_stock",
-    oracle="""
+    oracle=f"""
     WITH pairs AS (
         SELECT l_partkey,
-               SUM(CAST(floor(l_extendedprice * (1 - l_discount)
-                              * 1000000 + 0.5) AS HUGEINT)) AS part_units
+               SUM(CAST({sql_units('l_extendedprice * (1 - l_discount)')}
+                        AS HUGEINT)) AS part_units
         FROM lineitem l
         JOIN supplier s ON s.s_suppkey = l.l_suppkey
         JOIN nation n ON n.n_nationkey = s.s_nationkey
@@ -1810,16 +1787,13 @@ def join_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
         "s_suppkey"
     )
-    units = F.sum(
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1_000_000
-            + F.lit(0.5)
-        ).cast("decimal(38,0)")
+    part_units = F.sum(
+        units("l_extendedprice * (1 - l_discount)").cast("decimal(38,0)")
     )
     per_part = (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(units.alias("part_units"))
+        .agg(part_units.alias("part_units"))
     )
     tot = per_part.agg(
         F.sum("part_units").alias("total_units"),
@@ -1918,17 +1892,16 @@ def join_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_q20_surplus_suppliers",
-    oracle="""
+    oracle=f"""
     WITH red_parts AS (
         SELECT p_partkey FROM part WHERE p_name LIKE 'red%'),
     flows AS (
         SELECT l.l_suppkey,
-               SUM(CAST(floor(l.l_quantity * 1000000 + 0.5) AS HUGEINT))
+               SUM(CAST({sql_units('l.l_quantity')} AS HUGEINT))
                    AS qty_total,
                SUM(CASE WHEN l.l_shipdate >=
                              TIMESTAMP '1999-01-01 00:00:00'
-                        THEN CAST(floor(l.l_quantity * 1000000 + 0.5)
-                                  AS HUGEINT)
+                        THEN CAST({sql_units('l.l_quantity')} AS HUGEINT)
                         ELSE 0 END) AS qty_recent
         FROM lineitem l
         JOIN red_parts rp ON rp.p_partkey = l.l_partkey
@@ -1970,9 +1943,7 @@ def join_q20_surplus_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey")
     )
     li = load_table(spark, sf_dir, "lineitem")
-    qunits = F.floor(F.col("l_quantity") * 1_000_000 + F.lit(0.5)).cast(
-        "decimal(38,0)"
-    )
+    qunits = units("l_quantity").cast("decimal(38,0)")
     recent = F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp")
     surging = (
         li.join(F.broadcast(red), li.l_partkey == red.p_partkey)
@@ -2586,8 +2557,7 @@ def join_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
                epoch_us(CAST(ts AS TIMESTAMP)) AS t
         FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
     p AS (SELECT user_id, event_id AS purchase_id, t AS tp,
-                 CAST(floor(coalesce(value, 0) * 1000000 + 0.5) AS BIGINT)
-                     AS vu
+                 {sql_units('coalesce(value, 0)')} AS vu
           FROM ev WHERE event_type = 'purchase'),
     tc AS (SELECT user_id, event_type AS channel, t AS tt
            FROM ev WHERE event_type IN ('view', 'click')),
@@ -2648,9 +2618,7 @@ def join_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("event_id").alias("purchase_id"),
         F.unix_micros("ts").alias("tp"),
-        F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("vu"),
+        units("coalesce(value, 0D)").alias("vu"),
     )
     t = ev.filter(F.col("event_type").isin("view", "click")).select(
         "user_id",

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jorvik_spark.queries.registry import query
+from jorvik_spark.queries.registry import octave, query, sql_octave
 from jorvik_spark.tables import load_table
 
 _FEATURE_SCHEMA = (
@@ -513,14 +513,14 @@ def multimodal_dedup_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_size_histogram",
-    oracle="""
+    oracle=f"""
     SELECT regexp_extract(filename, '\\.([A-Za-z0-9]+)$', 1) AS ext,
-           CAST(length(bin(CAST(size AS BIGINT))) AS INTEGER) AS size_bits,
+           {sql_octave('CAST(size AS BIGINT)')} AS size_bits,
            COUNT(*) AS n_files,
            CAST(SUM(size) AS BIGINT) AS total_bytes,
            CAST(MIN(size) AS BIGINT) AS min_bytes,
            CAST(MAX(size) AS BIGINT) AS max_bytes
-    FROM read_blob('{sf_dir}/*.parquet')
+    FROM read_blob('{{sf_dir}}/*.parquet')
     GROUP BY ext, size_bits ORDER BY ext, size_bits
     """,
 )
@@ -548,9 +548,7 @@ def multimodal_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r"\.([A-Za-z0-9]+)$",
                 1,
             ).alias("ext"),
-            F.length(F.conv(F.col("length").cast("string"), 10, 2))
-            .cast("int")
-            .alias("size_bits"),
+            octave("length").alias("size_bits"),
             "length",
         )
         .groupBy("ext", "size_bits")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jorvik_spark.tables import load_table
-from jorvik_spark.queries.registry import query
+from jorvik_spark.queries.registry import query, sql_units, units
 
 
 @query(
@@ -244,7 +244,7 @@ def expr_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The oracle states the VALUE semantics relationally (per-order
     # aggregates over the rows); the Spark side computes the same values
     # through the array higher-order-function pipeline it demonstrates.
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
            CAST(COUNT(*) AS INTEGER) AS n_lines,
            CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT)
@@ -253,8 +253,7 @@ def expr_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INTEGER) AS n_heavy,
            bool_or(floor(l_quantity) = 50) AS has_qty50,
            CAST(SUM(CAST(floor(l_quantity) AS BIGINT)
-                    * CAST(floor(l_extendedprice * 1000000 + 0.5)
-                           AS BIGINT)) AS BIGINT) AS revenue_units
+                    * {sql_units('l_extendedprice')}) AS BIGINT) AS revenue_units
     FROM lineitem GROUP BY l_orderkey
     """,
 )
@@ -281,7 +280,7 @@ def expr_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.floor("l_quantity").alias("q"),
-        F.floor(F.col("l_extendedprice") * 1_000_000 + F.lit(0.5)).alias(
+        units("l_extendedprice").alias(
             "p_units"
         ),
     )

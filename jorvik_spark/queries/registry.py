@@ -15,17 +15,22 @@ identical on both engines regardless of partitioning or plan shape.
 
 One template
 ------------
-``units`` (the quantization itself), ``dsum``, ``davg`` and
+``units`` (the 1e-6 quantization itself), ``octave`` (the binary-digit
+count behind every power-of-two histogram), ``dsum``, ``davg`` and
 ``hash_bucket`` (the md5 sampling bucket) are each ONE SQL-text
-template, rendered per dialect: :func:`dsum` etc. return a
-single ``F.expr`` over the Spark rendering, and :func:`sql_dsum` etc.
-return the DuckDB rendering the oracle SQL embeds, so the engine and its
-oracle cannot drift. Callers pass SQL text, never Columns: building an
-aggregate is then one parse on the JVM instead of ~17 py4j Column calls,
-which dominated the build of an aggregate-heavy query. The dialects
-differ only in literal spelling, the exact-sum accumulator (Spark's hi/lo
-long split vs DuckDB's HUGEINT SUM), the string type and the
-hex-to-BIGINT step; see ``_SPARK``/``_DUCKDB``.
+template, rendered per dialect: :func:`units` etc. return a single
+``F.expr`` over the Spark rendering, :func:`spark_units` returns that
+rendering as text for Spark SQL text (``spark.sql``, lambdas), and
+:func:`sql_units` etc. return the DuckDB rendering the oracle SQL
+embeds, so the engine and its oracle cannot drift. No other module
+restates a template's formula (``tests/test_template_guard.py`` scans
+for the copies' spellings). Callers pass SQL text,
+never Columns: building an aggregate is then one parse on the JVM
+instead of ~17 py4j Column calls, which dominated the build of an
+aggregate-heavy query. The dialects differ only in literal spelling,
+the exact-sum accumulator (Spark's hi/lo long split vs DuckDB's HUGEINT
+SUM), the string type, the hex-to-BIGINT step and the binary-digit
+spelling; see ``_SPARK``/``_DUCKDB``.
 
 Bounds: the sum is exact at any group total (see ``_SPARK``) while
 ``|x| < 2^53/1e6`` per value, which holds for TPC-H-ish money values at
@@ -58,6 +63,7 @@ class _Dialect(NamedTuple):
     exact_sum: str  # Σ of the BIGINT units {0}, exact past the int64 ceiling
     string: str  # the string type a key is cast to before hashing
     hex8: str  # 8 hex digits {0} → BIGINT
+    bits: str  # the binary digits of a positive BIGINT {0}, as a string
 
 
 # Spark SQL reads an unsuffixed ``1000000.0`` or ``0.5`` as a DECIMAL,
@@ -79,6 +85,7 @@ _SPARK = _Dialect(
     ),
     string="STRING",
     hex8="CAST(conv({0}, 16, 10) AS BIGINT)",
+    bits="conv(CAST({0} AS STRING), 10, 2)",
 )
 _DUCKDB = _Dialect(
     scale="1000000",
@@ -87,6 +94,7 @@ _DUCKDB = _Dialect(
     exact_sum="SUM({0})",
     string="VARCHAR",
     hex8="('0x' || {0})::BIGINT",
+    bits="bin({0})",
 )
 
 
@@ -97,6 +105,16 @@ def _units(expr: str, d: _Dialect) -> str:
     # whole-stage codegen, and both engines compute the same IEEE double
     # expression, so they quantize bitwise identically, negatives too.
     return f"CAST(floor(({expr}) * {d.scale} + {d.half}) AS BIGINT)"
+
+
+def _octave(expr: str, d: _Dialect) -> str:
+    # Both engines print a positive integer's binary digits without
+    # leading zeros; 0 would print as "0" (one digit), so it is mapped to
+    # octave 0 first. An INT on both engines.
+    return (
+        f"CAST(CASE WHEN ({expr}) = 0 THEN 0"
+        f" ELSE length({d.bits.format(expr)}) END AS INT)"
+    )
 
 
 def _dsum(expr: str, d: _Dialect) -> str:
@@ -112,11 +130,23 @@ def _hash_bucket(expr: str, salt: str, d: _Dialect) -> str:
     return f"{d.hex8.format(digits)} % 1000"
 
 
+def spark_units(expr: str) -> str:
+    """The Spark SQL text of :func:`units`, for SQL text sites."""
+    return _units(expr, _SPARK)
+
+
 def units(expr: str) -> Column:
     """A double SQL expression as exact BIGINT micro-units,
     ``floor(x * 1e6 + 0.5)`` — the quantization inside :func:`dsum`, for
     a fixed-point value column."""
-    return F.expr(_units(expr, _SPARK))
+    return F.expr(spark_units(expr))
+
+
+def octave(expr: str) -> Column:
+    """The binary-digit count of a non-negative BIGINT SQL expression
+    (``x`` lies in ``[2^(k-1), 2^k)`` at octave ``k``), 0 for 0; an INT.
+    The bucket key of the power-of-two histograms."""
+    return F.expr(_octave(expr, _SPARK))
 
 
 def dsum(expr: str) -> Column:
@@ -142,6 +172,11 @@ def hash_bucket(expr: str, salt: str) -> Column:
 def sql_units(expr: str) -> str:
     """DuckDB twin of :func:`units`."""
     return _units(expr, _DUCKDB)
+
+
+def sql_octave(expr: str) -> str:
+    """DuckDB twin of :func:`octave`."""
+    return _octave(expr, _DUCKDB)
 
 
 def sql_dsum(expr: str) -> str:
@@ -249,8 +284,7 @@ def memo_df(
     return df
 
 
-_CKPT_MAX_SRC_BYTES_ENV = "JORVIK_MEMO_CKPT_MAX_SRC_BYTES"
-_CKPT_MAX_SRC_BYTES_DEFAULT = 4 << 30  # 4 GiB of source parquet
+_CKPT_MAX_SRC_BYTES = 4 << 30  # 4 GiB of source parquet
 
 
 def corpus_memo_cut_lineage(
@@ -265,20 +299,14 @@ def corpus_memo_cut_lineage(
     The leaf's size is O(source table), so the gate reads the source's
     on-disk bytes (pure filesystem metadata, no job): under the budget
     the checkpoint's plan-truncation speed stays; past it the leaf
-    rides the spill-capable persist tier. Budget overridable via
-    ``JORVIK_MEMO_CKPT_MAX_SRC_BYTES`` (tests force both tiers; 0 means
-    always persist). Default 4 GiB: a derived leaf of a ≤4 GiB source
-    is at most a few GB cluster-wide — comfortably pinnable — while a
-    100 TB corpus is ~5 orders of magnitude past the gate.
+    rides the spill-capable persist tier. Budget ``_CKPT_MAX_SRC_BYTES``
+    = 4 GiB: a derived leaf of a ≤4 GiB source is at most a few GB
+    cluster-wide — comfortably pinnable — while a 100 TB corpus is ~5
+    orders of magnitude past the gate.
     """
-    import os as _os
-
     from jorvik_spark.tables import table_source_bytes
 
-    budget = int(
-        _os.environ.get(_CKPT_MAX_SRC_BYTES_ENV, _CKPT_MAX_SRC_BYTES_DEFAULT)
-    )
-    return table_source_bytes(spark, sf_dir, table) <= budget
+    return table_source_bytes(spark, sf_dir, table) <= _CKPT_MAX_SRC_BYTES
 
 
 def clear_memos() -> None:
@@ -305,19 +333,8 @@ def clear_memos() -> None:
 # corpus would get a silent single-task straggler. This guard converts
 # that misuse into a loud executor-side error, the CellImbalanceError
 # discipline applied to windows. 5M rows sorted in one task is the
-# practical ceiling of "fine"; JORVIK_MAX_GLOBAL_WINDOW_ROWS overrides
-# (0 disables).
-_GLOBAL_WINDOW_MAX_DEFAULT = 5_000_000
-
-
-def _max_global_window_rows() -> int:
-    import os
-
-    return int(
-        os.environ.get(
-            "JORVIK_MAX_GLOBAL_WINDOW_ROWS", _GLOBAL_WINDOW_MAX_DEFAULT
-        )
-    )
+# practical ceiling of "fine".
+_GLOBAL_WINDOW_MAX_ROWS = 5_000_000
 
 
 def guarded_global_window(value: Column, order_cols, site: str) -> Column:
@@ -336,16 +353,13 @@ def guarded_global_window(value: Column, order_cols, site: str) -> Column:
     """
     from pyspark.sql import Window
 
-    limit = _max_global_window_rows()
-    if limit <= 0:
-        return value
+    limit = _GLOBAL_WINDOW_MAX_ROWS
     rn = F.row_number().over(Window.orderBy(*order_cols))
     guard = F.assert_true(
         rn <= F.lit(limit),
         F.lit(
-            f"{site}: unpartitioned window exceeded "
-            f"JORVIK_MAX_GLOBAL_WINDOW_ROWS={limit} rows — this window "
-            "is single-task by design and its input must stay an "
+            f"{site}: unpartitioned window exceeded {limit} rows — this "
+            "window is single-task by design and its input must stay an "
             "aggregated, bounded relation; repartition or pre-aggregate"
         ),
     )

@@ -29,10 +29,15 @@ from jorvik_spark.queries.registry import (
     dsum,
     hash_bucket,
     memo_df,
+    octave,
     query,
     sql_davg,
     sql_dsum,
+    spark_units,
     sql_hash_bucket,
+    sql_octave,
+    sql_units,
+    units,
 )
 
 _TOPK = 5
@@ -730,15 +735,8 @@ def simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Σ|cell|² pre-flight ceiling for the within-cell pair relation. Work
 # per cell is |c|²/2 pair evaluations; past ~30k members a single cell
 # contributes ≥4.5e8 pairs — the silent quadratic the round-10 verdict
-# flagged. Overridable for clusters that sized their centroid count
-# deliberately (JORVIK_MAX_IVF_CELL=0 disables).
-_MAX_CELL_DEFAULT = 30_000
-
-
-def _max_ivf_cell() -> int:
-    import os
-
-    return int(os.environ.get("JORVIK_MAX_IVF_CELL", _MAX_CELL_DEFAULT))
+# flagged.
+_MAX_IVF_CELL = 30_000
 
 
 class CellImbalanceError(RuntimeError):
@@ -750,9 +748,7 @@ def _guard_cell_sizes(cells: DataFrame) -> None:
     over the (already memoized) assignment, one single-row collect.
     ``embed_cluster_balance`` is the diagnostic a user runs by choice;
     this is the seatbelt that runs always."""
-    bound = _max_ivf_cell()
-    if bound <= 0:
-        return
+    bound = _MAX_IVF_CELL
     top = (
         cells.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -768,8 +764,8 @@ def _guard_cell_sizes(cells: DataFrame) -> None:
             "Re-train with more centroids (ivf_k scales K with corpus "
             "size automatically — a trip here means extreme cell skew, "
             "e.g. a near-duplicate-saturated corpus), re-balance via "
-            "embed_cluster_balance, or raise JORVIK_MAX_IVF_CELL if this "
-            "cell size is intentional."
+            "embed_cluster_balance, or raise the bound (_MAX_IVF_CELL) if "
+            "this cell size is intentional."
         )
 
 
@@ -1223,6 +1219,12 @@ _PQ_SQD = (
     "aggregate(zip_with(s, c, (x, y) -> (x - y) * (x - y)), "
     "0D, (acc, x) -> acc + x)"
 )
+# The oracle's query subvector (q.s) to centroid (c.c) distance, rounded
+# as above, in micro-units.
+_SQL_PQ_QD_U = sql_units(
+    f"round(list_sum(list_transform(range(1, {_PQ_SUB} + 1),"
+    " i -> (q.s[i] - c.c[i]) * (q.s[i] - c.c[i]))), 6)"
+)
 
 
 def _pq_subs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1328,10 +1330,7 @@ def embed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_SQL_PQ_CODES},
     qcent AS (
         SELECT q.vec_id AS query_id, q.m, c.cent_id,
-               CAST(floor(round(list_sum(list_transform(
-                   range(1, {_PQ_SUB} + 1),
-                   i -> (q.s[i] - c.c[i]) * (q.s[i] - c.c[i]))), 6)
-                   * 1000000 + 0.5) AS BIGINT) AS qd_u
+               {_SQL_PQ_QD_U} AS qd_u
         FROM pq_subs q JOIN pq_cents c ON q.m = c.m
         WHERE q.vec_id < {_N_QUERIES}),
     cand AS (
@@ -1415,7 +1414,6 @@ def _adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # attribute-unambiguous; test_plans.py pins the three-key ADC join.
     subs = _pq_subs(spark, sf_dir)
     codes = _pq_codes(spark, sf_dir).alias("c")
-    sqd = F.round(F.expr(_PQ_SQD), 6)
     qcent = F.broadcast(
         subs.filter(F.col("vec_id") < _N_QUERIES)
         .join(_pq_cents(subs), "m")
@@ -1423,7 +1421,7 @@ def _adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             "m",
             "cent_id",
-            F.floor(sqd * 1_000_000 + F.lit(0.5)).cast("long").alias("qd_u"),
+            units(f"round({_PQ_SQD}, 6)").alias("qd_u"),
         )
         .alias("q")
     )
@@ -1812,10 +1810,7 @@ _RERANK_SHORTLIST = 20
     {_SQL_PQ_CODES},
     qcent AS (
         SELECT q.vec_id AS query_id, q.m, c.cent_id,
-               CAST(floor(round(list_sum(list_transform(
-                   range(1, {_PQ_SUB} + 1),
-                   i -> (q.s[i] - c.c[i]) * (q.s[i] - c.c[i]))), 6)
-                   * 1000000 + 0.5) AS BIGINT) AS qd_u
+               {_SQL_PQ_QD_U} AS qd_u
         FROM pq_subs q JOIN pq_cents c ON q.m = c.m
         WHERE q.vec_id < {_N_QUERIES}),
     cand AS (
@@ -2023,12 +2018,12 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embed_outlier_scores",
-    oracle="""
-    WITH knn AS ({KNN_ORACLE}),
+    oracle=f"""
+    WITH knn AS ({{KNN_ORACLE}}),
     per_vec AS (
         SELECT vec_id,
                COUNT(*) AS k,
-               SUM(CAST(floor(cosine * 1000000 + 0.5) AS BIGINT)) AS s
+               SUM({sql_units('cosine')}) AS s
         FROM knn GROUP BY vec_id),
     scored AS (
         SELECT vec_id, k,
@@ -2067,9 +2062,7 @@ def embed_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn = simsearch_knn_graph(spark, sf_dir)
     per_vec = knn.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("k"),
-        F.sum(
-            F.expr("CAST(floor(cosine * 1000000 + 0.5) AS BIGINT)")
-        ).alias("s"),
+        F.sum(units("cosine")).alias("s"),
     )
     # Shift by k·1e6 before dividing so the dividend is non-negative
     # (cosine ≥ −1 ⇒ s + k·1e6 ≥ 0), where floor == truncate and every
@@ -2600,7 +2593,7 @@ _PAIR_BUCKET_HEX = 1
         SELECT vec_id,
                md5(CAST(vec_id AS VARCHAR)) AS h,
                list_transform(CAST(embedding AS DOUBLE[]),
-                              x -> CAST(floor(x * 1000000 + 0.5) AS DOUBLE))
+                              x -> CAST({sql_units('x')} AS DOUBLE))
                    AS q
         FROM embeddings
         WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
@@ -2667,8 +2660,7 @@ def embed_angular_pair_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("vec_id").cast("string")).alias("h"),
             F.expr(
                 "transform(embedding,"
-                " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5)"
-                " AS DOUBLE))"
+                f" x -> CAST({spark_units('CAST(x AS DOUBLE)')} AS DOUBLE))"
             ).alias("q"),
         )
         .withColumn("n2", F.expr(_DOT.format(a="q", b="q")))
@@ -2719,7 +2711,7 @@ _SPLIT_DRIFT_SALT = "centroid_split"
                CAST({sql_hash_bucket('vec_id', _SPLIT_DRIFT_SALT)} % 2
                     AS INTEGER) AS half,
                list_transform(CAST(embedding AS DOUBLE[]),
-                              x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT))
+                              x -> {sql_units('x')})
                    AS q
         FROM embeddings
         WHERE vec_id IS NOT NULL AND label IS NOT NULL
@@ -2803,8 +2795,7 @@ def embed_centroid_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("half"),
             F.expr(
                 "transform(embedding,"
-                " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5)"
-                " AS BIGINT))"
+                f" x -> {spark_units('CAST(x AS DOUBLE)')})"
             ).alias("q"),
         )
     )
@@ -2851,16 +2842,15 @@ def embed_centroid_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embed_sqnorm_octave_census",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
-        SELECT vec_id, CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS qx
+        SELECT vec_id, {sql_units('x')} AS qx
         FROM (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x
               FROM embeddings)),
     sq AS (
         SELECT vec_id, CAST(SUM(qx * qx) AS BIGINT) AS nsq
         FROM ex GROUP BY vec_id)
-    SELECT CAST(CASE WHEN nsq = 0 THEN 0
-                     ELSE length(bin(nsq)) END AS INTEGER) AS nsq_bits,
+    SELECT {sql_octave('nsq')} AS nsq_bits,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(MIN(nsq) AS BIGINT) AS min_nsq,
            CAST(MAX(nsq) AS BIGINT) AS max_nsq
@@ -2892,15 +2882,10 @@ def embed_sqnorm_octave_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr(
             "aggregate(v, CAST(0 AS BIGINT), (acc, x) ->"
-            " acc + CAST(floor(x * 1000000 + 0.5) AS BIGINT)"
-            "       * CAST(floor(x * 1000000 + 0.5) AS BIGINT))"
+            f" acc + {spark_units('x')} * {spark_units('x')})"
         ).alias("nsq"),
     )
-    bits = (
-        F.when(F.col("nsq") == 0, F.lit(0))
-        .otherwise(F.length(F.conv(F.col("nsq").cast("string"), 10, 2)))
-        .cast("int")
-    )
+    bits = octave("nsq")
     return (
         sq.groupBy(bits.alias("nsq_bits"))
         .agg(
@@ -3098,7 +3083,7 @@ def rp16_sign_col(proj_dim: str = "proj_dim", pos: str = "pos"):
                unnest(CAST(embedding AS DOUBLE[])) AS x
         FROM embeddings),
     q AS (SELECT vec_id, pos,
-                 CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS eu
+                 {sql_units('x')} AS eu
           FROM ex),
     s AS (SELECT CAST(d AS INTEGER) AS proj_dim, pos,
                  CASE WHEN ('0x' || substr(md5('rp16:' || d || ':' || pos),
@@ -3150,9 +3135,7 @@ def _rp16_sketch_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id",
                 "pos",
-                F.floor(F.col("x") * 1000000 + F.lit(0.5))
-                .cast("long")
-                .alias("eu"),
+                units("x").alias("eu"),
             )
         )
         signs = F.broadcast(_rp16_signs(spark, sf_dir))
@@ -3176,7 +3159,7 @@ def _rp16_sketch_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
                unnest(CAST(embedding AS DOUBLE[])) AS x
         FROM embeddings),
     q AS (SELECT vec_id, pos,
-                 CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS eu
+                 {sql_units('x')} AS eu
           FROM ex),
     s AS (SELECT CAST(d AS INTEGER) AS proj_dim, pos,
                  CASE WHEN ('0x' || substr(md5('rp16:' || d || ':' || pos),
@@ -3267,7 +3250,7 @@ def embed_jl_distortion_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "pos",
-            F.floor(F.col("x") * 1000000 + F.lit(0.5)).cast("long").alias("eu"),
+            units("x").alias("eu"),
         )
     )
     full_d = (
@@ -3329,9 +3312,7 @@ def _pi_units_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         lambda: _vec_double(_spread_embeddings(spark, sf_dir)).select(
             "vec_id",
-            F.expr(
-                "transform(v, x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT))"
-            ).alias("eu"),
+            F.expr(f"transform(v, x -> {spark_units('x')})").alias("eu"),
         ),
         cut_lineage=True,
     )
@@ -3339,14 +3320,14 @@ def _pi_units_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embed_power_iteration_pc1",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
         SELECT vec_id,
                unnest(range(len(embedding))) AS pos,
                unnest(CAST(embedding AS DOUBLE[])) AS x
         FROM embeddings),
     q AS (SELECT vec_id, pos,
-                 CAST(floor(x * 1000000 + 0.5) AS BIGINT) AS eu
+                 {sql_units('x')} AS eu
           FROM ex),
     dot1 AS (SELECT vec_id,
                     SUM(CAST(eu AS HUGEINT)) * 1000000 AS dot

@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jorvik_spark.queries.registry import dsum, query, sql_dsum
+from jorvik_spark.queries.registry import dsum, query, spark_units, sql_dsum, sql_units
 from jorvik_spark.storage.basic import BasicStorage
 from jorvik_spark.tables import load_table, table_source_bytes
 
@@ -40,16 +40,15 @@ def _scratch(tag: str) -> str:
 # partition, and every micro-batch pays per-store checkpoint/delta-file
 # IO — with the session's cluster-sized spark.sql.shuffle.partitions, a
 # TINY-state drain spends a measurable fraction of its wall on empty
-# state machinery (decomposition in scripts/stream_decompose.py: the
+# state machinery (measured at sf0.1 going 32 → 8 partitions: the
 # dedup-watermark drain dropped 1.89 → 1.25 s and the stateful drain
-# 1.76 → 1.48 s at sf0.1 going 32 → 8 partitions, while 1 partition
-# serialized the Python state worker 2×). So the drains size their
+# 1.76 → 1.48 s, while 1 partition serialized the Python state worker
+# 2×). So the drains size their
 # state partitions from the SOURCE bytes (guide §2.2 "fewer, larger
 # partitions", applied to state stores), with a parallelism floor and
 # the session conf as the cap — at 100 TB the byte-derived count
 # saturates the cap and this is exactly the cluster-sized setting.
 
-_STREAM_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
 _STREAM_STATE_TARGET_BYTES = 32 << 20  # source bytes per state partition
 _STREAM_STATE_MIN_PARTS = 8  # keep the Python-state workers parallel
 
@@ -59,11 +58,7 @@ def _stream_state_partitions(spark: SparkSession, src_bytes: int) -> int:
     derived, floored at min(8, cores) (1 partition serializes the
     applyInPandas state worker — measured 2× the drain wall), then capped
     at the session's shuffle partitions (the cluster-sized conf), so a
-    session set below the floor keeps its own setting. Env-overridable
-    for tuning (``SPARK_GRAFT_STREAM_SHUFFLE``)."""
-    env = os.environ.get(_STREAM_SHUFFLE_ENV)
-    if env is not None:
-        return max(1, int(env))
+    session set below the floor keeps its own setting."""
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = min(
         _STREAM_STATE_MIN_PARTS, spark.sparkContext.defaultParallelism
@@ -728,9 +723,9 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_stateful_running_totals",
-    oracle="""
+    oracle=f"""
     SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT))
+           CAST(SUM({sql_units('value')})
                 AS BIGINT) AS total_u
     FROM events GROUP BY user_id
     """,
@@ -878,12 +873,11 @@ def _sql_views_current(spark, sf_dir: str) -> bool:
 
 @query(
     "sql_api_revenue_report",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS order_year,
            CAST(COUNT(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(floor(l.l_extendedprice * (1 - l.l_discount)
-                               * 1000000 + 0.5) AS BIGINT))
+           CAST(SUM({sql_units('l.l_extendedprice * (1 - l.l_discount)')})
                 AS BIGINT) AS revenue_u
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -931,11 +925,11 @@ def sql_api_revenue_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SQL_VIEWS_REGISTERED[0] = spark
         _SQL_VIEWS_REGISTERED[1] = sf_dir
     return spark.sql(
-        """
+        f"""
         WITH per_order AS (
             SELECT l.l_orderkey,
-                   SUM(CAST(floor(l.l_extendedprice * (1 - l.l_discount)
-                                  * 1000000 + 0.5) AS BIGINT)) AS order_rev_u
+                   SUM({spark_units('l.l_extendedprice * (1 - l.l_discount)')})
+                       AS order_rev_u
             FROM lineitem l GROUP BY l.l_orderkey)
         SELECT n.n_name AS nation,
                CAST(year(o.o_orderdate) AS BIGINT) AS order_year,

@@ -20,7 +20,9 @@ from jorvik_spark.tables import load_table, spread_scan
 from jorvik_spark.queries.registry import (
     guarded_global_window,
     memo_df,
+    octave,
     query,
+    sql_octave,
 )
 
 # Spark-side tokens expression (array<string>). NULL text tokenizes to an
@@ -1702,7 +1704,7 @@ def corpus_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT tok, cnt,
                ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rnk
         FROM cnts)
-    SELECT CAST(length(bin(rnk)) AS INTEGER) AS rank_bits,
+    SELECT {sql_octave('rnk')} AS rank_bits,
            CAST(COUNT(*) AS BIGINT) AS n_tokens,
            CAST(MIN(rnk) AS BIGINT) AS min_rank,
            CAST(MAX(rnk) AS BIGINT) AS max_rank,
@@ -1743,11 +1745,7 @@ def text_zipf_rank_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cnts.agg(F.sum("cnt").alias("n"))
     return (
         ranked.crossJoin(F.broadcast(tot))
-        .groupBy(
-            F.length(F.conv(F.col("rnk").cast("string"), 10, 2))
-            .cast("int")
-            .alias("rank_bits")
-        )
+        .groupBy(octave("rnk").alias("rank_bits"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.min("rnk").cast("long").alias("min_rank"),
@@ -1885,8 +1883,7 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
         WHERE doc_id IS NOT NULL),
     doc_oct AS (
-        SELECT CASE WHEN doc_id = 0 THEN 0
-                    ELSE length(bin(doc_id)) END AS j,
+        SELECT {sql_octave('doc_id')} AS j,
                COUNT(*) AS n_docs_oct,
                SUM(len(t)) AS n_tokens_oct
         FROM docs GROUP BY 1),
@@ -1895,8 +1892,7 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, unnest(t) AS tok FROM docs)
         GROUP BY tok),
     vocab_oct AS (
-        SELECT CASE WHEN fd = 0 THEN 0
-                    ELSE length(bin(fd)) END AS j,
+        SELECT {sql_octave('fd')} AS j,
                COUNT(*) AS n_new_types
         FROM tok_first GROUP BY 1),
     merged AS (
@@ -1948,14 +1944,7 @@ def text_heaps_law_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isNotNull()
     )
 
-    def octave(col):
-        return (
-            F.when(col == 0, F.lit(0))
-            .otherwise(F.length(F.conv(col.cast("string"), 10, 2)))
-            .cast("int")
-        )
-
-    doc_oct = docs.groupBy(octave(F.col("doc_id")).alias("j")).agg(
+    doc_oct = docs.groupBy(octave("doc_id").alias("j")).agg(
         F.count(F.lit(1)).alias("n_docs_oct"),
         F.sum(F.size("t")).alias("n_tokens_oct"),
     )
@@ -1964,7 +1953,7 @@ def text_heaps_law_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.min("doc_id").alias("fd"))
     )
-    vocab_oct = tok_first.groupBy(octave(F.col("fd")).alias("j")).agg(
+    vocab_oct = tok_first.groupBy(octave("fd").alias("j")).agg(
         F.count(F.lit(1)).alias("n_new_types")
     )
     merged = doc_oct.join(vocab_oct, "j", "left").select(

@@ -30,8 +30,11 @@ from jorvik_spark.tables import load_table
 from jorvik_spark.queries.registry import (
     dsum,
     guarded_global_window,
+    octave,
     query,
     sql_dsum,
+    sql_octave,
+    sql_units,
     units,
 )
 
@@ -449,9 +452,9 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_moving_avg",
-    oracle="""
+    oracle=f"""
     SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-           CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) OVER w AS DOUBLE)
+           CAST(SUM({sql_units('value')}) OVER w AS DOUBLE)
                / 1000000.0 / COUNT(value) OVER w AS avg_1h
     FROM events WHERE ts IS NOT NULL
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
@@ -473,7 +476,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_micros("ts"))
         .rangeBetween(-3_600_000_000, 0)
     )
-    qsum = F.sum(F.floor(F.col("value") * 1_000_000 + F.lit(0.5))).over(w)
+    qsum = F.sum(units("value")).over(w)
     cnt = F.count("value").over(w)
     return ev.select(
         "event_id",
@@ -578,10 +581,10 @@ def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_anomaly_zscore",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND event_type = 'purchase'),
@@ -653,8 +656,7 @@ def window_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS duration_s,
                COUNT(*) AS n_events
         FROM labeled GROUP BY user_id, session_seq)
-    SELECT CAST(CASE WHEN duration_s = 0 THEN 0
-                     ELSE length(bin(duration_s)) END AS INTEGER)
+    SELECT {sql_octave('duration_s')}
                AS duration_bits,
            CAST(COUNT(*) AS BIGINT) AS n_sessions,
            CAST(MIN(duration_s) AS BIGINT) AS min_duration_s,
@@ -689,11 +691,7 @@ def window_session_duration_histogram(
         .alias("duration_s"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    bits = (
-        F.when(F.col("duration_s") == 0, F.lit(0))
-        .otherwise(F.length(F.conv(F.col("duration_s").cast("string"), 10, 2)))
-        .cast("int")
-    )
+    bits = octave("duration_s")
     return (
         sessions.select(bits.alias("duration_bits"), "duration_s", "n_events")
         .groupBy("duration_bits")
@@ -1118,13 +1116,13 @@ def window_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_time_weighted_avg",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
         FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
     d AS (
         SELECT user_id,
-               CAST(floor(value * 1000000 + 0.5) AS HUGEINT) AS vu,
+               CAST({sql_units('value')} AS HUGEINT) AS vu,
                epoch_us(LEAD(ts) OVER (PARTITION BY user_id
                                        ORDER BY ts, event_id))
                    - epoch_us(ts) AS dur_us
@@ -1165,9 +1163,7 @@ def window_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
     dur = F.lead(us).over(w) - us
-    vu = F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast(
-        "decimal(38,0)"
-    )
+    vu = units("value").cast("decimal(38,0)")
     return (
         e.select("user_id", vu.alias("vu"), dur.alias("dur_us"))
         # dur > 0, not just non-null: a zero-length interval carries zero
@@ -1335,10 +1331,10 @@ def window_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_anomaly_mad",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND event_type = 'purchase'),
@@ -1403,9 +1399,7 @@ def window_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             "ts",
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     w = (
@@ -1585,7 +1579,7 @@ _OHLC_BUCKET_US = 3_600_000_000
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND event_type = 'purchase'),
@@ -1680,7 +1674,7 @@ _CUSUM_H_U = 50_000_000
     oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND event_type = 'purchase'),
@@ -1743,9 +1737,7 @@ def window_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             "ts",
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     mu = (
@@ -1885,10 +1877,10 @@ def window_peak_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_resample_interpolate",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
         SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-               SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS vu,
+               SUM({sql_units('value')}) AS vu,
                COUNT(*) AS n
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL AND user_id < 40
@@ -1953,9 +1945,7 @@ def window_resample_interpolate(
     hourly = ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
-        ).alias("vu"),
+        F.sum(units("value")).alias("vu"),
         F.count(F.lit(1)).alias("n"),
     )
     grid = (
@@ -2095,7 +2085,7 @@ def flatline_runs(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND user_id IS NOT NULL
@@ -2138,11 +2128,11 @@ def window_flatline_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_value_run_census",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_type, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND user_id IS NOT NULL AND event_type IS NOT NULL),
@@ -2210,7 +2200,7 @@ def window_value_run_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_gap_census",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t
@@ -2223,8 +2213,7 @@ def window_value_run_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                // 1000000 AS gap_s
         FROM ev),
     g AS (SELECT * FROM gaps WHERE gap_s IS NOT NULL)
-    SELECT CAST(CASE WHEN gap_s = 0 THEN 0
-                     ELSE length(bin(gap_s)) END AS INTEGER) AS gap_bits,
+    SELECT {sql_octave('gap_s')} AS gap_bits,
            CAST(COUNT(*) AS BIGINT) AS n_gaps,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
            CAST(MAX(gap_s) AS BIGINT) AS max_gap_s
@@ -2262,11 +2251,7 @@ def window_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prev").isNotNull())
         .withColumn("gap_s", F.expr("(t - prev) div 1000000"))
     )
-    bits = (
-        F.when(F.col("gap_s") == 0, F.lit(0))
-        .otherwise(F.length(F.conv(F.col("gap_s").cast("string"), 10, 2)))
-        .cast("int")
-    )
+    bits = octave("gap_s")
     return (
         gaps.groupBy(bits.alias("gap_bits"))
         .agg(
@@ -2304,7 +2289,7 @@ _QUANT_BAND = 10
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(CAST(floor(value * 1000000 + 0.5) AS BIGINT)
+               CAST({sql_units('value')}
                     AS DOUBLE) AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
@@ -2384,7 +2369,7 @@ def ewma_smooth(ev: DataFrame, key_col: str = "user_id") -> DataFrame:
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND user_id IS NOT NULL AND event_type = 'purchase'),
@@ -2433,9 +2418,7 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             F.unix_micros("ts").alias("t"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     w = (
@@ -2462,11 +2445,11 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_max_drawdown",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND user_id IS NOT NULL AND event_type = 'purchase'),
@@ -2508,9 +2491,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             F.unix_micros("ts").alias("t"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     w = (
@@ -2603,11 +2584,11 @@ def window_flatline_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_autocorr_census",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE user_id IS NOT NULL AND ts IS NOT NULL
           AND value IS NOT NULL AND event_type = 'purchase'),
@@ -2833,12 +2814,12 @@ def window_diurnal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_seasonal_residual_census",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT event_type,
                CAST((epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24
                     AS INTEGER) AS hod,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND event_type IS NOT NULL
           AND value IS NOT NULL),
@@ -2912,9 +2893,7 @@ def window_seasonal_residual_census(
                 "CAST((unix_micros(ts) div CAST(3600000000 AS BIGINT)) % 24"
                 " AS INT)"
             ).alias("hod"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     vd = F.col("vu").cast("decimal(19,0)")
@@ -3065,11 +3044,11 @@ def window_burstiness_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_pettitt_changepoint",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
           AND event_type = 'purchase'),
@@ -3141,9 +3120,7 @@ def window_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             F.unix_micros("ts").alias("t"),
-            F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("vu"),
+            units("value").alias("vu"),
         )
     )
     w_asc = Window.partitionBy("user_id").orderBy(F.col("vu").asc())
@@ -3214,7 +3191,7 @@ _HOLT_FRAME = 15  # preceding rows in the fold frame
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(CAST(floor(value * 1000000 + 0.5) AS BIGINT)
+               CAST({sql_units('value')}
                     AS DOUBLE) AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
@@ -3336,11 +3313,11 @@ _TAU_MAX_N = 512
 
 @query(
     "window_kendall_tau_trend",
-    oracle="""
+    oracle=f"""
     WITH p0 AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND user_id IS NOT NULL
           AND value IS NOT NULL AND event_type = 'purchase'),
@@ -3409,7 +3386,7 @@ def window_kendall_tau_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("t"),
-        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("vu"),
+        units("value").alias("vu"),
     )
     # Bounded evaluation window (round 15, from the 10x stress run): tau
     # is ALL-PAIRS per user — quadratic in the purchase count — so a bot
@@ -3478,7 +3455,7 @@ _BREAKOUT_LOOKBACK = 8
     WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-               CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vu
+               {sql_units('value')} AS vu
         FROM events
         WHERE ts IS NOT NULL AND value IS NOT NULL
           AND user_id IS NOT NULL),

@@ -60,6 +60,9 @@ def get_session(app_name: str = "jorvik_spark", master: str | None = None) -> Sp
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
+        # Spark draws stage progress bars on stderr even without the UI;
+        # a SparkContext conf, so it only takes effect here.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in ENGINE_CONFS.items():

@@ -1074,6 +1074,8 @@ def suggest_watermark(
     """
     from pyspark.sql import Window
 
+    from jorvik_spark.queries.registry import octave
+
     ev = (
         df.filter(F.col(ts).isNotNull())
         .select(
@@ -1090,13 +1092,7 @@ def suggest_watermark(
     late = ev.withColumn("mx", F.max("t").over(w)).withColumn(
         "late_s", F.expr("CAST((mx - t) div 1000000 AS BIGINT)")
     )
-    bits = (
-        F.when(F.col("late_s") == 0, F.lit(0))
-        .otherwise(
-            F.length(F.conv(F.col("late_s").cast("string"), 10, 2))
-        )
-        .cast("int")
-    )
+    bits = octave("late_s")
     hist = sorted(
         (
             (r["b"], r["n"])

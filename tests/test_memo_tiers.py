@@ -4,10 +4,9 @@ the localCheckpoint plan-truncation; past it, the spill-capable persist
 tier (MEMORY_AND_DISK_DESER) — and the two tiers are result-identical,
 including the exchange-free self-join property downstream."""
 
-import os
-
 import pytest
 
+import jorvik_spark.queries.registry as R
 from jorvik_spark.queries.registry import (
     clear_memos,
     corpus_memo_cut_lineage,
@@ -37,10 +36,10 @@ def test_gate_reads_source_bytes(spark):
     assert corpus_memo_cut_lineage(spark, SF_DIR, "documents") is True
 
 
-def test_env_budget_flips_the_gate(spark, monkeypatch):
-    monkeypatch.setenv("JORVIK_MEMO_CKPT_MAX_SRC_BYTES", "0")
+def test_budget_flips_the_gate(spark, monkeypatch):
+    monkeypatch.setattr(R, "_CKPT_MAX_SRC_BYTES", 0)
     assert corpus_memo_cut_lineage(spark, SF_DIR, "documents") is False
-    monkeypatch.setenv("JORVIK_MEMO_CKPT_MAX_SRC_BYTES", str(1 << 60))
+    monkeypatch.setattr(R, "_CKPT_MAX_SRC_BYTES", 1 << 60)
     assert corpus_memo_cut_lineage(spark, SF_DIR, "documents") is True
 
 
@@ -52,7 +51,7 @@ def test_persist_tier_spills_and_matches_checkpoint_tier(spark, monkeypatch):
 
     # forced big-corpus tier: persisted with a DISK component (spillable)
     clear_memos()
-    monkeypatch.setenv("JORVIK_MEMO_CKPT_MAX_SRC_BYTES", "0")
+    monkeypatch.setattr(R, "_CKPT_MAX_SRC_BYTES", 0)
     big = _leaf(spark)
     lvl = big.storageLevel
     assert lvl.useMemory and lvl.useDisk and lvl.deserialized
@@ -70,7 +69,7 @@ def test_persist_tier_keeps_pair_join_results(spark, monkeypatch):
         map(tuple, QUERIES["dedup_containment_ngram"](spark, SF_DIR).collect())
     )
     clear_memos()
-    monkeypatch.setenv("JORVIK_MEMO_CKPT_MAX_SRC_BYTES", "0")
+    monkeypatch.setattr(R, "_CKPT_MAX_SRC_BYTES", 0)
     forced = sorted(
         map(tuple, QUERIES["dedup_containment_ngram"](spark, SF_DIR).collect())
     )

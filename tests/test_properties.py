@@ -584,17 +584,37 @@ def test_dsum_exceeds_int64_unit_ceiling_and_matches_oracle(spark):
 
 def test_template_spark_result_types(spark):
     """The Spark rendering of the template keeps the helpers' types:
-    DOUBLE for dsum/davg and BIGINT for hash_bucket. Spark SQL reads an
-    unsuffixed decimal literal as DECIMAL, so a template literal written
-    without its ``D`` suffix would silently turn every money aggregate
-    DECIMAL; the second half checks that this test would see it."""
+    DOUBLE for dsum/davg, BIGINT for hash_bucket and INT for octave,
+    whose two renderings agree exactly at every octave edge. Spark SQL
+    reads an unsuffixed decimal literal as DECIMAL, so a template literal
+    written without its ``D`` suffix would silently turn every money
+    aggregate DECIMAL; the last part checks that this test would see it."""
+    import duckdb
+
     from jorvik_spark.queries.registry import (
         _SPARK,
         _dsum,
         davg,
         dsum,
         hash_bucket,
+        octave,
+        sql_octave,
     )
+
+    edges = sorted(
+        {0, 1, 1 << 62} | {(1 << k) + d for k in range(1, 63) for d in (-1, 0)}
+    )
+    ints = spark.createDataFrame([(v,) for v in edges], "v bigint")
+    octaves = ints.select("v", octave("v").alias("o")).orderBy("v")
+    assert octaves.dtypes[1] == ("o", "int")
+    got = [tuple(r) for r in octaves.collect()]
+    want = duckdb.sql(
+        f"SELECT v, {sql_octave('v')} AS o FROM (SELECT unnest(?::BIGINT[]) AS v)"
+        " ORDER BY v",
+        params=[edges],
+    ).fetchall()
+    assert got == want
+    assert got == [(v, v.bit_length()) for v in edges]
 
     df = spark.createDataFrame([(1.25, 7)], "x double, k bigint")
     aggs = df.agg(dsum("x * 2").alias("s"), davg("x").alias("a"))

@@ -16,10 +16,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import jorvik_spark.queries.similarity as S
 from jorvik_spark.queries.similarity import (
     CellImbalanceError,
     _guard_cell_sizes,
-    _max_ivf_cell,
     simsearch_knn_graph,
 )
 from jorvik_spark.tables import default_sf_dir
@@ -41,7 +41,7 @@ def test_guard_raises_iff_a_cell_exceeds_bound(spark, sizes, bound):
     # pytest.MonkeyPatch context, not the fixture: hypothesis forbids
     # function-scoped fixtures inside @given.
     with pytest.MonkeyPatch.context() as mp:
-        mp.setenv("JORVIK_MAX_IVF_CELL", str(bound))
+        mp.setattr(S, "_MAX_IVF_CELL", bound)
         df = _cells_df(spark, sizes)
         if max(sizes) > bound:
             with pytest.raises(CellImbalanceError):
@@ -50,19 +50,12 @@ def test_guard_raises_iff_a_cell_exceeds_bound(spark, sizes, bound):
             _guard_cell_sizes(df)  # must not raise
 
 
-def test_guard_disabled_with_zero_bound(spark, monkeypatch):
-    monkeypatch.setenv("JORVIK_MAX_IVF_CELL", "0")
-    _guard_cell_sizes(_cells_df(spark, [1000]))  # must not raise
-    monkeypatch.delenv("JORVIK_MAX_IVF_CELL")
-    assert _max_ivf_cell() == 30_000
-
-
 def test_knn_graph_build_trips_guard_on_hot_cell(spark, tmp_path, monkeypatch):
     """Integration: the guard fires through the REAL _cell_pairs build
     (fresh sf_dir so the session memo can't mask it). sf0.001 has 2k
     vectors over 16 cells, so a bound of 5 must trip."""
     shutil.copy(f"{SF_DIR}/embeddings.parquet", tmp_path / "embeddings.parquet")
-    monkeypatch.setenv("JORVIK_MAX_IVF_CELL", "5")
+    monkeypatch.setattr(S, "_MAX_IVF_CELL", 5)
     with pytest.raises(CellImbalanceError, match="Re-train with more centroids"):
         simsearch_knn_graph(spark, str(tmp_path)).count()
 

@@ -133,28 +133,14 @@ def test_global_window_guard_trips_on_oversized_relation(
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
+    import jorvik_spark.queries.registry as R
     from jorvik_spark.queries import QUERIES
 
-    monkeypatch.setenv("JORVIK_MAX_GLOBAL_WINDOW_ROWS", str(bound))
+    monkeypatch.setattr(R, "_GLOBAL_WINDOW_MAX_ROWS", bound)
     with pytest.raises(
         (Py4JJavaError, PySparkException), match="unpartitioned window"
     ):
         QUERIES[name](spark, SF_DIR).collect()
-
-
-def test_global_window_guard_passes_and_disables(spark, monkeypatch):
-    """Under the default bound the guarded value is unchanged, and
-    JORVIK_MAX_GLOBAL_WINDOW_ROWS=0 disables the guard entirely."""
-    from jorvik_spark.queries import QUERIES
-
-    want = sorted(
-        tuple(r) for r in QUERIES["window_ntile"](spark, SF_DIR).collect()
-    )
-    monkeypatch.setenv("JORVIK_MAX_GLOBAL_WINDOW_ROWS", "0")
-    got = sorted(
-        tuple(r) for r in QUERIES["window_ntile"](spark, SF_DIR).collect()
-    )
-    assert got == want and len(got) > 0
 
 
 def test_global_window_guard_shares_the_window_exec(spark):
@@ -220,8 +206,8 @@ def test_triangle_degree_broadcast_is_size_gated(spark, monkeypatch):
     # pin this test to the WEDGE-JOIN plan: the r17 broadcast-adjacency
     # fast path (its own gate + test below) would otherwise change the
     # shapes asserted here
-    monkeypatch.setenv("JORVIK_TRI_ADJ_MAX_NODES", "0")
-    monkeypatch.setenv("JORVIK_DEGREE_BCAST_MAX_ROWS", "10000000")
+    monkeypatch.setattr(G, "_tri_adj_bcast_max_nodes", lambda s: 0)
+    monkeypatch.setattr(G, "_degree_bcast_budget_rows", lambda s: 10_000_000)
     hinted = tree()
     # r12 ADVICE hardening: the pass-through memo_df means each phase
     # must BUILD its own degree-join shape — a lineage-cut LogicalRDD
@@ -232,7 +218,7 @@ def test_triangle_degree_broadcast_is_size_gated(spark, monkeypatch):
     assert "SortMergeJoin" not in hinted  # whole hinted plan broadcasts
     want = G.graph_triangle_count(spark, SF_DIR).collect()
 
-    monkeypatch.setenv("JORVIK_DEGREE_BCAST_MAX_ROWS", "1")
+    monkeypatch.setattr(G, "_degree_bcast_budget_rows", lambda s: 1)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -268,20 +254,20 @@ def test_triangle_intersect_fast_path_matches_wedge_join(spark, monkeypatch):
             G.graph_triangle_count(spark, SF_DIR).explain("formatted")
         return buf.getvalue()
 
-    monkeypatch.setenv("JORVIK_TRI_ADJ_MAX_NODES", "10000000")
+    monkeypatch.setattr(G, "_tri_adj_bcast_max_nodes", lambda s: 32768)
     fast_plan = tree()
     assert "bit_count" in fast_plan
     fast = G.graph_triangle_count(spark, SF_DIR).collect()
 
-    monkeypatch.setenv("JORVIK_TRI_ADJ_MAX_NODES", "0")
+    monkeypatch.setattr(G, "_tri_adj_bcast_max_nodes", lambda s: 0)
     slow_plan = tree()
     assert "bit_count" not in slow_plan
     slow = G.graph_triangle_count(spark, SF_DIR).collect()
 
     assert fast == slow and len(fast) == 1
 
-    # default budget (no env): metadata-derived isqrt(bytes/8) — sane
-    monkeypatch.delenv("JORVIK_TRI_ADJ_MAX_NODES", raising=False)
+    # default budget: metadata-derived isqrt(bytes/8) — sane
+    monkeypatch.undo()
     assert G._tri_adj_bcast_max_nodes(spark) > 0
 
 
@@ -289,22 +275,27 @@ def test_triangle_bitmap_rank_guard(spark, monkeypatch):
     """r18 (r17 ADVICE): the packed-bitmap fast path sizes nw from the
     supplier-count UPPER bound, but ranks come from the actual co-supply
     node set — an FK violation must raise loudly instead of silently
-    dropping bits; and the test-only env override is clamped to the
-    node count whose worst-case bitmap saturates Spark's 8 GiB
-    broadcast hard cap."""
+    dropping bits; and the node budget is clamped to the node count
+    whose worst-case bitmap saturates Spark's 8 GiB broadcast hard
+    cap."""
     import contextlib
     import io
 
     import jorvik_spark.queries.graphs as G
 
-    # clamp: the env can never push the gate past isqrt(8 GiB / 8)
-    monkeypatch.setenv("JORVIK_TRI_ADJ_MAX_NODES", "10000000")
-    assert G._tri_adj_bcast_max_nodes(spark) == 32768
-    monkeypatch.setenv("JORVIK_TRI_ADJ_MAX_NODES", "0")
-    assert G._tri_adj_bcast_max_nodes(spark) == 0
+    # clamp: no broadcast threshold can push the gate past
+    # isqrt(8 GiB / 8); a disabled threshold closes it
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024g")
+        assert G._tri_adj_bcast_max_nodes(spark) == 32768
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert G._tri_adj_bcast_max_nodes(spark) == 0
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
     # wiring: the guard expression is in the fast-path plan
-    monkeypatch.setenv("JORVIK_TRI_ADJ_MAX_NODES", "10000000")
+    monkeypatch.setattr(G, "_tri_adj_bcast_max_nodes", lambda s: 32768)
     monkeypatch.setattr(G, "memo_df", lambda key, s, build, **kw: build())
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -329,10 +320,9 @@ def test_triangle_bitmap_rank_guard(spark, monkeypatch):
         guarded.collect()
 
 
-def test_degree_bcast_budget_parses_conf_sizes(spark, monkeypatch):
+def test_degree_bcast_budget_parses_conf_sizes(spark):
     from jorvik_spark.queries.graphs import _degree_bcast_budget_rows
 
-    monkeypatch.delenv("JORVIK_DEGREE_BCAST_MAX_ROWS", raising=False)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         for raw, rows in [

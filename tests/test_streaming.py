@@ -817,18 +817,17 @@ def test_interval_join_batch_accepts_all_spark_interval_forms(spark):
     )
 
 
-def test_stream_state_partitions_derivation(spark, monkeypatch):
+def test_stream_state_partitions_derivation(spark):
     """r18 (r17 VERDICT #4): drain state-store partitions are source-
     bytes derived — floored at min(8, cores) so the Python state worker
     stays parallel, then capped at the session's (cluster-sized) shuffle
-    partitions, env-overridable."""
+    partitions."""
     from jorvik_spark.queries.storage_ops import (
         _STREAM_STATE_TARGET_BYTES,
         _scoped_sql_conf,
         _stream_state_partitions,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = min(8, spark.sparkContext.defaultParallelism)
     # tiny source → the floor, never 1
@@ -845,10 +844,6 @@ def test_stream_state_partitions_derivation(spark, monkeypatch):
     # a session capped below the floor keeps its cap
     with _scoped_sql_conf(spark, "spark.sql.shuffle.partitions", 2):
         assert _stream_state_partitions(spark, 1) == 2
-    # env override wins
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
-    assert _stream_state_partitions(spark, 10**15) == 3
-
     # the scoped conf restores on exit, including on error
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     with _scoped_sql_conf(spark, "spark.sql.shuffle.partitions", 5):
